@@ -51,7 +51,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from psd_project_spark.config import MEASURES
+from psd_project_spark.config import DEFAULT_CONFIG, MEASURES
 
 #: Output measure column names, in reference emission order.
 MEASURE_COLS: tuple[str, ...] = tuple(MEASURES)
@@ -224,8 +224,8 @@ def windowed_measures(
     key_cols: Sequence[str],
     order_col: str,
     value_col: str,
-    window_size: int = 30,
-    digits: int | None = 9,
+    window_size: int = DEFAULT_CONFIG.window_size,
+    digits: int | None = DEFAULT_CONFIG.measure_round_digits,
     seq_col: str = "seq",
 ) -> DataFrame:
     """Sliding count-window measures (reference W1–W3 batch semantics).
@@ -234,7 +234,8 @@ def windowed_measures(
     row with ``seq >= window_size`` computes the six measures over the
     window of the last ``window_size`` values (inclusive). Mirrors the
     reference's ``countWindowAll(30, 1)`` + full-recompute aggregate
-    with state keyed for parallelism (SURVEY.md §2.3).
+    with state keyed for parallelism (SURVEY.md §2.3). ``digits=None``
+    leaves the measures unrounded.
     """
     keys = list(key_cols)
     worder = Window.partitionBy(*keys).orderBy(order_col)

@@ -1,15 +1,22 @@
-"""Vectorized batch count-window measures — the scale path for W1.
+"""The count-window measure kernel, and the vectorized batch path for W1.
+
+One numpy kernel computes the six measures for every count window, in
+batch and in the stream: :func:`sliding_window_measures` turns a key's
+seq-ordered values into sorted sliding windows and their six measure
+columns (every sum an ``np.cumsum`` — verified bit-identical to the
+ascending left fold the HOF path and the DuckDB oracle use). Both
+callers emit unrounded doubles and round JVM-side with
+:func:`round_measures`, the same ``F.round`` the HOF path applies, so
+batch, stream and oracle round alike.
 
 :func:`psd_project_spark.functions.measures.windowed_measures` (the
 HOF form) evaluates ~150 interpreted lambda element-ops per window —
 perfect as a semantics oracle and fine at test SF, but at millions of
-windows the interpreted fold dominates. This module computes the same
-thing through ``applyInPandas``: per key, a strided
-``sliding_window_view`` + one ``np.sort`` per window row, then
-:func:`psd_project_spark.streaming.count_window._measures_vectorized`
-(every sum an ``np.cumsum`` — verified bit-identical to the ascending
-left fold the HOF path and the DuckDB oracle use). Shares a single
+windows the interpreted fold dominates. :func:`windowed_measures_np`
+computes the same thing through ``applyInPandas`` and shares a single
 shuffle shape with the HOF path: hash-partition by key, sort by seq.
+The streaming operator (``streaming/count_window.py``) feeds the same
+kernel from its per-key ring.
 
 For keys whose history is far larger than one task should hold (the
 reference's single global series: 1M rows, SURVEY.md §6), pass
@@ -27,13 +34,92 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
+from numpy.lib.stride_tricks import sliding_window_view
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from psd_project_spark.config import MEASURES
-from psd_project_spark.streaming.count_window import _measures_vectorized
+from psd_project_spark.config import DEFAULT_CONFIG, MEASURES
+
+
+def compute_measures_sorted(xs: list[float]) -> dict[str, float]:
+    """The six measures over one sorted window, as a scalar left fold in
+    ascending order — the reference the vectorized kernel is tested
+    against (SURVEY.md §7 hard-part #2)."""
+    n = len(xs)
+    total = 0.0
+    for v in xs:  # ascending fold == aggregate(sort_array(...))
+        total += v
+    mean = total / float(n)
+    if n % 2 == 0:
+        median = (xs[n // 2 - 1] + xs[n // 2]) / 2
+    else:
+        median = xs[(n - 1) // 2]
+    q10 = xs[n // 10]  # 4th smallest for n=30 (normative, §2.8 #3)
+    k = max(n // 10, 1)
+    tail = 0.0
+    for v in xs[:k]:
+        tail += v
+    tail_mean = tail / float(k)
+    s1 = 0.0
+    for v in xs:
+        s1 += abs(v - mean)
+    sm1 = mean - s1 / (2.0 * n)
+    s2 = 0.0
+    for i, v in enumerate(xs, start=1):  # sorted Gini identity
+        s2 += float(i * 2 - (n + 1)) * v
+    sm2 = mean - s2 / float(n * n)
+    return dict(mean=mean, median=median, q10=q10, tail_mean=tail_mean, sm1=sm1, sm2=sm2)
+
+
+def _measures_vectorized(windows_sorted: np.ndarray) -> list[np.ndarray]:
+    """All six measures over rows of pre-sorted windows — vectorized.
+
+    Every sum is ``np.cumsum`` (verified exactly equal to a sequential
+    left-to-right fold for float64), so each row reproduces
+    :func:`compute_measures_sorted` bit-for-bit at numpy speed.
+    """
+    s = windows_sorted  # (rows, n) ascending
+    n = s.shape[1]
+    csum = np.cumsum(s, axis=1)
+    total = csum[:, -1]
+    mean = total / float(n)
+    if n % 2 == 0:
+        median = (s[:, n // 2 - 1] + s[:, n // 2]) / 2
+    else:
+        median = s[:, (n - 1) // 2]
+    q10 = s[:, n // 10]
+    k = max(n // 10, 1)
+    tail_mean = csum[:, k - 1] / float(k)
+    sm1 = mean - np.cumsum(np.abs(s - mean[:, None]), axis=1)[:, -1] / (2.0 * n)
+    w = (2.0 * np.arange(1, n + 1) - (n + 1)).astype(np.float64)
+    sm2 = mean - np.cumsum(w[None, :] * s, axis=1)[:, -1] / float(n * n)
+    return [mean, median, q10, tail_mean, sm1, sm2]
+
+
+def sliding_window_measures(
+    values: np.ndarray, window_size: int, keep: np.ndarray | None = None
+) -> list[np.ndarray]:
+    """The six unrounded measure columns of every complete window over a
+    key's seq-ordered ``values``: row ``i`` is the window ending at
+    ``values[i + window_size - 1]``. ``keep`` (a boolean mask over those
+    rows) drops windows before they are sorted."""
+    windows = sliding_window_view(values, window_size)
+    if keep is not None:
+        windows = windows[keep]
+    return _measures_vectorized(np.sort(windows, axis=1))
+
+
+def round_measures(df: DataFrame, digits: int | None) -> DataFrame:
+    """Round the six measure columns JVM-side; ``digits=None`` keeps them
+    unrounded. ``F.round`` on a double is HALF_UP on its shortest
+    decimal form (Scala ``BigDecimal(d)``), the rounding of the HOF path
+    and of the DuckDB oracles."""
+    if digits is None:
+        return df
+    return df.withColumns({m: F.round(F.col(m), digits) for m in MEASURES})
 
 
 def windowed_measures_np(
@@ -41,15 +127,16 @@ def windowed_measures_np(
     key_cols: Sequence[str],
     order_col: str,
     value_col: str,
-    window_size: int = 30,
-    digits: int | None = 9,
+    window_size: int = DEFAULT_CONFIG.window_size,
+    digits: int | None = DEFAULT_CONFIG.measure_round_digits,
     chunk_rows: int | None = None,
     seq_precomputed: bool = False,
 ) -> DataFrame:
     """Sliding count-window measures, numpy-vectorized.
 
     Output schema and values are identical to ``windowed_measures``:
-    ``key_cols + (seq, mean, median, q10, tail_mean, sm1, sm2)``.
+    ``key_cols + (seq, mean, median, q10, tail_mean, sm1, sm2)``;
+    ``digits=None`` leaves the measures unrounded.
 
     ``seq_precomputed=True`` declares that ``order_col`` already *is*
     a contiguous 1-based per-key arrival sequence — skipping the
@@ -105,32 +192,20 @@ def windowed_measures_np(
     )
 
     def _one_key(g: "pd.DataFrame"):
-        import numpy as np
-        from numpy.lib.stride_tricks import sliding_window_view
-
         g = g.sort_values("seq", kind="mergesort")
         v = g["_v"].to_numpy(np.float64)
         if len(v) < window_size:
             return None
-        seq = g["seq"].to_numpy(np.int64)
-        ends = seq[window_size - 1 :]
+        ends = g["seq"].to_numpy(np.int64)[window_size - 1 :]
+        own = None
         if chunk_rows:
-            chunk = int(g["_chunk"].iloc[0])
-            own = (ends - 1) // chunk_rows == chunk
-        else:
-            own = np.ones(len(ends), dtype=bool)
-        if not own.any():
-            return None
-        windows = sliding_window_view(v, window_size)[own]
-        s = np.sort(windows, axis=1)
-        # digits=None: rounding happens JVM-side below. The kernel's
-        # per-element decimal rounding loop costs more than all the
-        # numpy math combined (~600k interpreted calls at sf0.1).
-        cols = _measures_vectorized(s, None)
+            own = (ends - 1) // chunk_rows == int(g["_chunk"].iloc[0])
+            if not own.any():
+                return None
+            ends = ends[own]
         out = {k: g[k].iloc[0] for k in keys}
-        out["seq"] = ends[own]
-        for name, c in zip(MEASURES, cols):
-            out[name] = c
+        out["seq"] = ends
+        out.update(zip(MEASURES, sliding_window_measures(v, window_size, own)))
         return pd.DataFrame(out)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -150,16 +225,4 @@ def windowed_measures_np(
         return pd.concat(parts, ignore_index=True)
 
     raw = grouped.groupBy(*group_cols).applyInPandas(kernel, schema)
-    if digits is None:
-        return raw
-    # F.round on DoubleType is HALF_UP on the SHORTEST-DECIMAL
-    # representation of the double (Scala BigDecimal(d) ==
-    # Double.toString), exactly matching the HOF path's F.round by
-    # construction. NOTE: _round_half_up (count_window.py) quantizes
-    # Decimal(x) — the exact binary value — which can differ from the
-    # shortest-repr convention on half-way boundary doubles; the
-    # numpy-vs-HOF differential test pins agreement on real data, but
-    # the conventions are not theoretically identical.
-    return raw.select(
-        *keys, "seq", *[F.round(F.col(m), digits).alias(m) for m in MEASURES]
-    )
+    return round_measures(raw, digits)

@@ -8,26 +8,29 @@ emitted per arrival once the window is warm
 
 Structured Streaming has no count-based windows (its DSL is time
 based), so this is a custom stateful operator on
-``applyInPandasWithState``:
+``applyInPandasWithState`` — a thin stateful wrapper around the batch
+kernel :func:`psd_project_spark.functions.measures_np.sliding_window_measures`:
 
 - **Keyed state** — the reference pins parallelism to 1
   (StreamingJob.java:431) to get global arrival order. We key state by
   the series/portfolio id instead, so state scales horizontally across
-  executors; per-key arrival order is restored by sorting each
-  micro-batch on the sequence column inside the handler (the driver's
-  test stream arrives as one micro-batch; multi-batch ordering at
-  production scale comes from an upstream per-key sequencer, e.g.
+  executors; per-key arrival order is restored by concatenating every
+  chunk of a key's micro-batch and sorting it once on the sequence
+  column inside the handler. Order *across* micro-batches is the
+  source's to keep (the registry's file streams arrive as one
+  micro-batch; at production scale an upstream per-key sequencer, e.g.
   Kafka partition offsets keyed the same way).
 - **State** = the ring of the last ``window_size - 1`` values + the
   running arrival count — the direct analog of ``State.samples`` /
   ``State.count`` (StreamingJob.java:84-87), serialized as one
   ``array<double>`` + ``long`` per key (tiny: 30 doubles).
-- **Measures** are recomputed per window over the sorted ring —
-  normative semantics per SURVEY.md §2.8 (the reference's incremental
-  slide path is buggy dead code). Summation runs ascending (sorted
-  order) and rounding is decimal HALF_UP, matching the batch path's
-  ``sort_array`` + left-fold + ``F.round`` bit-for-bit, so the
-  batch/streaming differential test (§5.2-3) can assert equality.
+- **Measures** are recomputed per window over the sorted window by the
+  same numpy kernel the batch path runs — normative semantics per
+  SURVEY.md §2.8 (the reference's incremental slide path is buggy dead
+  code). The handler emits unrounded doubles; the operator then rounds
+  with the batch path's ``F.round`` projection, so a stream's output
+  equals the batch ``windowed_measures`` result on the same rows
+  bit-for-bit (the batch/streaming differential test, §5.2-3).
 
 At 100 TB-scale streams: state size is O(keys × window), independent
 of throughput; each micro-batch shuffles once on the key (the same
@@ -40,12 +43,13 @@ reference's one-portfolio limit, but without capping the cluster.
 
 from __future__ import annotations
 
-from decimal import ROUND_HALF_UP, Decimal
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -55,129 +59,20 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from psd_project_spark.config import DEFAULT_CONFIG
+from psd_project_spark.config import DEFAULT_CONFIG, MEASURES
+from psd_project_spark.functions.measures_np import (
+    round_measures,
+    sliding_window_measures,
+)
 
-MEASURE_FIELDS = ("mean", "median", "q10", "tail_mean", "sm1", "sm2")
-
-
-def _round_half_up(x: float, digits: int) -> float:
-    """Match Spark's ``F.round`` exactly: Java rounds the double's full
-    binary expansion HALF_UP — ``Decimal(x)`` (not ``repr``) gives the
-    same exact expansion in Python."""
-    return float(Decimal(x).quantize(Decimal(1).scaleb(-digits), ROUND_HALF_UP))
+MEASURE_FIELDS = MEASURES
 
 
-def compute_measures_sorted(xs: list[float], digits: int | None) -> dict[str, float]:
-    """The six measures over one sorted window, summing in ascending
-    order — the same fold the batch path's JVM HOFs perform, so both
-    paths produce identical doubles (SURVEY.md §7 hard-part #2)."""
-    n = len(xs)
-    total = 0.0
-    for v in xs:  # ascending fold == aggregate(sort_array(...))
-        total += v
-    mean = total / float(n)
-    if n % 2 == 0:
-        median = (xs[n // 2 - 1] + xs[n // 2]) / 2
-    else:
-        median = xs[(n - 1) // 2]
-    q10 = xs[n // 10]  # 4th smallest for n=30 (normative, §2.8 #3)
-    k = max(n // 10, 1)
-    tail = 0.0
-    for v in xs[:k]:
-        tail += v
-    tail_mean = tail / float(k)
-    s1 = 0.0
-    for v in xs:
-        s1 += abs(v - mean)
-    sm1 = mean - s1 / (2.0 * n)
-    s2 = 0.0
-    for i, v in enumerate(xs, start=1):  # sorted Gini identity
-        s2 += float(i * 2 - (n + 1)) * v
-    sm2 = mean - s2 / float(n * n)
-    out = dict(mean=mean, median=median, q10=q10, tail_mean=tail_mean, sm1=sm1, sm2=sm2)
-    if digits is not None:
-        out = {k2: _round_half_up(v, digits) for k2, v in out.items()}
-    return out
+def count_window_state_handler(window_size: int, out_cols: list[str]):
+    """Build the applyInPandasWithState handler (one key = one series).
 
-
-def _measures_vectorized(windows_sorted, digits: int | None):
-    """All six measures over rows of pre-sorted windows — vectorized.
-
-    Every sum is ``np.cumsum`` (verified exactly equal to a sequential
-    left-to-right fold for float64), so each row reproduces
-    :func:`compute_measures_sorted` bit-for-bit at numpy speed.
-    """
-    import numpy as np
-
-    s = windows_sorted  # (rows, n) ascending
-    n = s.shape[1]
-    csum = np.cumsum(s, axis=1)
-    total = csum[:, -1]
-    mean = total / float(n)
-    if n % 2 == 0:
-        median = (s[:, n // 2 - 1] + s[:, n // 2]) / 2
-    else:
-        median = s[:, (n - 1) // 2]
-    q10 = s[:, n // 10]
-    k = max(n // 10, 1)
-    tail_mean = csum[:, k - 1] / float(k)
-    sm1 = mean - np.cumsum(np.abs(s - mean[:, None]), axis=1)[:, -1] / (2.0 * n)
-    w = (2.0 * np.arange(1, n + 1) - (n + 1)).astype(np.float64)
-    sm2 = mean - np.cumsum(w[None, :] * s, axis=1)[:, -1] / float(n * n)
-    cols = [mean, median, q10, tail_mean, sm1, sm2]
-    if digits is not None:
-        cols = [
-            np.asarray([_round_half_up(float(v), digits) for v in c]) for c in cols
-        ]
-    return cols
-
-
-def _advance_ring(
-    buf: list[float],
-    seq: int,
-    pdf: pd.DataFrame,
-    key: tuple,
-    out_cols: list[str],
-    window_size: int,
-    digits: int | None,
-) -> tuple[list[float], int, pd.DataFrame | None]:
-    """Feed one micro-batch chunk through the ring for one key; returns
-    the new (buf, seq) and the emitted measure rows (or None). Shared
-    by both stateful-API backends so their semantics cannot drift."""
-    import numpy as np
-    from numpy.lib.stride_tricks import sliding_window_view
-
-    pdf = pdf.sort_values("_order")  # per-key arrival order
-    vals = pdf["_value"].to_numpy(dtype=np.float64)
-    if vals.size == 0:
-        return buf, seq, None
-    full = np.concatenate([np.asarray(buf, dtype=np.float64), vals])
-    new_seq = seq + vals.size
-    buf = full[-(window_size - 1):].tolist() if window_size > 1 else []
-    out = None
-    if new_seq >= window_size:
-        # one row per arrival whose window is complete
-        wins = sliding_window_view(full, window_size)
-        n_emit = new_seq - max(seq, window_size - 1)
-        wins = wins[-n_emit:]
-        seqs = np.arange(new_seq - n_emit + 1, new_seq + 1)
-        ms = _measures_vectorized(np.sort(wins, axis=1), digits)
-        out = pd.DataFrame(
-            {
-                **{c: [key[i]] * n_emit for i, c in enumerate(out_cols[: len(key)])},
-                out_cols[len(key)]: seqs,
-            }
-        )
-        for name, col in zip(MEASURE_FIELDS, ms):
-            out[name] = col
-        out = out[out_cols]
-    return buf, seq + vals.size, out
-
-
-def count_window_state_handler(
-    window_size: int, digits: int | None, out_cols: list[str]
-):
-    """Build the applyInPandasWithState handler (one key = one series)."""
+    ``out_cols`` names the output columns: the key columns, ``seq``,
+    then the six measures (unrounded)."""
 
     def handler(
         key: tuple,
@@ -185,16 +80,21 @@ def count_window_state_handler(
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
-            buf, seq = list(state.get[0]), int(state.get[1])
+            buf, seq = state.get[0], int(state.get[1])
         else:
             buf, seq = [], 0
-        for pdf in pdf_iter:
-            buf, seq, out = _advance_ring(
-                buf, seq, pdf, key, out_cols, window_size, digits
-            )
-            if out is not None:
-                yield out
-        state.update((buf, seq))
+        # per-key arrival order, over every chunk of the micro-batch
+        batch = pd.concat(pdf_iter, ignore_index=True).sort_values("_order", kind="stable")
+        vals = batch["_value"].to_numpy(np.float64)
+        full = np.concatenate([np.asarray(buf, dtype=np.float64), vals])
+        seq += vals.size
+        if full.size >= window_size:
+            # the ring holds fewer than window_size values, so every
+            # complete window of ring + batch ends at a new arrival
+            cols = sliding_window_measures(full, window_size)
+            seqs = np.arange(seq - cols[0].size + 1, seq + 1)
+            yield pd.DataFrame(dict(zip(out_cols, [*key, seqs, *cols])))
+        state.update((full[max(full.size - window_size + 1, 0):].tolist(), seq))
 
     return handler
 
@@ -204,23 +104,21 @@ def streaming_count_window_measures(
     key_cols: list[str],
     order_col: str,
     value_col: str,
-    window_size: int | None = None,
-    digits: int | None = None,
+    window_size: int = DEFAULT_CONFIG.window_size,
+    digits: int | None = DEFAULT_CONFIG.measure_round_digits,
 ) -> DataFrame:
     """Sliding count-window measures over a streaming DataFrame.
 
     Output schema: ``key_cols + (seq long, mean..sm2 double)`` — one
     row per arrival once ``window_size`` samples have been seen for the
     key; identical to the batch ``windowed_measures`` oracle.
+    ``digits=None`` leaves the measures unrounded.
     """
-    window_size = window_size or DEFAULT_CONFIG.window_size
-    digits = DEFAULT_CONFIG.measure_round_digits if digits is None else digits
-
     key_fields = [stream_df.schema[c] for c in key_cols]
     out_schema = StructType(
         key_fields
         + [StructField("seq", LongType())]
-        + [StructField(f, DoubleType()) for f in MEASURE_FIELDS]
+        + [StructField(f, DoubleType()) for f in MEASURES]
     )
     state_schema = StructType(
         [
@@ -228,104 +126,16 @@ def streaming_count_window_measures(
             StructField("seq", LongType()),
         ]
     )
-    from pyspark.sql import functions as F
-
     prepared = stream_df.select(
         *key_cols,
         F.col(order_col).cast("long").alias("_order"),
         F.col(value_col).cast("double").alias("_value"),
     )
-    return prepared.groupBy(*key_cols).applyInPandasWithState(
-        count_window_state_handler(
-            window_size, digits, [f.name for f in out_schema.fields]
-        ),
+    raw = prepared.groupBy(*key_cols).applyInPandasWithState(
+        count_window_state_handler(window_size, out_schema.fieldNames()),
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def streaming_count_window_measures_tws(
-    stream_df: DataFrame,
-    key_cols: list[str],
-    order_col: str,
-    value_col: str,
-    window_size: int | None = None,
-    digits: int | None = None,
-) -> DataFrame:
-    """The same count-window operator on ``transformWithStateInPandas``
-    (Spark 4's arbitrary-stateful-processing API — typed state vars,
-    RocksDB-only store, timers, TTL). Ring/seq live in one ValueState;
-    per-batch processing is the shared :func:`_advance_ring`, so this
-    backend is bit-identical to the ``applyInPandasWithState`` one (a
-    differential test asserts it). Kept alongside the classic backend
-    because TWS is where upstream investment is going (state schema
-    evolution, state data source); the classic one still wins on
-    setup latency for small local jobs."""
-    # TWS runs a Python "driver worker" speaking a protobuf protocol to
-    # the JVM state server; without protobuf that worker just crashes
-    # mid-stream with an opaque STREAM_FAILED. Gate up front instead.
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(TWS state-server protocol); it is not installed in this "
-            "environment. Use the applyInPandasWithState backend "
-            "(streaming_count_window_measures), which implements the "
-            "same operator semantics."
-        ) from exc
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    window_size = window_size or DEFAULT_CONFIG.window_size
-    digits = DEFAULT_CONFIG.measure_round_digits if digits is None else digits
-
-    key_fields = [stream_df.schema[c] for c in key_cols]
-    out_schema = StructType(
-        key_fields
-        + [StructField("seq", LongType())]
-        + [StructField(f, DoubleType()) for f in MEASURE_FIELDS]
-    )
-    state_schema = StructType(
-        [
-            StructField("buf", ArrayType(DoubleType())),
-            StructField("seq", LongType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    class CountWindowProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._ring = handle.getValueState("ring", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            got = self._ring.get()
-            buf, seq = (list(got[0]), int(got[1])) if got else ([], 0)
-            for pdf in rows:
-                buf, seq, out = _advance_ring(
-                    buf, seq, pdf, key, out_cols, window_size, digits
-                )
-                if out is not None:
-                    yield out
-            self._ring.update((buf, seq))
-
-        def close(self) -> None:
-            pass
-
-    prepared = stream_df.select(
-        *key_cols,
-        F.col(order_col).cast("long").alias("_order"),
-        F.col(value_col).cast("double").alias("_value"),
-    )
-    return prepared.groupBy(*key_cols).transformWithStateInPandas(
-        CountWindowProcessor(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="none",
-    )
+    return round_measures(raw, digits)

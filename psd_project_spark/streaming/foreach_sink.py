@@ -145,8 +145,9 @@ def staged_affected_buckets(
 ) -> list[int] | None:
     """The micro-batch's affected-bucket set read off its staged input
     files' ``_BUCKETS.json`` sidecars — or ``None`` when any input
-    file lacks one (or was staged under a different key/bucket-count),
-    which falls back to the kernel's distinct-collect path.
+    file lacks a readable one (missing, truncated, without ``buckets``,
+    or staged under a different key/bucket-count), which falls back to
+    the kernel's distinct-collect path.
 
     The batch's file list comes from the checkpoint's own
     file-stream source log (``<ckpt>/sources/0/<batch_id>`` — the
@@ -181,16 +182,18 @@ def staged_affected_buckets(
     for f in files:
         p = f[len("file:"):] if f.startswith("file:") else f
         side = os.path.join(os.path.dirname(p), _BUCKETS_SIDECAR)
-        if not os.path.exists(side):
+        try:
+            with open(side) as fh:
+                doc = json.load(fh)
+            if (
+                doc.get("bucket_by") != list(bucket_by)
+                or doc.get("n_buckets") != int(n_buckets)
+            ):
+                return None
+            buckets.update(int(b) for b in doc["buckets"])
+        except (OSError, ValueError, KeyError, TypeError, AttributeError):
+            # missing, truncated or partial sidecar
             return None
-        with open(side) as fh:
-            doc = json.load(fh)
-        if (
-            doc.get("bucket_by") != list(bucket_by)
-            or doc.get("n_buckets") != int(n_buckets)
-        ):
-            return None
-        buckets.update(int(b) for b in doc["buckets"])
     return sorted(buckets)
 
 

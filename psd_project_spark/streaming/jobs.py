@@ -183,47 +183,6 @@ def measures_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(out)
 
 
-def measures_window_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same pipeline on the Spark 4 ``transformWithStateInPandas``
-    backend (typed state vars; requires the RocksDB state store —
-    enabled around this run only). Shares the per-batch kernel with
-    the classic backend, and shares the DuckDB oracle — so the two
-    stateful APIs are proven interchangeable.
-
-    Registered only when ``protobuf`` is importable: the TWS
-    state-server protocol needs it, and this container doesn't ship it
-    (the driver worker crashes in ``init`` otherwise). On a real
-    cluster image the query self-registers and is oracle-checked like
-    every other."""
-    from psd_project_spark.streaming.count_window import (
-        streaming_count_window_measures_tws,
-    )
-
-    events = stream_events(spark, sf_dir)
-    out = streaming_count_window_measures_tws(
-        events,
-        key_cols=["user_id"],
-        order_col="event_id",
-        value_col="value",
-        window_size=DEFAULT_CONFIG.window_size,
-        digits=DEFAULT_CONFIG.measure_round_digits,
-    )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        return run_stream_to_memory(out)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 # --- alerts_stream -----------------------------------------------------------
 
 def alerts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -609,13 +568,3 @@ QUERIES = {
     "stream_stream_join": (stream_stream_join, STREAM_STREAM_JOIN_ORACLE),
     "stream_ingest_dedup": (stream_ingest_dedup, _stream_ingest_oracle()),
 }
-
-try:  # TWS state-server client needs protobuf; absent from this container
-    import google.protobuf  # noqa: F401
-
-    QUERIES["measures_window_stream_tws"] = (
-        measures_window_stream_tws,
-        MEASURES_WINDOW_ORACLE,
-    )
-except ImportError:
-    pass

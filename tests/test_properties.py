@@ -3,18 +3,16 @@
 Invariants over arbitrary windows:
 - ordering: tail_mean ≤ q10 ≤ median; sm1 ≤ mean; sm2 ≤ mean
 - both dispersion measures are location-equivariant: m(x + c) = m(x) + c
-- the batch array path and the streaming numpy path agree bit-for-bit
-  with the pure-Python reference fold.
+- the numpy kernel shared by the batch and streaming paths agrees
+  bit-for-bit with the pure-Python reference fold.
 """
 
 import math
 
 from hypothesis import given, settings, strategies as st
 
-from psd_project_spark.streaming.count_window import (
-    MEASURE_FIELDS,
-    compute_measures_sorted,
-)
+from psd_project_spark.config import MEASURES as MEASURE_FIELDS
+from psd_project_spark.functions.measures_np import compute_measures_sorted
 
 finite = st.floats(
     min_value=-1e6, max_value=1e6, allow_nan=False, allow_infinity=False
@@ -25,7 +23,7 @@ windows = st.lists(finite, min_size=2, max_size=60)
 @given(windows)
 @settings(max_examples=200, deadline=None)
 def test_measure_ordering_invariants(xs):
-    m = compute_measures_sorted(sorted(xs), digits=None)
+    m = compute_measures_sorted(sorted(xs))
     assert m["tail_mean"] <= m["q10"] + 1e-9 * max(1, abs(m["q10"]))
     assert m["q10"] <= m["median"] + 1e-9 * max(1, abs(m["median"]))
     assert m["sm1"] <= m["mean"] + 1e-9 * max(1, abs(m["mean"]))
@@ -35,8 +33,8 @@ def test_measure_ordering_invariants(xs):
 @given(windows, st.floats(min_value=-100, max_value=100, allow_nan=False))
 @settings(max_examples=100, deadline=None)
 def test_location_equivariance(xs, c):
-    base = compute_measures_sorted(sorted(xs), digits=None)
-    shifted = compute_measures_sorted(sorted(x + c for x in xs), digits=None)
+    base = compute_measures_sorted(sorted(xs))
+    shifted = compute_measures_sorted(sorted(x + c for x in xs))
     for f in MEASURE_FIELDS:
         # dispersion-adjusted measures shift with the data
         assert math.isclose(
@@ -47,14 +45,14 @@ def test_location_equivariance(xs, c):
 @given(windows)
 @settings(max_examples=100, deadline=None)
 def test_vectorized_matches_scalar(xs):
-    """The numpy streaming path == the scalar reference fold, exactly."""
+    """The shared numpy kernel == the scalar reference fold, exactly."""
     import numpy as np
 
-    from psd_project_spark.streaming.count_window import _measures_vectorized
+    from psd_project_spark.functions.measures_np import _measures_vectorized
 
     s = np.sort(np.asarray(xs, dtype=np.float64))
-    vec = _measures_vectorized(s[None, :], digits=None)
-    ref = compute_measures_sorted(sorted(xs), digits=None)
+    vec = _measures_vectorized(s[None, :])
+    ref = compute_measures_sorted(sorted(xs))
     for f, col in zip(MEASURE_FIELDS, vec):
         assert col[0] == ref[f] or (math.isnan(col[0]) and math.isnan(ref[f])), (
             f, col[0], ref[f],

@@ -271,6 +271,44 @@ def test_wrong_sidecar_set_fails_loudly(spark, tmp_path):
         )
 
 
+def _staged_batch(tmp_path, sidecar_text: str) -> str:
+    """A checkpoint whose batch 0 read one staged file, next to a
+    ``_BUCKETS.json`` holding ``sidecar_text``; returns the checkpoint."""
+    import json
+
+    split = tmp_path / "src" / "p0"
+    split.mkdir(parents=True)
+    (split / "_BUCKETS.json").write_text(sidecar_text)
+    log = tmp_path / "ck" / "sources" / "0"
+    log.mkdir(parents=True)
+    entry = {"path": f"file:{split}/part-0.parquet", "batchId": 0}
+    (log / "0").write_text("v1\n" + json.dumps(entry) + "\n")
+    return str(tmp_path / "ck")
+
+
+def test_sidecar_fast_path_reads_a_good_sidecar(tmp_path):
+    from psd_project_spark.streaming.foreach_sink import staged_affected_buckets
+
+    good = '{"bucket_by": ["user_id"], "n_buckets": 8, "buckets": [5, 2]}'
+    assert staged_affected_buckets(_staged_batch(tmp_path, good), 0, ["user_id"], 8) == [2, 5]
+
+
+@pytest.mark.parametrize(
+    "sidecar",
+    [
+        '{"bucket_by": ["user_id"], "n_buckets": 8, "buck',  # truncated
+        '{"bucket_by": ["user_id"], "n_buckets": 8}',  # no buckets
+    ],
+    ids=["truncated", "without_buckets"],
+)
+def test_bad_sidecar_falls_back_instead_of_raising(tmp_path, sidecar):
+    """ADVICE r15: a corrupt ``_BUCKETS.json`` must send the epoch down
+    the distinct-collect path (``None``), not kill the stream."""
+    from psd_project_spark.streaming.foreach_sink import staged_affected_buckets
+
+    assert staged_affected_buckets(_staged_batch(tmp_path, sidecar), 0, ["user_id"], 8) is None
+
+
 @pytest.mark.parametrize("n_views", [2, 3])
 def test_views_with_disagreement_matches_exceptall_form(spark, n_views):
     """Differential pin of the r14 one-pass bitmask aggregation

@@ -7,8 +7,6 @@ window oracle row-for-row, bit-for-bit.
 
 import os
 
-import pytest
-
 from tests.conftest import SF_DIR
 
 
@@ -28,6 +26,79 @@ def test_stream_matches_batch_windowed_measures(spark):
     assert len(batch) == len(stream) > 0
     for c in batch.columns:
         assert (batch[c].astype(str).values == stream[c].astype(str).values).all(), c
+
+
+def test_stream_rounds_like_batch_on_a_half_way_value(spark, tmp_path):
+    """0.1234567885 lies just below the half-way point as a binary
+    double but on it as its shortest decimal form. ``F.round`` (batch
+    path, DuckDB oracles) rounds the decimal form up to 0.123456789;
+    the stream must round the same way, not the binary value down."""
+    from psd_project_spark.functions.measures import windowed_measures
+    from psd_project_spark.streaming.count_window import (
+        streaming_count_window_measures,
+    )
+    from psd_project_spark.streaming.jobs import run_stream_to_memory
+
+    values = [-3.0, -2.0, -1.0, 0.1234567885] + [float(i) for i in range(1, 27)]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(7, i, v) for i, v in enumerate(reversed(values), start=1)],
+        "user_id long, event_id long, value double",
+    ).coalesce(1).write.parquet(src)
+
+    batch = windowed_measures(
+        spark.read.parquet(src), ["user_id"], "event_id", "value"
+    ).collect()
+    stream = run_stream_to_memory(
+        streaming_count_window_measures(
+            spark.readStream.schema(spark.read.parquet(src).schema).parquet(src),
+            key_cols=["user_id"],
+            order_col="event_id",
+            value_col="value",
+        )
+    ).collect()
+    assert [r.q10 for r in batch] == [0.123456789]
+    assert [r.q10 for r in stream] == [0.123456789]
+
+
+class _GroupState:
+    """The part of ``GroupState`` the count-window handler uses."""
+
+    def __init__(self):
+        self.get = None
+
+    @property
+    def exists(self):
+        return self.get is not None
+
+    def update(self, value):
+        self.get = value
+
+
+def test_handler_sorts_a_keys_whole_micro_batch():
+    """A key's rows can reach the handler as several Arrow chunks out of
+    sequence order (e.g. a backlog of several files in one micro-batch).
+    Rows 41-60 then rows 1-40 must give the windows of rows 1-60 in
+    order — the handler sorts the whole micro-batch, not each chunk."""
+    import numpy as np
+    import pandas as pd
+
+    from psd_project_spark.config import MEASURES
+    from psd_project_spark.streaming.count_window import count_window_state_handler
+
+    values = np.random.default_rng(3).standard_normal(60)
+
+    def rows(lo, hi):
+        order = np.arange(lo, hi + 1)
+        return pd.DataFrame({"user_id": 7, "_order": order, "_value": values[order - 1]})
+
+    def run(chunks):
+        handler = count_window_state_handler(30, ["user_id", "seq", *MEASURES])
+        return pd.concat(handler((7,), iter(chunks), _GroupState()), ignore_index=True)
+
+    got = run([rows(41, 60), rows(1, 40)])
+    pd.testing.assert_frame_equal(got, run([rows(1, 60)]))
+    assert got["seq"].tolist() == list(range(30, 61))
 
 
 def test_csv_source_drops_malformed(spark, tmp_path):
@@ -216,41 +287,6 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         for r in spark.read.parquet(out_dir).collect()
     }
     assert got.get((10, 0)) == 2, got  # late 10:01 row NOT counted
-
-
-def test_tws_backend_matches_classic(spark):
-    """transformWithStateInPandas backend vs the classic
-    applyInPandasWithState backend: identical output where the TWS
-    state-server client dependency (protobuf) exists.
-
-    This container ships no protobuf and installs are disallowed, so
-    here the test pins the ENVIRONMENT GATE instead of skipping: the
-    TWS path must fail fast with an ImportError naming protobuf (not
-    hang or corrupt state), and the applyInPandasWithState backend —
-    which fully covers the operator semantics — is the production
-    path. Where protobuf exists this same test runs the differential."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        have_protobuf = True
-    except ImportError:
-        have_protobuf = False
-
-    from psd_project_spark.streaming.jobs import (
-        measures_window_stream,
-        measures_window_stream_tws,
-    )
-
-    if not have_protobuf:
-        with pytest.raises(ImportError, match="protobuf"):
-            measures_window_stream_tws(spark, SF_DIR)
-        return
-
-    a = measures_window_stream(spark, SF_DIR).collect()
-    b = measures_window_stream_tws(spark, SF_DIR).collect()
-    assert sorted(map(tuple, a), key=lambda t: t[:2]) == sorted(
-        map(tuple, b), key=lambda t: t[:2]
-    )
 
 
 def test_foreachbatch_append_idempotent_across_restart(spark, tmp_path):

@@ -1,19 +1,32 @@
-"""Regenerate EXPLAIN.md: formatted physical plans for headline queries.
+"""Dump formatted physical plans: EXPLAIN.md, or one round's plan files.
 
-Usage: python tools/dump_plans.py   (writes EXPLAIN.md at repo root)
+Usage:
+  python tools/dump_plans.py
+      writes EXPLAIN.md at the repo root (headline queries, sf0.001)
+  python tools/dump_plans.py --round r16 [--suffix=before|after]
+                             [--sf-dir DIR] <query> [...]
+      writes plans/<round>/<query>_<suffix>.txt for each query, over the
+      tables in DIR (default: $SPARK_GRAFT_SF_DIR; rounds use sf0.1)
 
-Each entry pairs a registry query with the scale property its plan is
-expected to exhibit; tests/test_plan_shapes.py pins the same properties
-mechanically — this file exists so a reviewer can read the actual plans
+EXPLAIN.md pairs each registry query with the scale property its plan
+is expected to exhibit; tests/test_plan_shapes.py pins the same
+properties mechanically — the file lets the actual plans be read
 without running Spark.
+
+The ``--round`` files are an optimization round's before/after
+evidence for every touched query. Lifecycle queries run their side
+effects during construction; the dumped plan is the final serving read
+— exactly what the bench times through the noop sink.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SHOWCASE = [
     (
@@ -379,7 +392,25 @@ SHOWCASE = [
 ]
 
 
-def main() -> None:
+def dump_round(round_tag: str, names: list[str], suffix: str, sf: str) -> None:
+    from psd_project_spark.plans.inspect import formatted_plan
+    from psd_project_spark.registry import queries
+    from psd_project_spark.session import get_spark
+
+    out_dir = os.path.join(ROOT, "plans", round_tag)
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark(app_name="psd-plan")
+    qs = queries()
+    for name in names:
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(formatted_plan(qs[name](spark, sf)) + "\n")
+        print(f"wrote {path}", file=sys.stderr)
+        spark.catalog.clearCache()
+    spark.stop()
+
+
+def dump_explain_md() -> None:
     from pyspark.sql import SparkSession
 
     from psd_project_spark import registry
@@ -407,10 +438,31 @@ def main() -> None:
         out += [f"## {name}", "", f"**Expected shape:** {why}", "", "```"]
         out.append(formatted_plan(df).rstrip())
         out += ["```", ""]
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "EXPLAIN.md"), "w") as f:
+    with open(os.path.join(ROOT, "EXPLAIN.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote EXPLAIN.md")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--round", help="round tag: write plans/<round>/ instead of EXPLAIN.md")
+    ap.add_argument("--suffix", default="before", help="file suffix, e.g. before|after")
+    ap.add_argument(
+        "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"),
+        help="table directory for --round (default: $SPARK_GRAFT_SF_DIR)",
+    )
+    ap.add_argument("queries", nargs="*", help="registry queries to dump (with --round)")
+    args = ap.parse_args()
+    if args.round is None:
+        if args.queries:
+            ap.error("query names need --round")
+        dump_explain_md()
+    elif not args.queries:
+        ap.error("--round needs at least one query")
+    elif not args.sf_dir:
+        ap.error("--round needs --sf-dir or $SPARK_GRAFT_SF_DIR")
+    else:
+        dump_round(args.round, args.queries, args.suffix, args.sf_dir)
 
 
 if __name__ == "__main__":
