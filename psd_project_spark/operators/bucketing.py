@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psd_project_spark import durable
 from psd_project_spark.sources.registry import load_table
 
 #: Bucket count for the co-located pair. Both sides MUST agree —
@@ -161,8 +162,7 @@ def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         shutil.rmtree(tpath, ignore_errors=True)  # crashed prior build
         for mode, df in phases:
             _write_bucketed(df, name, tpath, bkey, mode)
-        with open(os.path.join(tpath, _COMPLETE), "w") as fh:
-            fh.write("ok")
+        durable.publish(os.path.join(tpath, _COMPLETE), "ok")
     return names
 
 
@@ -274,8 +274,7 @@ def compact_bucketed_table(
     shutil.rmtree(tmp_loc, ignore_errors=True)  # crashed prior attempt
     shutil.rmtree(old_loc, ignore_errors=True)
     _write_bucketed(src, tmp_name, tmp_loc, bkey, "overwrite")
-    with open(os.path.join(tmp_loc, _COMPLETE), "w") as fh:
-        fh.write("ok")
+    durable.publish(os.path.join(tmp_loc, _COMPLETE), "ok")
     # both generations durable on disk from here on
     spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")  # external: files stay
     spark.sql(f"DROP TABLE IF EXISTS {name}")
@@ -369,11 +368,7 @@ def run_bucketed_fact_ingest(
     def ingest(df: DataFrame, batch_id: int) -> None:
         if df.isEmpty():
             return
-        applied = -1
-        if os.path.exists(applied_f):
-            with open(applied_f) as fh:
-                applied = int(fh.read())
-        if batch_id <= applied:
+        if batch_id <= durable.read_int(applied_f, -1):
             return
         spark = df.sparkSession
         mode = (
@@ -382,10 +377,7 @@ def run_bucketed_fact_ingest(
             else "overwrite"
         )
         _write_bucketed(df, name, tpath, bkey, mode)
-        tmp = applied_f + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(batch_id))
-        os.replace(tmp, applied_f)
+        durable.publish(applied_f, str(batch_id))
         if compact_bucketed_table(spark, name, bkey, max_files):
             with open(os.path.join(ctrl_dir, "compactions.log"), "a") as fh:
                 fh.write(f"{batch_id}\n")

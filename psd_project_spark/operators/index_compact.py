@@ -30,6 +30,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from psd_project_spark import durable
+
 
 def prune_stale_siblings(parent: str, prefix: str, fp: str) -> int:
     """Delete sibling index dirs of the same layout ``prefix`` whose
@@ -299,10 +301,9 @@ def write_partition_manifest(path: str) -> list[str]:
     them to ``_PARTITIONS`` atomically (tmp + rename — a reader never
     sees a half-written manifest)."""
     parts = _walk_partitions(path)
-    tmp = os.path.join(path, f".{MANIFEST}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(parts) + ("\n" if parts else ""))
-    os.replace(tmp, os.path.join(path, MANIFEST))
+    durable.publish(
+        os.path.join(path, MANIFEST), "".join(p + "\n" for p in parts)
+    )
     return parts
 
 
@@ -388,8 +389,7 @@ def compact_index(
         # an appended-then-compacted index never wrote one)
         write_partition_manifest(path)
         if had_marker:
-            with open(marker, "w") as fh:
-                fh.write("base+delta\n")
+            durable.publish(marker, "base+delta\n")
     return len(buckets)
 
 
@@ -425,8 +425,7 @@ def build_base_plus_delta(
         write_partition_manifest(path)
         if compact_fn is not None:
             compact_fn()
-        with open(marker, "w") as fh:
-            fh.write("base+delta\n")
+        durable.publish(marker, "base+delta\n")
     return True
 
 

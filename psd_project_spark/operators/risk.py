@@ -138,15 +138,18 @@ def reference_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def alerts_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed measures vs broadcast reference stats → alert rows.
+def alerts_from_measures(measures: DataFrame, sf_dir: str) -> DataFrame:
+    """Wide windowed measures (``user_id``, ``seq``, one column per
+    measure) → alert rows: long form, broadcast join to the reference
+    stats, the predicate (ref−m)/(1+ref) ≥ threshold — the one alert
+    definition the batch (:func:`alerts_batch`) and streaming
+    (``jobs.alerts_stream``) pipelines share.
 
     The stats table is 6 × |series| rows — broadcast join, never a
     shuffle (reference S3's positional array lookup, SURVEY.md §2.1).
     """
-    measures = measures_window(spark, sf_dir)
     long = measures_to_long(measures, ["user_id", "seq"])
-    stats = reference_stats(spark, sf_dir)
+    stats = reference_stats(measures.sparkSession, sf_dir)
     joined = long.join(
         F.broadcast(stats), on=["user_id", "measure"], how="inner"
     )
@@ -165,6 +168,11 @@ def alerts_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("measure_value"),
         "ref_value",
     )
+
+
+def alerts_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Windowed measures vs broadcast reference stats → alert rows."""
+    return alerts_from_measures(measures_window(spark, sf_dir), sf_dir)
 
 
 def _alerts_oracle() -> str:

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from psd_project_spark import durable
 from psd_project_spark.sources.registry import load_table
 
 #: Columns of the SCD2 state/event core (shared by batch + stream).
@@ -1042,20 +1043,11 @@ def _record_consumer_progress(feed_dir: str, name: str, epoch: int) -> None:
         # re-bootstrap instruction. (A rejoin unlinks the tombstone
         # BEFORE re-recording progress, so rejoins pass this guard.)
         return
-    if os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                epoch = max(epoch, int(fh.read()))
-        except FileNotFoundError:
-            # unlinked by a concurrent eviction between the exists()
-            # check and the read (ADVICE r14 #1) — fall back to the
-            # caller's epoch; the post-replace tombstone re-check
-            # below decides whether the write may stand
-            pass
-    tmp = os.path.join(cdir, f".{name}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(epoch))
-    os.replace(tmp, marker)
+    # a marker unlinked by a concurrent eviction before the read
+    # (ADVICE r14 #1) reads as the caller's epoch; the post-replace
+    # tombstone re-check below decides whether the write may stand
+    epoch = max(epoch, durable.read_int(marker, epoch))
+    durable.publish(marker, str(epoch))
     # Eviction wins deterministically (ADVICE r14 #1): a concurrent
     # max_lag apply may have tombstoned this consumer between the
     # guard above and the replace — the just-written marker would
@@ -1081,14 +1073,12 @@ def feed_consumer_progress(feed_dir: str) -> dict[str, int]:
         for name in os.listdir(cdir):
             if name.startswith("."):
                 continue
-            try:
-                with open(os.path.join(cdir, name)) as fh:
-                    out[name] = int(fh.read())
-            except FileNotFoundError:
-                # evicted between the listing and the read (distinct
-                # consumers may apply concurrently — guide §2.6): a
-                # vanished marker means the consumer no longer pins GC
-                continue
+            # a marker evicted between the listing and the read reads
+            # as None (distinct consumers may apply concurrently —
+            # guide §2.6): a vanished marker no longer pins GC
+            epoch = durable.read_int(os.path.join(cdir, name), None)
+            if epoch is not None:
+                out[name] = epoch
     return out
 
 
@@ -1104,7 +1094,6 @@ def evicted_feed_consumers(feed_dir: str) -> dict[str, dict]:
     #2 requires): ``{name: {"progress": last applied epoch,
     "evicted_at_epoch": the frontier that evicted it, "max_lag": the
     cap it broke}}``."""
-    import json
     import os
 
     cdir = os.path.join(feed_dir, _CONSUMERS)
@@ -1112,8 +1101,9 @@ def evicted_feed_consumers(feed_dir: str) -> dict[str, dict]:
     if os.path.isdir(cdir):
         for f in os.listdir(cdir):
             if f.startswith(".evicted.") and f.endswith(".json"):
-                with open(os.path.join(cdir, f)) as fh:
-                    out[f[len(".evicted."):-len(".json")]] = json.load(fh)
+                out[f[len(".evicted."):-len(".json")]] = durable.read_json(
+                    os.path.join(cdir, f)
+                )
     return out
 
 
@@ -1130,34 +1120,19 @@ def _evict_lagging_consumers(
     the re-bootstrap instruction, and :func:`register_feed_consumer`
     refuses the tombstoned name until :func:`rejoin_feed_consumer`."""
     import contextlib
-    import json
     import os
-
-    import threading
 
     for name, p in list(progress.items()):
         if frontier - p <= max_lag:
             continue
-        tomb = _tombstone_path(feed_dir, name)
         # two concurrent applies (distinct consumers — guide §2.6) may
-        # both see the same laggard and both evict it: each writes its
-        # (equally valid) tombstone under a WRITER-UNIQUE tmp name — a
-        # shared tmp would let one evictor replace the file out from
-        # under the other mid-write (torn JSON at the tombstone, and
-        # an unhandled FileNotFoundError on the loser's replace) — and
-        # only one unlink finds the marker
-        tmp = f"{tomb}.{os.getpid()}.{threading.get_ident()}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "progress": p,
-                    "evicted_at_epoch": frontier,
-                    "max_lag": max_lag,
-                },
-                fh,
-                sort_keys=True,
-            )
-        os.replace(tmp, tomb)
+        # both see the same laggard and both evict it: each publishes
+        # its (equally valid) tombstone, and only one unlink finds the
+        # marker
+        durable.publish(
+            _tombstone_path(feed_dir, name),
+            {"progress": p, "evicted_at_epoch": frontier, "max_lag": max_lag},
+        )
         with contextlib.suppress(FileNotFoundError):
             os.unlink(os.path.join(feed_dir, _CONSUMERS, name))
         del progress[name]
@@ -1171,7 +1146,6 @@ def rejoin_feed_consumer(feed_dir: str, name: str, epoch: int) -> None:
     released. The tombstone is consumed (annotated with the rejoin,
     kept dot-prefixed for audit) and a fresh progress marker is
     written at ``epoch``."""
-    import json
     import os
 
     tomb = _tombstone_path(feed_dir, name)
@@ -1180,8 +1154,7 @@ def rejoin_feed_consumer(feed_dir: str, name: str, epoch: int) -> None:
             f"consumer {name!r} has no eviction tombstone in {feed_dir} "
             f"— use register_feed_consumer for a first registration"
         )
-    with open(tomb) as fh:
-        record = json.load(fh)
+    record = durable.read_json(tomb)
     if epoch < 0 or epoch < record["progress"]:
         # a rejoin below the evictee's own last progress (or at the
         # registered-but-never-applied -1) would re-pin GC at the very
@@ -1193,13 +1166,9 @@ def rejoin_feed_consumer(feed_dir: str, name: str, epoch: int) -> None:
             f"LIVE snapshot and rejoin at its applied epoch"
         )
     record["rejoined_at_epoch"] = epoch
-    rejoined = os.path.join(
-        feed_dir, _CONSUMERS, f".rejoined.{name}.json"
+    durable.publish(
+        os.path.join(feed_dir, _CONSUMERS, f".rejoined.{name}.json"), record
     )
-    tmp = rejoined + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(record, fh, sort_keys=True)
-    os.replace(tmp, rejoined)
     os.unlink(tomb)
     _record_consumer_progress(feed_dir, name, epoch)
 
@@ -1247,23 +1216,13 @@ def _record_view_applied(view_dir: str, epoch: int) -> None:
 
     os.makedirs(view_dir, exist_ok=True)
     marker = os.path.join(view_dir, _VIEW_APPLIED)
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            epoch = max(epoch, int(fh.read()))
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(str(epoch))
-    os.replace(tmp, marker)
+    durable.publish(marker, str(max(epoch, durable.read_int(marker, epoch))))
 
 
 def _view_applied(view_dir: str) -> int:
     import os
 
-    marker = os.path.join(view_dir, _VIEW_APPLIED)
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            return int(fh.read())
-    return -1
+    return durable.read_int(os.path.join(view_dir, _VIEW_APPLIED), -1)
 
 
 def apply_feed_epoch(

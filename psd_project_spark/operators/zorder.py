@@ -34,13 +34,13 @@ repo's warehouse-layout tier.
 from __future__ import annotations
 
 import datetime as _dt
-import json
 import os
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psd_project_spark import durable
 from psd_project_spark.sources.registry import load_table
 
 #: Bits per dimension: 8 bins × 8 bins = 64 z-cells. Test-scale sizing
@@ -141,10 +141,7 @@ def build_zorder_layout(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("zcell")
             .parquet(path)
         )
-        tmp = params_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(params, fh)
-        os.replace(tmp, params_path)  # the gate, strictly last
+        durable.publish(params_path, params)  # the gate, strictly last
     return path
 
 
@@ -195,8 +192,7 @@ def zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match proves layout + cell enumeration + residual lose and
     invent nothing."""
     path = build_zorder_layout(spark, sf_dir)
-    with open(os.path.join(path, _PARAMS)) as fh:
-        params = json.load(fh)
+    params = durable.read_json(os.path.join(path, _PARAMS))
     cells = zcells_for_box(params, _D1, _D2, _C1, _C2)
     return _priority_agg(
         spark.read.parquet(path)
@@ -292,10 +288,7 @@ def build_zonemap_table(spark: SparkSession, sf_dir: str) -> str:
             os.path.basename(urlparse(r["file"]).path): [r["lo"], r["hi"]]
             for r in stats
         }
-        tmp = zpath + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(zmap, fh, sort_keys=True)
-        os.replace(tmp, zpath)  # the gate, strictly last
+        durable.publish(zpath, zmap)  # the gate, strictly last
     return path
 
 
@@ -349,8 +342,7 @@ def zonemap_files_for_range(path: str, lo: str, hi: str) -> list[str]:
     file whose zone ``[min, max]`` intersects the range (string
     comparison — the bounds are ISO timestamps). A SUPERSET of the
     matching rows' files; the exact predicate runs as the residual."""
-    with open(os.path.join(path, _ZONEMAP)) as fh:
-        zmap = json.load(fh)
+    zmap = durable.read_json(os.path.join(path, _ZONEMAP))
     return sorted(
         name for name, (zlo, zhi) in zmap.items()
         if not (zhi < lo or zlo > hi)
@@ -429,17 +421,13 @@ def _merge_zonemap(
     ``drop_prefix`` first removes a replayed epoch's previous entries,
     so the publish replaces rather than accumulates them."""
     zpath = os.path.join(path, _ZONEMAP)
-    with open(zpath) as fh:
-        zmap = json.load(fh)
+    zmap = durable.read_json(zpath)
     if drop_prefix is not None:
         zmap = {
             k: v for k, v in zmap.items() if not k.startswith(drop_prefix)
         }
     zmap.update(new_entries)
-    tmp = zpath + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(zmap, fh, sort_keys=True)
-    os.replace(tmp, zpath)
+    durable.publish(zpath, zmap)
 
 
 def _build_zonemap_base(spark: SparkSession, base: DataFrame, path: str) -> None:
@@ -449,17 +437,13 @@ def _build_zonemap_base(spark: SparkSession, base: DataFrame, path: str) -> None
     :func:`stream_zonemap_ingest` so the delete-then-continue
     lifecycle (:func:`stream_zonemap_resume`) builds through the
     identical code."""
-    zpath = os.path.join(path, _ZONEMAP)
     (
         base.repartitionByRange(ZONEMAP_FILES, F.col("l_shipdate"))
         .sortWithinPartitions("l_shipdate")
         .write.mode("overwrite")
         .parquet(path)
     )
-    base_map = _zonemap_stats(spark, path)
-    with open(zpath + ".tmp", "w") as fh:
-        json.dump(base_map, fh, sort_keys=True)
-    os.replace(zpath + ".tmp", zpath)
+    durable.publish(os.path.join(path, _ZONEMAP), _zonemap_stats(spark, path))
 
 
 def stream_zonemap_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -534,8 +518,7 @@ def stream_zonemap_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     scratch_dir("psd_zmstream_ckpt_"),
                     state_partitions=None,
                 )
-                with open(marker, "w") as fh:
-                    fh.write("base + streamed appends + stats\n")
+                durable.publish(marker, "base + streamed appends + stats\n")
     names = zonemap_files_for_range(path, _Z1, _Z2)
     src_df = (
         spark.read.parquet(*(os.path.join(path, n) for n in names))
@@ -563,18 +546,14 @@ _ZPURGES = "_ZPURGES.json"
 
 
 def _load_zpurges(path: str) -> list[dict]:
-    p = os.path.join(path, _ZPURGES)
-    if not os.path.exists(p):
+    try:
+        return durable.read_json(os.path.join(path, _ZPURGES))
+    except FileNotFoundError:
         return []
-    with open(p) as fh:
-        return json.load(fh)
 
 
 def _store_zpurges(path: str, purges: list[dict]) -> None:
-    ptmp = os.path.join(path, _ZPURGES + ".tmp")
-    with open(ptmp, "w") as fh:
-        json.dump(purges, fh, sort_keys=True)
-    os.replace(ptmp, os.path.join(path, _ZPURGES))
+    durable.publish(os.path.join(path, _ZPURGES), purges)
 
 
 def _retire_zpurges(path: str, horizon: int) -> None:
@@ -698,15 +677,11 @@ def _zcell_expr(params: dict) -> F.Column:
 
 
 def _load_zcells(path: str) -> dict:
-    with open(os.path.join(path, _ZCELLS)) as fh:
-        return json.load(fh)
+    return durable.read_json(os.path.join(path, _ZCELLS))
 
 
 def _publish_zcells(path: str, manifest: dict) -> None:
-    tmp = os.path.join(path, _ZCELLS + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, sort_keys=True)
-    os.replace(tmp, os.path.join(path, _ZCELLS))
+    durable.publish(os.path.join(path, _ZCELLS), manifest)
 
 
 def _stage_into_cells(
@@ -1000,8 +975,7 @@ def stream_zorder_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     scratch_dir("psd_zostream_ckpt_"),
                     state_partitions=None,
                 )
-                with open(marker, "w") as fh:
-                    fh.write("base + streamed z-cell appends\n")
+                durable.publish(marker, "base + streamed z-cell appends\n")
     paths, _manifest = zcell_files_for_box(path, _D1, _D2, _C1, _C2)
     src_df = (
         spark.read.parquet(*paths)
@@ -1126,19 +1100,14 @@ def zonemap_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if os.path.isdir(path):
                     shutil.rmtree(path)
                 os.makedirs(path)
-                with open(os.path.join(base, _ZONEMAP)) as fh:
-                    zmap = json.load(fh)
+                zmap = durable.read_json(os.path.join(base, _ZONEMAP))
                 new_zmap = _purge_range_zones(
                     spark, zmap, base, path, _DL1, _DL2
                 )
                 shutil.rmtree(path + "_stage", ignore_errors=True)
-                with open(zpath + ".tmp", "w") as fh:
-                    json.dump(new_zmap, fh, sort_keys=True)
-                os.replace(zpath + ".tmp", zpath)
-                with open(marker, "w") as fh:
-                    fh.write(f"deleted [{_DL1}, {_DL2}]\n")
-    with open(zpath) as fh:
-        names = sorted(json.load(fh))
+                durable.publish(zpath, new_zmap)
+                durable.publish(marker, f"deleted [{_DL1}, {_DL2}]\n")
+    names = sorted(durable.read_json(zpath))
     return _returnflag_agg(
         spark.read.parquet(*(os.path.join(path, n) for n in names))
     )
@@ -1228,8 +1197,7 @@ def zorder_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if os.path.isdir(path):
                     shutil.rmtree(path)
                 os.makedirs(path)
-                with open(os.path.join(base, _PARAMS)) as fh:
-                    params = json.load(fh)
+                params = durable.read_json(os.path.join(base, _PARAMS))
                 bins = _cell_bins()
                 affected = set(
                     zcells_for_box(
@@ -1285,12 +1253,8 @@ def zorder_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                             os.path.join(cdir, f"d-p{i:05d}.parquet"),
                         )
                 shutil.rmtree(path + "_stage", ignore_errors=True)
-                shutil.copyfile(
-                    os.path.join(base, _PARAMS),
-                    os.path.join(path, _PARAMS),
-                )
-                with open(marker, "w") as fh:
-                    fh.write(f"purged custkey [{_KC1}, {_KC2}]\n")
+                durable.publish(os.path.join(path, _PARAMS), params)
+                durable.publish(marker, f"purged custkey [{_KC1}, {_KC2}]\n")
     return _priority_agg(
         spark.read.parquet(path)
     )
@@ -1360,8 +1324,7 @@ def stream_zorder_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "cells": new_cells,
                     },
                 )
-                with open(marker, "w") as fh:
-                    fh.write(f"purged custkey [{_KC1}, {_KC2}]\n")
+                durable.publish(marker, f"purged custkey [{_KC1}, {_KC2}]\n")
     manifest = _load_zcells(path)
     paths = [
         os.path.join(path, f"zcell={c}", f)
@@ -1548,11 +1511,11 @@ def stream_zorder_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .parquet(f"{src}/p2")
                 )
                 ingest()  # the late epoch: batch id 2 > applied 1
-                with open(marker, "w") as fh:
-                    fh.write(
-                        f"base + 2 epochs, purged custkey "
-                        f"[{_KC1}, {_KC2}], then 1 more epoch\n"
-                    )
+                durable.publish(
+                    marker,
+                    f"base + 2 epochs, purged custkey "
+                    f"[{_KC1}, {_KC2}], then 1 more epoch\n",
+                )
     manifest = _load_zcells(path)
     paths = [
         os.path.join(path, f"zcell={c}", f)
@@ -1587,8 +1550,7 @@ def _purge_range_inplace(
     import shutil
 
     zpath = os.path.join(path, _ZONEMAP)
-    with open(zpath) as fh:
-        zmap = json.load(fh)
+    zmap = durable.read_json(zpath)
     new_zmap = _purge_range_zones(spark, zmap, path, path, lo, hi)
     shutil.rmtree(path + "_stage", ignore_errors=True)
     # journal strictly BEFORE the manifest publish: a replayed epoch
@@ -1603,10 +1565,7 @@ def _purge_range_inplace(
     purges = _load_zpurges(path)
     purges.append({"lo": lo, "hi": hi, "epochs": epochs})
     _store_zpurges(path, purges)
-    tmp = zpath + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(new_zmap, fh, sort_keys=True)
-    os.replace(tmp, zpath)
+    durable.publish(zpath, new_zmap)
     for f in os.listdir(path):  # immediate: erasure
         if f.endswith(".parquet") and f not in new_zmap:
             os.unlink(os.path.join(path, f))
@@ -1681,13 +1640,12 @@ def stream_zonemap_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .parquet(f"{src}/p2")
                 )
                 ingest()  # the late epoch: not in the purge journal
-                with open(marker, "w") as fh:
-                    fh.write(
-                        f"base + 2 epochs, purged [{_DL1}, {_DL2}], "
-                        f"then 1 more epoch\n"
-                    )
-    with open(os.path.join(path, _ZONEMAP)) as fh:
-        names = sorted(json.load(fh))
+                durable.publish(
+                    marker,
+                    f"base + 2 epochs, purged [{_DL1}, {_DL2}], "
+                    f"then 1 more epoch\n",
+                )
+    names = sorted(durable.read_json(os.path.join(path, _ZONEMAP)))
     src_df = (
         spark.read.parquet(*(os.path.join(path, n) for n in names))
         if names

@@ -29,6 +29,7 @@ sink/parser loop is lossless down to the last bit of every double.
 from __future__ import annotations
 
 import os
+import re
 import uuid
 from dataclasses import dataclass
 from typing import Iterator
@@ -44,6 +45,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
+
+from psd_project_spark import durable
 
 _SCHEMA_DDL = (
     "seq long, measure string, user_id long, measure_value double, "
@@ -62,19 +65,20 @@ class _FilePartition(InputPartition):
         self.path = path
 
 
-class AlertLogWriter(DataSourceWriter):
-    """Batch writer with real append/overwrite semantics.
+def _manifest(path: str) -> list[list[str]]:
+    """A committed manifest's ``[part name, rows]`` entries (one
+    ``name\trows`` line each); ``[]`` when there is none."""
+    if not os.path.exists(path):
+        return []
+    with open(path) as fh:
+        return [line.rstrip("\n").split("\t") for line in fh if line.strip()]
 
-    Final part names carry a per-job uuid, so a second ``append`` job
-    into the same directory can never clobber an earlier job's parts;
-    the ``_SUCCESS`` manifest is merged (append) or replaced with the
-    prior job's parts deleted (overwrite) — both via atomic rename.
-    """
 
-    def __init__(self, options, overwrite: bool = False):
-        self.path = options["path"]
-        self.overwrite = overwrite
-        self.job_id = uuid.uuid4().hex[:12]
+class _PartWriter:
+    """The task-side part write and the driver-side commit and abort
+    that the batch and the stream writer share."""
+
+    path: str
 
     def write(self, rows: Iterator) -> _FileCommit:
         os.makedirs(self.path, exist_ok=True)
@@ -89,40 +93,59 @@ class AlertLogWriter(DataSourceWriter):
                 n += 1
         return _FileCommit(tmp, n)
 
-    def commit(self, messages: list[_FileCommit]) -> None:
-        manifest = os.path.join(self.path, "_SUCCESS")
-        prior: list[str] = []
-        if os.path.exists(manifest):
-            with open(manifest) as fh:
-                prior = [line.rstrip("\n") for line in fh if line.strip()]
-        finals = []
-        for i, m in enumerate(messages):
-            final = os.path.join(
-                self.path, f"part-{self.job_id}-{i:05d}.txt"
-            )
-            os.replace(m.tmp_path, final)
-            finals.append((os.path.basename(final), m.rows))
-        if self.overwrite:
-            for line in prior:
-                stale = os.path.join(self.path, line.split("\t")[0])
+    def _commit(
+        self, messages: list[_FileCommit], manifest_name: str,
+        part_name: str, keep_prior: bool,
+    ) -> None:
+        """The parts the manifest already names are kept
+        (``keep_prior``: batch append) or deleted (batch overwrite,
+        replayed stream epoch) BEFORE the task outputs are renamed to
+        ``part_name.format(i)`` — a replayed epoch reuses its part
+        names — then the manifest is published naming both."""
+        manifest = os.path.join(self.path, manifest_name)
+        entries = _manifest(manifest)
+        if not keep_prior:
+            for name, _rows in entries:
+                stale = os.path.join(self.path, name)
                 if os.path.exists(stale):
                     os.remove(stale)
-            prior = []
-        tmp_manifest = manifest + f".tmp-{self.job_id}"
-        with open(tmp_manifest, "w") as fh:
-            for line in prior:
-                fh.write(line + "\n")
-            for name, rows in finals:
-                fh.write(f"{name}\t{rows}\n")
-        os.replace(tmp_manifest, manifest)
+            entries = []
+        for i, m in enumerate(messages):
+            name = part_name.format(i)
+            os.replace(m.tmp_path, os.path.join(self.path, name))
+            entries.append([name, m.rows])
+        durable.publish(manifest, "".join(f"{n}\t{r}\n" for n, r in entries))
 
-    def abort(self, messages: list[_FileCommit]) -> None:
+    def abort(
+        self, messages: list[_FileCommit], batchId: int | None = None
+    ) -> None:
         for m in messages:
             if m is not None and os.path.exists(m.tmp_path):
                 os.remove(m.tmp_path)
 
 
-class AlertLogStreamWriter(DataSourceStreamWriter):
+class AlertLogWriter(_PartWriter, DataSourceWriter):
+    """Batch writer with real append/overwrite semantics.
+
+    Final part names carry a per-job uuid, so a second ``append`` job
+    into the same directory can never clobber an earlier job's parts;
+    the ``_SUCCESS`` manifest is merged (append) or replaced with the
+    prior job's parts deleted (overwrite) — both via atomic rename.
+    """
+
+    def __init__(self, options, overwrite: bool = False):
+        self.path = options["path"]
+        self.overwrite = overwrite
+        self.job_id = uuid.uuid4().hex[:12]
+
+    def commit(self, messages: list[_FileCommit]) -> None:
+        self._commit(
+            messages, "_SUCCESS", f"part-{self.job_id}-{{:05d}}.txt",
+            keep_prior=not self.overwrite,
+        )
+
+
+class AlertLogStreamWriter(_PartWriter, DataSourceStreamWriter):
     """Epoch-keyed variant for ``writeStream``: each micro-batch
     commits a ``_SUCCESS-epoch-N`` manifest naming that epoch's files.
     A REPLAYED epoch (failure between sink write and checkpoint
@@ -133,35 +156,11 @@ class AlertLogStreamWriter(DataSourceStreamWriter):
     def __init__(self, options):
         self.path = options["path"]
 
-    def write(self, rows: Iterator) -> _FileCommit:
-        return AlertLogWriter({"path": self.path}).write(rows)
-
     def commit(self, messages: list[_FileCommit], batchId: int) -> None:
-        manifest = os.path.join(self.path, f"_SUCCESS-epoch-{batchId}")
-        if os.path.exists(manifest):
-            with open(manifest) as fh:
-                for line in fh:
-                    if line.strip():
-                        stale = os.path.join(self.path, line.split("\t")[0])
-                        if os.path.exists(stale):
-                            os.remove(stale)
-        finals = []
-        for i, m in enumerate(messages):
-            final = os.path.join(
-                self.path, f"epoch-{batchId}-part-{i:05d}.txt"
-            )
-            os.replace(m.tmp_path, final)
-            finals.append((os.path.basename(final), m.rows))
-        tmp_manifest = manifest + ".tmp"
-        with open(tmp_manifest, "w") as fh:
-            for name, rows in finals:
-                fh.write(f"{name}\t{rows}\n")
-        os.replace(tmp_manifest, manifest)
-
-    def abort(self, messages: list[_FileCommit], batchId: int) -> None:
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_path):
-                os.remove(m.tmp_path)
+        self._commit(
+            messages, f"_SUCCESS-epoch-{batchId}",
+            f"epoch-{batchId}-part-{{:05d}}.txt", keep_prior=False,
+        )
 
 
 class AlertLogReader(DataSourceReader):
@@ -169,14 +168,14 @@ class AlertLogReader(DataSourceReader):
         self.path = options["path"]
 
     def partitions(self) -> list[InputPartition]:
-        names: list[str] = []
-        for entry in sorted(os.listdir(self.path)):
-            if entry == "_SUCCESS" or entry.startswith("_SUCCESS-epoch-"):
-                with open(os.path.join(self.path, entry)) as fh:
-                    names += [
-                        line.split("\t")[0] for line in fh if line.strip()
-                    ]
-        return [_FilePartition(os.path.join(self.path, n)) for n in names]
+        # committed manifests only: a torn publish's tmp file is never
+        # one (its name does not match)
+        return [
+            _FilePartition(os.path.join(self.path, name))
+            for entry in sorted(os.listdir(self.path))
+            if re.fullmatch(r"_SUCCESS(-epoch-\d+)?", entry)
+            for name, _rows in _manifest(os.path.join(self.path, entry))
+        ]
 
     def read(self, partition: _FilePartition) -> Iterator[tuple]:
         with open(partition.path) as fh:

@@ -42,11 +42,10 @@ from pyspark.sql.types import (
 )
 
 from psd_project_spark.config import DEFAULT_CONFIG
-from psd_project_spark.functions.measures import measures_to_long
 from psd_project_spark.operators.risk import (
     MEASURES_WINDOW_ORACLE,
     _alerts_oracle,
-    reference_stats,
+    alerts_from_measures,
 )
 from psd_project_spark.session import ensure_conf
 from psd_project_spark.streaming.count_window import (
@@ -197,25 +196,7 @@ def alerts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         window_size=DEFAULT_CONFIG.window_size,
         digits=DEFAULT_CONFIG.measure_round_digits,
     )
-    long = measures_to_long(measures, ["user_id", "seq"])
-    stats = reference_stats(spark, sf_dir)  # static side → broadcast
-    joined = long.join(F.broadcast(stats), on=["user_id", "measure"], how="inner")
-    thresh = DEFAULT_CONFIG.alert_threshold
-    alerts = joined.filter(
-        (F.col("value") < F.col("ref_value"))
-        & (
-            (F.col("ref_value") - F.col("value"))
-            / (F.lit(1.0) + F.col("ref_value"))
-            >= F.lit(thresh)
-        )
-    ).select(
-        "user_id",
-        "seq",
-        "measure",
-        F.col("value").alias("measure_value"),
-        "ref_value",
-    )
-    return run_stream_to_memory(alerts)
+    return run_stream_to_memory(alerts_from_measures(measures, sf_dir))
 
 
 # --- events_time_windows (event-time extension) ------------------------------

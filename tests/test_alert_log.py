@@ -156,3 +156,14 @@ def test_roundtrip_is_bit_exact_on_real_alerts(spark):
         .collect()
     }
     assert got == direct and len(got) > 0
+
+
+def test_reader_skips_a_torn_epoch_manifest(tmp_path):
+    """A crash between an epoch manifest's write and its rename leaves
+    ``_SUCCESS-epoch-1.tmp`` beside the committed epoch 0: only
+    committed manifests may name parts to read."""
+    (tmp_path / "epoch-0-part-00000.txt").write_text("(1,mean,7,0.5,0.1)\n")
+    (tmp_path / "_SUCCESS-epoch-0").write_text("epoch-0-part-00000.txt\t1\n")
+    (tmp_path / "_SUCCESS-epoch-1.tmp").write_text("epoch-1-par")
+    parts = alert_log.AlertLogReader({"path": str(tmp_path)}).partitions()
+    assert [p.path for p in parts] == [str(tmp_path / "epoch-0-part-00000.txt")]

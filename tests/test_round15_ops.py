@@ -309,6 +309,26 @@ def test_bad_sidecar_falls_back_instead_of_raising(tmp_path, sidecar):
     assert staged_affected_buckets(_staged_batch(tmp_path, sidecar), 0, ["user_id"], 8) is None
 
 
+def test_two_source_checkpoint_falls_back(tmp_path):
+    """ADVICE r15: source 0's sidecars are not a unioned stream's whole
+    batch — a checkpoint with two sources takes the distinct-collect
+    path (``None``) instead of under-reporting source 1's buckets."""
+    import json
+
+    from psd_project_spark.streaming.foreach_sink import staged_affected_buckets
+
+    side = '{{"bucket_by": ["user_id"], "n_buckets": 8, "buckets": {}}}'
+    ckpt = _staged_batch(tmp_path, side.format([1, 2]))
+    split = tmp_path / "src" / "p1"
+    split.mkdir()
+    (split / "_BUCKETS.json").write_text(side.format([5]))
+    log = tmp_path / "ck" / "sources" / "1"
+    log.mkdir()
+    entry = {"path": f"file:{split}/part-0.parquet", "batchId": 0}
+    (log / "0").write_text("v1\n" + json.dumps(entry) + "\n")
+    assert staged_affected_buckets(ckpt, 0, ["user_id"], 8) is None
+
+
 @pytest.mark.parametrize("n_views", [2, 3])
 def test_views_with_disagreement_matches_exceptall_form(spark, n_views):
     """Differential pin of the r14 one-pass bitmask aggregation
