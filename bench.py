@@ -1,8 +1,15 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
+Usage: python bench.py [<query> ...]
+
 Prints ONE JSON line:
 ``{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}``
+
+Named queries restrict the run to those queries (the optimisation inner
+loop): same passes, retry and stall gate, the line lists every named
+query, and the SF2 pass, the baseline refresh and BENCH_detail.json are
+skipped, so a subset run never rewrites the committed files.
 
 Each query runs twice: a warm-up is NOT used — cold numbers are what the
 driver compares — but the session/JVM start is excluded (measured after
@@ -48,11 +55,18 @@ def main() -> None:
     from psd_project_spark.session import get_spark
     from psd_project_spark.registry import queries
 
+    only = sys.argv[1:]
     spark = get_spark(app_name="psd-bench")
     qs = queries()
+    unknown = sorted(set(only) - set(qs))
+    if unknown:
+        spark.stop()
+        sys.exit(f"bench.py: unknown queries: {', '.join(unknown)}")
     names = [n for n in HEADLINE if n in qs] + [
         n for n in sorted(qs) if n not in HEADLINE
     ]
+    if only:
+        names = [n for n in names if n in only]
     # Warm-up: touch every table (FS cache + parquet footers) and spawn
     # the Arrow Python workers once, so per-query numbers measure query
     # execution rather than one-time process/IO init landing on
@@ -151,8 +165,8 @@ def main() -> None:
     # Refresh the baseline with this run's clean minima so it tracks
     # real improvements (never a suspect value) — but only when this
     # run's data dir matches the committed baseline's (or there is no
-    # committed baseline yet): an off-SF run must not rewrite it.
-    if baseline_sf_ok:
+    # committed baseline yet): an off-SF or subset run must not rewrite it.
+    if baseline_sf_ok and not only:
         new_base = dict(baseline)
         for name in names:
             if name not in stall_suspects:
@@ -178,7 +192,7 @@ def main() -> None:
     # 2 runs, so the output carries a per-query scaling ratio.
     timings_small: dict[str, float] = {}
     sf2_val: float | str | None = None
-    if SF2_DIR and os.path.isdir(SF2_DIR) and SF2_DIR != SF_DIR:
+    if not only and SF2_DIR and os.path.isdir(SF2_DIR) and SF2_DIR != SF_DIR:
         sf2_val = parse_sf(SF2_DIR)
         for pass_no in range(2):
             for name in [n for n in HEADLINE if n in qs]:
@@ -189,21 +203,22 @@ def main() -> None:
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_detail.json"
     )
-    with open(detail_path, "w") as fh:
-        json.dump(
-            {
-                "metric": "headline_queries_total",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf_val,
-                "sf_small": sf2_val,
-                "queries_small": timings_small,
-            },
-            fh,
-            indent=1,
-            sort_keys=True,
-        )
+    if not only:
+        with open(detail_path, "w") as fh:
+            json.dump(
+                {
+                    "metric": "headline_queries_total",
+                    "value": total,
+                    "unit": "sec",
+                    "queries": timings,
+                    "sf": sf_val,
+                    "sf_small": sf2_val,
+                    "queries_small": timings_small,
+                },
+                fh,
+                indent=1,
+                sort_keys=True,
+            )
     worst = dict(
         sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:5]
     )
@@ -223,11 +238,13 @@ def main() -> None:
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "queries": summary,
+        "queries": timings if only else summary,
         "n_queries": len(timings),
         "detail": "BENCH_detail.json",
         "sf": sf_val,
     }
+    if only:
+        del out["detail"]
     if stall_suspects:
         # queries whose best-of-5 still exceeds 2× the committed
         # best-known baseline — treat their numbers as VM noise until

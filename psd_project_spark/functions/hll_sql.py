@@ -296,6 +296,7 @@ def estimate_stages(n_obs: str = "n_obs", sinv: str = "sinv"):
             f"zz_at * {_ELEVENTH}))))))",
         ),
         (
+            # Integer rounding (no digits, then BIGINT): not round_sql's shape.
             "n_distinct_approx",
             f"CAST(CAST(CAST(round(CAST(CAST(CASE WHEN raw_est <= CAST({2.5 * m} AS DOUBLE) "
             f"AND v_emp > 0 "

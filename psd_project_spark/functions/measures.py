@@ -29,14 +29,10 @@ order statistics, so :func:`grouped_measures` costs exactly one shuffle
 — no ``collect_list`` materialization, no driver-side state, skew
 handled by AQE. This is the plan that survives 100 TB groups.
 
-Determinism vs the DuckDB oracle
---------------------------------
-Double summation order differs between engines, so every sum feeding a
-measure is accumulated in DECIMAL (exact, order-independent) and cast
-back to double, making Spark and DuckDB produce *bit-identical*
-doubles; outputs are additionally rounded to ``digits`` decimals.
-:func:`grouped_measures_oracle_sql` generates the mirrored DuckDB SQL
-from the same templates so the two paths cannot drift apart.
+Every sum feeding a measure is an exact decimal sum
+(:mod:`psd_project_spark.functions.exact`), and outputs are rounded to
+``digits`` decimals, so :func:`grouped_measures_oracle_sql` — the
+mirrored DuckDB SQL — returns bit-identical doubles.
 
 For fixed-size count windows (n = 30) the sorted window array is tiny;
 :func:`sorted_array_measures` computes all six measures from one shared
@@ -52,17 +48,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from psd_project_spark.config import DEFAULT_CONFIG, MEASURES
+from psd_project_spark.functions.exact import DEC, exact_sum, exact_sum_sql, round_sql
 
 #: Output measure column names, in reference emission order.
 MEASURE_COLS: tuple[str, ...] = tuple(MEASURES)
-
-#: Decimal type used for order-independent exact summation.
-_DEC = "decimal(27,15)"
-
-
-def _dec_sum(col: Column) -> Column:
-    """Order-independent sum: accumulate in decimal, return double."""
-    return F.sum(col.cast(_DEC)).cast("double")
 
 
 def grouped_measures(
@@ -87,10 +76,7 @@ def grouped_measures(
         .filter(v.isNotNull())
         .withColumn("_rn", F.row_number().over(wr))
         .withColumn("_n", F.count(F.lit(1)).over(wp))
-        .withColumn(
-            "_gmean",
-            F.sum(v.cast(_DEC)).over(wp).cast("double") / F.col("_n"),
-        )
+        .withColumn("_gmean", exact_sum(v, over=wp) / F.col("_n"))
     )
 
     n = F.col("_n")
@@ -109,16 +95,16 @@ def grouped_measures(
         ).alias("median"),
         F.round(F.max(F.when(rn == q10_idx, v)), digits).alias("q10"),
         F.round(
-            _dec_sum(F.when(rn <= tail_k, v)) / F.max(tail_k), digits
+            exact_sum(F.when(rn <= tail_k, v)) / F.max(tail_k), digits
         ).alias("tail_mean"),
         F.round(
-            F.max(gmean) - _dec_sum(F.abs(v - gmean)) / (F.lit(2) * F.max(n)),
+            F.max(gmean) - exact_sum(F.abs(v - gmean)) / (F.lit(2) * F.max(n)),
             digits,
         ).alias("sm1"),
         # Gini identity: ΣΣ|xi−xj| = 2·Σ (2·rn − n − 1)·x_(rn)
         F.round(
             F.max(gmean)
-            - _dec_sum((F.lit(2) * rn - n - F.lit(1)) * v)
+            - exact_sum((F.lit(2) * rn - n - F.lit(1)) * v)
             / (F.max(n) * F.max(n)),
             digits,
         ).alias("sm2"),
@@ -138,13 +124,17 @@ def grouped_measures_oracle_sql(
     ``table_sql`` is a table name or parenthesized subquery.
     """
     g = ", ".join(group_cols)
+    # The CASE sits inside the sum here, so the exact sum is spelled out.
+    tail_sum = (
+        "CAST(CAST(sum(CASE WHEN rn <= greatest(n // 10, 1) "
+        f"THEN CAST(CAST(v AS STRING) AS {DEC}) END) AS STRING) AS DOUBLE)"
+    )
     q = f"""
 WITH ranked AS (
   SELECT {g}, CAST({value_col} AS DOUBLE) AS v,
          row_number() OVER (PARTITION BY {g} ORDER BY CAST({value_col} AS DOUBLE)) AS rn,
          count(*) OVER (PARTITION BY {g}) AS n,
-         CAST(CAST(sum(CAST(CAST(CAST({value_col} AS DOUBLE) AS STRING) AS DECIMAL(27,15)))
-              OVER (PARTITION BY {g}) AS STRING) AS DOUBLE) AS gsum
+         {exact_sum_sql(f"CAST({value_col} AS DOUBLE)", over=f"(PARTITION BY {g})")} AS gsum
   FROM {table_sql}
   WHERE {value_col} IS NOT NULL
 ), d AS (
@@ -152,16 +142,12 @@ WITH ranked AS (
 )
 SELECT {g},
   max(n) AS n_rows,
-  CAST(CAST(round(CAST(CAST(max(gmean) AS STRING) AS DECIMAL(38,21)), {digits}) AS STRING) AS DOUBLE) AS mean,
-  CAST(CAST(round(CAST(CAST(avg(CASE WHEN rn = (n + 1) // 2 OR rn = n // 2 + 1 THEN v END) AS STRING) AS DECIMAL(38,21)), {digits}) AS STRING) AS DOUBLE) AS median,
-  CAST(CAST(round(CAST(CAST(max(CASE WHEN rn = n // 10 + 1 THEN v END) AS STRING) AS DECIMAL(38,21)), {digits}) AS STRING) AS DOUBLE) AS q10,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CASE WHEN rn <= greatest(n // 10, 1)
-                      THEN CAST(CAST(v AS STRING) AS DECIMAL(27,15)) END) AS STRING) AS DOUBLE)
-        / max(greatest(n // 10, 1)) AS STRING) AS DECIMAL(38,21)), {digits}) AS STRING) AS DOUBLE) AS tail_mean,
-  CAST(CAST(round(CAST(CAST(max(gmean) - CAST(CAST(sum(CAST(CAST(abs(v - gmean) AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE)
-        / (2 * max(n)) AS STRING) AS DECIMAL(38,21)), {digits}) AS STRING) AS DOUBLE) AS sm1,
-  CAST(CAST(round(CAST(CAST(max(gmean) - CAST(CAST(sum(CAST(CAST((2 * rn - n - 1) * v AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE)
-        / (max(n) * max(n)) AS STRING) AS DECIMAL(38,21)), {digits}) AS STRING) AS DOUBLE) AS sm2
+  {round_sql("max(gmean)", digits)} AS mean,
+  {round_sql("avg(CASE WHEN rn = (n + 1) // 2 OR rn = n // 2 + 1 THEN v END)", digits)} AS median,
+  {round_sql("max(CASE WHEN rn = n // 10 + 1 THEN v END)", digits)} AS q10,
+  {round_sql(tail_sum + " / max(greatest(n // 10, 1))", digits)} AS tail_mean,
+  {round_sql("max(gmean) - " + exact_sum_sql("abs(v - gmean)") + " / (2 * max(n))", digits)} AS sm1,
+  {round_sql("max(gmean) - " + exact_sum_sql("(2 * rn - n - 1) * v") + " / (max(n) * max(n))", digits)} AS sm2
 FROM d
 GROUP BY {g}
 """

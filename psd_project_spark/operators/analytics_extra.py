@@ -38,9 +38,8 @@ from pyspark.sql.types import (
 
 from psd_project_spark.functions import hll_sql as HLL
 from psd_project_spark.functions import vectors as V
+from psd_project_spark.functions.exact import DEC, exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
-
-_DEC = "decimal(27,15)"
 
 # --- funnel_conversion -------------------------------------------------------
 
@@ -386,8 +385,8 @@ def moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Built-in ``corr``/``covar_samp``/``stddev`` stream partial states
     whose float accumulation order varies with partitioning, so their
     last bits are not reproducible across engines or cluster layouts.
-    Instead the five raw moments (Σx, Σy, Σx², Σy², Σxy) accumulate in
-    DECIMAL(27,15) — order-independent, one map-side-combined shuffle —
+    Instead the five raw moments (Σx, Σy, Σx², Σy², Σxy) are exact
+    decimal sums — order-independent, one map-side-combined shuffle —
     and the derived statistics are a fixed IEEE expression over the
     exact sums (sqrt is correctly rounded per IEEE-754, so even corr is
     bit-identical to the DuckDB oracle). This is also the 100 TB shape:
@@ -399,14 +398,13 @@ def moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").alias("x"),
         F.col("l_extendedprice").alias("y"),
     )
-    dec = "decimal(38,15)"
     agg = l.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(F.col("x").cast(dec)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(dec)).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast(dec)).cast("double").alias("sxx"),
-        F.sum((F.col("y") * F.col("y")).cast(dec)).cast("double").alias("syy"),
-        F.sum((F.col("x") * F.col("y")).cast(dec)).cast("double").alias("sxy"),
+        exact_sum(F.col("x")).alias("sx"),
+        exact_sum(F.col("y")).alias("sy"),
+        exact_sum(F.col("x") * F.col("x")).alias("sxx"),
+        exact_sum(F.col("y") * F.col("y")).alias("syy"),
+        exact_sum(F.col("x") * F.col("y")).alias("sxy"),
     )
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
@@ -425,27 +423,26 @@ def moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_returnflag")
 
 
-MOMENT_STATS_ORACLE = """
+MOMENT_STATS_ORACLE = f"""
 WITH m AS (
   SELECT l_returnflag,
     CAST(count(*) AS DOUBLE) AS n,
-    CAST(CAST(sum(CAST(CAST(l_quantity AS STRING) AS DECIMAL(38,15))) AS STRING) AS DOUBLE) AS sx,
-    CAST(CAST(sum(CAST(CAST(l_extendedprice AS STRING) AS DECIMAL(38,15))) AS STRING) AS DOUBLE) AS sy,
-    CAST(CAST(sum(CAST(CAST(l_quantity * l_quantity AS STRING) AS DECIMAL(38,15))) AS STRING) AS DOUBLE) AS sxx,
-    CAST(CAST(sum(CAST(CAST(l_extendedprice * l_extendedprice AS STRING) AS DECIMAL(38,15))) AS STRING) AS DOUBLE) AS syy,
-    CAST(CAST(sum(CAST(CAST(l_quantity * l_extendedprice AS STRING) AS DECIMAL(38,15))) AS STRING) AS DOUBLE) AS sxy
+    {exact_sum_sql("l_quantity")} AS sx,
+    {exact_sum_sql("l_extendedprice")} AS sy,
+    {exact_sum_sql("l_quantity * l_quantity")} AS sxx,
+    {exact_sum_sql("l_extendedprice * l_extendedprice")} AS syy,
+    {exact_sum_sql("l_quantity * l_extendedprice")} AS sxy
   FROM lineitem
   GROUP BY 1
 )
 SELECT l_returnflag,
   CAST(n AS BIGINT) AS n,
-  CAST(CAST(round(CAST(CAST(sx / n AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS mean_qty,
-  CAST(CAST(round(CAST(CAST(sy / n AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS mean_price,
-  CAST(CAST(round(CAST(CAST(sqrt((sxx - sx * sx / n) / (n - 1.0)) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS std_qty,
-  CAST(CAST(round(CAST(CAST(sqrt((syy - sy * sy / n) / (n - 1.0)) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS std_price,
-  CAST(CAST(round(CAST(CAST((sxy - sx * sy / n) / (n - 1.0) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS covar_qp,
-  CAST(CAST(round(CAST(CAST((sxy - sx * sy / n)
-        / sqrt((sxx - sx * sx / n) * (syy - sy * sy / n)) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS corr_qp
+  {round_sql("sx / n", 6)} AS mean_qty,
+  {round_sql("sy / n", 6)} AS mean_price,
+  {round_sql("sqrt((sxx - sx * sx / n) / (n - 1.0))", 6)} AS std_qty,
+  {round_sql("sqrt((syy - sy * sy / n) / (n - 1.0))", 6)} AS std_price,
+  {round_sql("(sxy - sx * sy / n) / (n - 1.0)", 6)} AS covar_qp,
+  {round_sql("(sxy - sx * sy / n) / sqrt((sxx - sx * sx / n) * (syy - sy * sy / n))", 6)} AS corr_qp
 FROM m
 ORDER BY l_returnflag
 """
@@ -466,12 +463,10 @@ def value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluate; max() over it is order-independent.
     """
     e = load_table(spark, sf_dir, "events").select("event_type", "value")
-    dec = "decimal(38,15)"
     stats = e.groupBy(F.col("event_type").alias("et")).agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(F.col("value").cast(dec)).cast("double").alias("sv"),
-        F.sum((F.col("value") * F.col("value")).cast(dec))
-        .cast("double")
+        exact_sum(F.col("value")).alias("sv"),
+        exact_sum(F.col("value") * F.col("value"))
         .alias("svv"),
     )
     mean = F.col("sv") / F.col("n")
@@ -492,20 +487,19 @@ def value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-VALUE_OUTLIERS_ORACLE = """
+VALUE_OUTLIERS_ORACLE = f"""
 WITH stats AS (
   SELECT event_type AS et,
     CAST(count(*) AS DOUBLE) AS n,
-    CAST(CAST(sum(CAST(CAST(value AS STRING) AS DECIMAL(38,15))) AS STRING) AS DOUBLE) AS sv,
-    CAST(CAST(sum(CAST(CAST(value * value AS STRING) AS DECIMAL(38,15))) AS STRING) AS DOUBLE) AS svv
+    {exact_sum_sql("value")} AS sv,
+    {exact_sum_sql("value * value")} AS svv
   FROM events GROUP BY 1
 )
 SELECT event_type, count(*) AS n,
   CAST(sum(CASE WHEN abs((value - sv / n)
                / sqrt((svv - sv * sv / n) / (n - 1.0))) > 3.0
            THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-  CAST(CAST(round(CAST(CAST(max(abs((value - sv / n)
-                / sqrt((svv - sv * sv / n) / (n - 1.0)))) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS max_abs_z
+  {round_sql("max(abs((value - sv / n) / sqrt((svv - sv * sv / n) / (n - 1.0))))", 6)} AS max_abs_z
 FROM events JOIN stats ON event_type = et
 GROUP BY 1
 ORDER BY 1
@@ -524,6 +518,7 @@ def _profile_canon(c: str) -> str:
     double→string formatting differences between engines and double
     rounding noise; documented profiler contract — the sketch counts
     distinct 2-dp values). Identical text runs in both dialects."""
+    # Integer rounding (no digits, then BIGINT): not round_sql's shape.
     return f"CAST(CAST(CAST(round(CAST(CAST({c} * 100 AS STRING) AS DECIMAL(38,21))) AS STRING) AS DOUBLE) AS BIGINT)"
 
 
@@ -537,11 +532,7 @@ def _profile_base_aggs(cols):
         ]
     for c in _PROFILE_NUMERIC:
         aggs.append(
-            F.round(
-                F.sum(F.col(c).cast("decimal(38,15)")).cast("double")
-                / F.count(F.col(c)),
-                6,
-            ).alias(f"avg_{c}")
+            F.round(exact_sum(F.col(c)) / F.count(F.col(c)), 6).alias(f"avg_{c}")
         )
     return aggs
 
@@ -734,8 +725,7 @@ def table_profile_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _profile_base_select(c: str, with_distinct: bool) -> str:
     mean = (
-        "CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST({c} AS STRING) AS DECIMAL(38,15))) AS STRING) AS DOUBLE)"
-        " / count({c}) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE)".format(c=c)
+        round_sql(exact_sum_sql(c) + f" / count({c})", 6)
         if c in _PROFILE_NUMERIC
         else "CAST(NULL AS DOUBLE)"
     )
@@ -889,7 +879,7 @@ def incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     def partial(df: DataFrame) -> DataFrame:
         return df.groupBy("l_returnflag").agg(
             F.count(F.lit(1)).alias("pn"),
-            F.sum(F.col("rev").cast(_DEC)).alias("psum"),
+            F.sum(F.col("rev").cast(DEC)).alias("psum"),
         )
 
     hist = partial(l.filter(F.col("l_shipdate") < cutoff))
@@ -914,13 +904,10 @@ def _revenue_col() -> F.Column:
     return F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
 
 
-INCREMENTAL_ROLLUP_ORACLE = """
+INCREMENTAL_ROLLUP_ORACLE = f"""
 SELECT l_returnflag, count(*) AS n,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount)
-                      AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS revenue,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount)
-                      AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE)
-        / CAST(count(*) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS avg_revenue
+  {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount)"), 6)} AS revenue,
+  {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount)") + " / CAST(count(*) AS DOUBLE)", 6)} AS avg_revenue
 FROM lineitem
 GROUP BY 1
 ORDER BY 1

@@ -32,9 +32,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
-
-_DEC = "decimal(27,15)"
 
 
 # --- hourly_top_spenders -----------------------------------------------------
@@ -48,11 +47,7 @@ def hourly_top_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(
             F.date_trunc("hour", F.col("ts")).alias("hour"), "user_id"
         )
-        .agg(
-            F.round(F.sum(F.col("value").cast(_DEC)).cast("double"), 6).alias(
-                "spend"
-            )
-        )
+        .agg(F.round(exact_sum(F.col("value")), 6).alias("spend"))
     )
     w = Window.partitionBy("hour").orderBy(
         F.col("spend").desc(), F.col("user_id")
@@ -64,10 +59,10 @@ def hourly_top_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TOP_SPENDERS_ORACLE = """
+TOP_SPENDERS_ORACLE = f"""
 WITH hourly AS (
   SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour, user_id,
-         CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(value AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS spend
+         {round_sql(exact_sum_sql("value"), 6)} AS spend
   FROM events WHERE event_type = 'purchase'
   GROUP BY 1, 2
 )

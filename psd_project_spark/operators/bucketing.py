@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from psd_project_spark import durable
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
 
 #: Bucket count for the co-located pair. Both sides MUST agree —
@@ -38,8 +39,6 @@ from psd_project_spark.sources.registry import load_table
 #: pick buckets ≈ total-bytes / (HDFS-block-sized file per bucket per
 #: writer); 8 keeps sf-scale files non-trivial.
 N_BUCKETS = 8
-
-_DEC = "decimal(27,15)"
 
 #: One live table root per (session, sf_dir): ``scratch_dir`` RECLAIMS
 #: the previous directory each time it's called for a prefix, while
@@ -309,9 +308,7 @@ def _co_located_revenue(
         lb.join(ob, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("o_orderstatus")
         .agg(
-            F.round(
-                F.sum(revenue.cast(_DEC)).cast("double"), 6
-            ).alias("revenue"),
+            F.round(exact_sum(revenue), 6).alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
         .orderBy("o_orderstatus")
@@ -451,9 +448,9 @@ def stream_bucketed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _co_located_revenue(spark, o_name, l_name)
 
 
-BUCKETED_JOIN_ORACLE = """
+BUCKETED_JOIN_ORACLE = f"""
 SELECT o_orderstatus,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount) AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS revenue,
+       {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount)"), 6)} AS revenue,
        count(*) AS n_items
 FROM lineitem
 JOIN orders ON l_orderkey = o_orderkey

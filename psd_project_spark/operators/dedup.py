@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from psd_project_spark.functions import text as T
 from psd_project_spark.functions import vectors as V
+from psd_project_spark.functions.exact import round_sql
 from psd_project_spark.functions.text_udfs import (
     make_shingles_udf,
     minhash_sig_udf,
@@ -267,8 +268,8 @@ cand AS (
     ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
 )
 SELECT c.doc_a, c.doc_b,
-  CAST(CAST(round(CAST(CAST({T.est_jaccard_sql('sa.sig', 'sb.sig')} AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS est_jaccard,
-  CAST(CAST(round(CAST(CAST({T.exact_jaccard_sql('sa.s', 'sb.s')} AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS jaccard
+  {round_sql(T.est_jaccard_sql('sa.sig', 'sb.sig'), 6)} AS est_jaccard,
+  {round_sql(T.exact_jaccard_sql('sa.s', 'sb.s'), 6)} AS jaccard
 FROM cand c
 JOIN sigs sa ON c.doc_a = sa.doc_id
 JOIN sigs sb ON c.doc_b = sb.doc_id
@@ -340,8 +341,8 @@ cand AS (
     ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
 )
 SELECT c.doc_a, c.doc_b,
-  CAST(CAST(round(CAST(CAST({T.est_jaccard_sql('sa.sig', 'sb.sig')} AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS est_jaccard,
-  CAST(CAST(round(CAST(CAST({T.exact_jaccard_sql('sa.s', 'sb.s')} AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS jaccard,
+  {round_sql(T.est_jaccard_sql('sa.sig', 'sb.sig'), 6)} AS est_jaccard,
+  {round_sql(T.exact_jaccard_sql('sa.s', 'sb.s'), 6)} AS jaccard,
   ca.n_copies AS copies_a, cb.n_copies AS copies_b
 FROM cand c
 JOIN sigs sa ON c.doc_a = sa.doc_id
@@ -886,7 +887,7 @@ eb AS (SELECT doc_id AS doc_eval, band_id, band_key FROM bands WHERE doc_id % 50
 tb AS (SELECT doc_id AS doc_train, band_id, band_key FROM bands WHERE doc_id % 50 <> 0),
 cand AS (SELECT DISTINCT doc_train, doc_eval FROM tb JOIN eb USING (band_id, band_key)),
 j AS (
-  SELECT c.doc_eval, CAST(CAST(round(CAST(CAST({T.exact_jaccard_sql('st.s', 'se.s')} AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS jac
+  SELECT c.doc_eval, {round_sql(T.exact_jaccard_sql('st.s', 'se.s'), 6)} AS jac
   FROM cand c
   JOIN sigs st ON st.doc_id = c.doc_train
   JOIN sigs se ON se.doc_id = c.doc_eval

@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 
 from psd_project_spark.functions import text as T
 from psd_project_spark.functions.caching import transient_cache
+from psd_project_spark.functions.exact import round_sql
 from psd_project_spark.sources.registry import load_table, spread_small
 
 #: Anchor width in tokens. Wider than the 3-word near-dup shingles and
@@ -368,9 +369,7 @@ SELECT d.doc_id,
        CAST(coalesce(p.n_spans, 0) AS BIGINT) AS n_spans,
        CAST(coalesce(p.dup_tokens, 0) AS BIGINT) AS dup_tokens,
        CAST(coalesce(p.max_span_tokens, 0) AS BIGINT) AS max_span_tokens,
-       CAST(CAST(round(CAST(CAST(
-         coalesce(p.dup_tokens, 0) / CAST(len({T.tokens_sql()}) AS DOUBLE)
-       AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS dup_frac
+       {round_sql(f" coalesce(p.dup_tokens, 0) / CAST(len({T.tokens_sql()}) AS DOUBLE)", 6)} AS dup_frac
 FROM documents d LEFT JOIN per_doc p USING (doc_id)
 ORDER BY doc_id
 """
@@ -518,9 +517,7 @@ SELECT d.doc_id,
        CAST(coalesce(p.n_spans, 0) AS BIGINT) AS n_spans,
        CAST(coalesce(p.leaked_tokens, 0) AS BIGINT) AS leaked_tokens,
        CAST(coalesce(p.max_span_tokens, 0) AS BIGINT) AS max_span_tokens,
-       CAST(CAST(round(CAST(CAST(
-         coalesce(p.leaked_tokens, 0) / CAST(len({T.tokens_sql()}) AS DOUBLE)
-       AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS leak_frac
+       {round_sql(f" coalesce(p.leaked_tokens, 0) / CAST(len({T.tokens_sql()}) AS DOUBLE)", 6)} AS leak_frac
 FROM documents d LEFT JOIN per_doc p USING (doc_id)
 {doc_where}
 ORDER BY doc_id

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from psd_project_spark.functions import hll_sql as HLL
 from psd_project_spark.functions import text as T
 from psd_project_spark.functions.caching import transient_cache
+from psd_project_spark.functions.exact import round_sql
 from psd_project_spark.sources.registry import load_table
 
 #: Sketch geometry: d independent rows × w buckets. Overestimate is
@@ -179,6 +180,7 @@ QUERIES = {
 #: Python-computed double literals (no libm at query time; identical
 #: parse in both engines).
 _Z = {"q10": "-1.2815515655446004", "q50": "0.0", "q90": "1.2815515655446004"}
+#: Own type: the cubed moment sums need more integer digits than DEC.
 _MQ_DEC = "DECIMAL(38,12)"
 
 
@@ -213,7 +215,7 @@ def _mq_stages():
             f"({zz} + ({zz} * {zz} - CAST(1.0 AS DOUBLE)) * g1 "
             f"/ CAST(6.0 AS DOUBLE))"
         )
-        stages.append((f"{name}_est", f"CAST(CAST(round(CAST(CAST(mu + sigma * {w} AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE)"))
+        stages.append((f"{name}_est", round_sql(f"mu + sigma * {w}", 6)))
     return stages
 
 
@@ -285,8 +287,8 @@ WITH base AS (
   FROM lineitem GROUP BY 1
 ),
 {', '.join(ctes)}
-SELECT l_returnflag, n, CAST(CAST(round(CAST(CAST(mu AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS mean, CAST(CAST(round(CAST(CAST(sigma AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS stddev,
-       CAST(CAST(round(CAST(CAST(g1 AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS skewness, q10_est, q50_est, q90_est
+SELECT l_returnflag, n, {round_sql("mu", 6)} AS mean, {round_sql("sigma", 6)} AS stddev,
+       {round_sql("g1", 6)} AS skewness, q10_est, q50_est, q90_est
 FROM {cur} ORDER BY l_returnflag
 """
 

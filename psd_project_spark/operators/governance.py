@@ -28,9 +28,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
-
-_DEC = "decimal(27,15)"
 
 K_ANON = 10
 N_SHARDS = 8
@@ -47,7 +46,7 @@ def k_anonymity_release(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(
-                F.sum(F.col("c_acctbal").cast(_DEC)).cast("double")
+                exact_sum(F.col("c_acctbal"))
                 / F.count(F.lit(1)),
                 6,
             ).alias("_avg_bal"),
@@ -72,7 +71,7 @@ SELECT c_nationkey, c_mktsegment, n,
        CASE WHEN n >= {K_ANON} THEN avg_bal END AS avg_acctbal
 FROM (
   SELECT c_nationkey, c_mktsegment, count(*) AS n,
-         CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(c_acctbal AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) / count(*) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS avg_bal
+         {round_sql(exact_sum_sql("c_acctbal") + " / count(*)", 6)} AS avg_bal
   FROM customer GROUP BY 1, 2
 )
 ORDER BY c_nationkey, c_mktsegment
@@ -100,11 +99,10 @@ def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("_keep").alias("n_sampled"),
             F.count(F.lit(1)).alias("n_total"),
             F.round(
-                F.sum(
+                exact_sum(
                     F.when(F.col("_keep") == 1, F.col("value"))
                     .otherwise(F.lit(0.0))
-                    .cast(_DEC)
-                ).cast("double"),
+                ),
                 6,
             ).alias("sampled_value"),
         )
@@ -113,7 +111,7 @@ def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-WEIGHTED_SAMPLE_ORACLE = """
+WEIGHTED_SAMPLE_ORACLE = f"""
 WITH e AS (
   SELECT event_type, value,
          CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 8))::BIGINT AS DOUBLE)
@@ -124,7 +122,7 @@ WITH e AS (
 SELECT event_type,
        CAST(sum(CASE WHEN u < value / vmax THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
        count(*) AS n_total,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(CASE WHEN u < value / vmax THEN value ELSE 0.0 END AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sampled_value
+       {round_sql(exact_sum_sql("CASE WHEN u < value / vmax THEN value ELSE 0.0 END"), 6)} AS sampled_value
 FROM e
 GROUP BY event_type
 ORDER BY event_type

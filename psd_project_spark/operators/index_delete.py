@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from psd_project_spark.functions import text as T
 from psd_project_spark.functions.caching import transient_cache
+from psd_project_spark.functions.exact import round_sql
 from psd_project_spark.operators.dedup import (
     _SIG_SQL,
     _band_frame,
@@ -184,7 +185,7 @@ tb AS (SELECT doc_id AS doc_train, band_id, band_key FROM bands
        WHERE doc_id % 50 <> 0 AND doc_id % 7 <> 3),
 cand AS (SELECT DISTINCT doc_train, doc_eval FROM tb JOIN eb USING (band_id, band_key)),
 j AS (
-  SELECT c.doc_eval, CAST(CAST(round(CAST(CAST({T.exact_jaccard_sql('st.s', 'se.s')} AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS jac
+  SELECT c.doc_eval, {round_sql(T.exact_jaccard_sql('st.s', 'se.s'), 6)} AS jac
   FROM cand c
   JOIN sigs st ON st.doc_id = c.doc_train
   JOIN sigs se ON se.doc_id = c.doc_eval

@@ -31,10 +31,9 @@ training IS oracle-able when every step is reproducible op-for-op):
   bit-exact driver hash. Training is true gradient descent on the
   mean-squared-error of ``p``: per-row gradient
   ``(p−y) · 0.5/(1+|z|)² · x`` — also fully rational.
-- Gradient / loss sums accumulate in DECIMAL(27,15)
-  (order-independent — parallel fold order cannot change the result),
-  cast back to double; the oracle mirrors with the repo's string-hop
-  recipes.
+- Gradient / loss sums are exact decimal sums (``functions/exact.py``;
+  order-independent — parallel fold order cannot change the result),
+  cast back to double; the oracle mirrors them with the DuckDB twins.
 - ``z`` is one fixed left-associated fold ``x1·w1 + … + x9·w9 + b``
   generated from the same feature list on both sides.
 - Weights are O(d) driver-side model state (like the k-means
@@ -56,6 +55,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from psd_project_spark.functions.caching import transient_cache
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 
 #: (name, spark expr over quality_features, duckdb expr over qf CTE).
 #: Count-scaled features divide by an exact power-of-ten double so the
@@ -135,18 +135,16 @@ def _train(
         e = p - F.col("y")
         n = F.count(F.lit(1))
 
-        def dsum(c: Column) -> Column:
-            return F.sum(c.cast("decimal(27,15)")).cast("double")
 
         hit = ((z >= F.lit(0.0)) == (F.col("y") == one)).cast("long")
         row = feat.agg(
             *[
-                dsum(e * s * F.col(name)).alias(f"g{j + 1}")
+                exact_sum(e * s * F.col(name)).alias(f"g{j + 1}")
                 for j, (name, _) in enumerate(FEATURES)
             ],
-            dsum(e * s).alias("gb"),
+            exact_sum(e * s).alias("gb"),
             n.cast("double").alias("n"),
-            F.round(dsum(e * e) / n.cast("double"), 6).alias("loss"),
+            F.round(exact_sum(e * e) / n.cast("double"), 6).alias("loss"),
             F.round(
                 F.sum(hit).cast("double") / n.cast("double"), 6
             ).alias("accuracy"),
@@ -221,20 +219,6 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- DuckDB oracles (the k-means unrolled-CTE precedent) ---------------------
 
 
-def _dsum_sql(expr: str) -> str:
-    return (
-        "CAST(CAST(sum(CAST(CAST(" + expr + " AS STRING) "
-        "AS DECIMAL(27,15))) AS STRING) AS DOUBLE)"
-    )
-
-
-def _round6_sql(expr: str) -> str:
-    return (
-        "CAST(CAST(round(CAST(CAST(" + expr + " AS STRING) "
-        "AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE)"
-    )
-
-
 def _feat_cte() -> str:
     from psd_project_spark.operators.text_analysis import MIN_QUALITY
     from psd_project_spark.operators.text_curation import (
@@ -282,11 +266,14 @@ def _train_ctes() -> str:
   FROM z{t}
 ), g{t} AS (
   SELECT
-    {", ".join(_dsum_sql(f"(p-y)*s*x{j + 1}") + f" AS g{j + 1}" for j in range(d))},
-    {_dsum_sql("(p-y)*s")} AS gb,
+    {", ".join(exact_sum_sql(f"(p-y)*s*x{j + 1}") + f" AS g{j + 1}" for j in range(d))},
+    {exact_sum_sql("(p-y)*s")} AS gb,
     CAST(count(*) AS DOUBLE) AS n,
-    {_round6_sql(_dsum_sql("(p-y)*(p-y)") + " / CAST(count(*) AS DOUBLE)")} AS loss,
-    {_round6_sql("CAST(sum(CASE WHEN (z >= CAST(0.0 AS DOUBLE)) = (y = CAST(1.0 AS DOUBLE)) THEN 1 ELSE 0 END) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS accuracy
+    {round_sql(exact_sum_sql("(p-y)*(p-y)") + " / CAST(count(*) AS DOUBLE)", 6)} AS loss,
+    {round_sql(
+        "CAST(sum(CASE WHEN (z >= CAST(0.0 AS DOUBLE)) = (y = CAST(1.0 AS DOUBLE))"
+        " THEN 1 ELSE 0 END) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 6
+    )} AS accuracy
   FROM p{t}
 ), w{t} AS (
   SELECT
@@ -318,7 +305,7 @@ scored AS (
 )
 SELECT doc_id,
        CAST(y AS INT) AS label,
-       {_round6_sql("CAST(0.5 AS DOUBLE)*(CAST(1.0 AS DOUBLE) + z/(CAST(1.0 AS DOUBLE)+abs(z)))")} AS score,
+       {round_sql("CAST(0.5 AS DOUBLE)*(CAST(1.0 AS DOUBLE) + z/(CAST(1.0 AS DOUBLE)+abs(z)))", 6)} AS score,
        CASE WHEN z >= CAST(0.0 AS DOUBLE) THEN 1 ELSE 0 END AS keep
 FROM scored
 ORDER BY doc_id
@@ -582,7 +569,7 @@ scored AS (
 )
 SELECT doc_id,
        CAST(y AS INT) AS label,
-       {_round6_sql("CAST(0.5 AS DOUBLE)*(CAST(1.0 AS DOUBLE) + z/(CAST(1.0 AS DOUBLE)+abs(z)))")} AS score,
+       {round_sql("CAST(0.5 AS DOUBLE)*(CAST(1.0 AS DOUBLE) + z/(CAST(1.0 AS DOUBLE)+abs(z)))", 6)} AS score,
        CASE WHEN z >= CAST(0.0 AS DOUBLE) THEN 1 ELSE 0 END AS keep
 FROM scored
 ORDER BY doc_id
@@ -687,11 +674,11 @@ per AS (
   GROUP BY d.source
 )
 SELECT source, n_docs, tp, fp, fn, tn,
-       CASE WHEN tp + fp > 0 THEN {_round6_sql(praw)}
+       CASE WHEN tp + fp > 0 THEN {round_sql(praw, 6)}
             ELSE CAST(0.0 AS DOUBLE) END AS precision,
-       CASE WHEN tp + fn > 0 THEN {_round6_sql(rraw)}
+       CASE WHEN tp + fn > 0 THEN {round_sql(rraw, 6)}
             ELSE CAST(0.0 AS DOUBLE) END AS recall,
-       CASE WHEN tp > 0 THEN {_round6_sql(f1raw)}
+       CASE WHEN tp > 0 THEN {round_sql(f1raw, 6)}
             ELSE CAST(0.0 AS DOUBLE) END AS f1
 FROM per
 ORDER BY source
@@ -712,8 +699,8 @@ def quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     round6 double with the same IEEE multiply, so bin edges cannot
     disagree.
 
-    Exactness: mean_score accumulates the round6 scores in
-    DECIMAL(27,15) (order-free); pos_rate is an integer count over n;
+    Exactness: mean_score is an exact decimal sum of the round6
+    scores (order-free); pos_rate is an integer count over n;
     gap is one subtract + abs of two already-identical doubles.
 
     Plan: the scoring projection rides the feature scan; one
@@ -729,8 +716,6 @@ def quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "int"
     )
 
-    def dsum(c: Column) -> Column:
-        return F.sum(c.cast("decimal(27,15)")).cast("double")
 
     agg = (
         feat.select(binc.alias("bin"), score.alias("score"), "y")
@@ -738,7 +723,7 @@ def quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.round(
-                dsum(F.col("score")) / F.count(F.lit(1)).cast("double"), 6
+                exact_sum(F.col("score")) / F.count(F.lit(1)).cast("double"), 6
             ).alias("mean_score"),
             F.round(
                 F.sum(F.col("y").cast("long")).cast("double")
@@ -770,7 +755,7 @@ zs AS (
   FROM feat f CROSS JOIN w{ITERS} w
 ),
 scored AS (
-  SELECT doc_id, y, {_round6_sql(score)} AS score FROM zs
+  SELECT doc_id, y, {round_sql(score, 6)} AS score FROM zs
 ),
 binned AS (
   SELECT CAST(least(floor(score * CAST(10.0 AS DOUBLE)),
@@ -781,15 +766,15 @@ binned AS (
 agg AS (
   SELECT bin,
          CAST(count(*) AS BIGINT) AS n_docs,
-         {_round6_sql(_dsum_sql("score") + " / CAST(count(*) AS DOUBLE)")}
+         {round_sql(exact_sum_sql("score") + " / CAST(count(*) AS DOUBLE)", 6)}
            AS mean_score,
-         {_round6_sql("CAST(sum(CAST(y AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE)")}
+         {round_sql("CAST(sum(CAST(y AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 6)}
            AS pos_rate
   FROM binned
   GROUP BY bin
 )
 SELECT bin, n_docs, mean_score, pos_rate,
-       {_round6_sql("abs(mean_score - pos_rate)")} AS gap
+       {round_sql("abs(mean_score - pos_rate)", 6)} AS gap
 FROM agg
 ORDER BY bin
 """
@@ -897,11 +882,11 @@ per_src AS (
 ),
 tot AS (SELECT CAST(sum(kept_tokens) AS BIGINT) AS total_tokens FROM per_src)
 SELECT source, n_docs, kept_docs,
-       {_round6_sql("CAST(kept_docs AS DOUBLE) / CAST(n_docs AS DOUBLE)")}
+       {round_sql("CAST(kept_docs AS DOUBLE) / CAST(n_docs AS DOUBLE)", 6)}
          AS keep_rate,
        kept_tokens,
        CASE WHEN total_tokens > 0
-            THEN {_round6_sql("CAST(kept_tokens AS DOUBLE) / CAST(total_tokens AS DOUBLE)")}
+            THEN {round_sql("CAST(kept_tokens AS DOUBLE) / CAST(total_tokens AS DOUBLE)", 6)}
             ELSE CAST(0.0 AS DOUBLE) END
          AS mix_weight
 FROM per_src CROSS JOIN tot
@@ -939,7 +924,7 @@ def mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness of the float plumbing: ``sqrt`` is IEEE-754
     exactly-rounded, so both engines flatten identically; the
-    ~|sources| flattened masses sum in DECIMAL(27,15)
+    ~|sources| flattened masses are an exact decimal sum
     (order-independent), and budget = ``floor(share · ⌊total/2⌋)`` is
     the same double multiply + floor on both engines.
 
@@ -1000,8 +985,7 @@ def mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tot = flat.agg(
-        F.sum(F.col("flat_mass").cast("decimal(27,15)"))
-        .cast("double")
+        exact_sum(F.col("flat_mass"))
         .alias("_flat_tot"),
         F.expr("sum(kept_tokens) DIV 2").alias("_budget_total"),
     )
@@ -1102,7 +1086,7 @@ flat AS (
   FROM per_src
 ),
 tot AS (
-  SELECT {_dsum_sql("flat_mass")} AS flat_tot,
+  SELECT {exact_sum_sql("flat_mass")} AS flat_tot,
          CAST(sum(kept_tokens) // 2 AS BIGINT) AS budget_total
   FROM flat
 ),

@@ -22,13 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from psd_project_spark.functions.exact import DEC, exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
-
-_DEC = "decimal(27,15)"
-
-
-def _dsum(col) -> F.Column:
-    return F.sum(col.cast(_DEC)).cast("double")
 
 
 # --- q1_pricing_summary (TPC-H Q1 shape) ------------------------------------
@@ -42,13 +37,13 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (
         l.groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(_dsum(F.col("l_quantity")), 6).alias("sum_qty"),
-            F.round(_dsum(F.col("l_extendedprice")), 6).alias("sum_base_price"),
-            F.round(_dsum(disc_price), 6).alias("sum_disc_price"),
-            F.round(_dsum(charge), 6).alias("sum_charge"),
-            F.round(_dsum(F.col("l_quantity")) / F.count(F.lit(1)), 6).alias("avg_qty"),
-            F.round(_dsum(F.col("l_extendedprice")) / F.count(F.lit(1)), 6).alias("avg_price"),
-            F.round(_dsum(F.col("l_discount")) / F.count(F.lit(1)), 6).alias("avg_disc"),
+            F.round(exact_sum(F.col("l_quantity")), 6).alias("sum_qty"),
+            F.round(exact_sum(F.col("l_extendedprice")), 6).alias("sum_base_price"),
+            F.round(exact_sum(disc_price), 6).alias("sum_disc_price"),
+            F.round(exact_sum(charge), 6).alias("sum_charge"),
+            F.round(exact_sum(F.col("l_quantity")) / F.count(F.lit(1)), 6).alias("avg_qty"),
+            F.round(exact_sum(F.col("l_extendedprice")) / F.count(F.lit(1)), 6).alias("avg_price"),
+            F.round(exact_sum(F.col("l_discount")) / F.count(F.lit(1)), 6).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
         .orderBy("l_returnflag", "l_linestatus")
@@ -56,15 +51,15 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-Q1_ORACLE = """
+Q1_ORACLE = f"""
 SELECT l_returnflag, l_linestatus,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_quantity AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_qty,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_base_price,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount) AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_disc_price,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_charge,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_quantity AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) / count(*) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS avg_qty,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) / count(*) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS avg_price,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_discount AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) / count(*) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS avg_disc,
+  {round_sql(exact_sum_sql("l_quantity"), 6)} AS sum_qty,
+  {round_sql(exact_sum_sql("l_extendedprice"), 6)} AS sum_base_price,
+  {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount)"), 6)} AS sum_disc_price,
+  {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)"), 6)} AS sum_charge,
+  {round_sql(exact_sum_sql("l_quantity") + " / count(*)", 6)} AS avg_qty,
+  {round_sql(exact_sum_sql("l_extendedprice") + " / count(*)", 6)} AS avg_price,
+  {round_sql(exact_sum_sql("l_discount") + " / count(*)", 6)} AS avg_disc,
   count(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -94,15 +89,15 @@ def top_orders_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         joined.groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(_dsum(revenue), 6).alias("revenue"))
+        .agg(F.round(exact_sum(revenue), 6).alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
         .limit(10)
     )
 
 
-TOP_ORDERS_ORACLE = """
+TOP_ORDERS_ORACLE = f"""
 SELECT o_orderkey, o_orderdate, o_orderpriority,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount) AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS revenue
+       {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount)"), 6)} AS revenue
 FROM lineitem
 JOIN orders ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
@@ -126,14 +121,14 @@ def region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.rollup("r_name", "n_name")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            F.round(_dsum(F.col("c_acctbal")), 6).alias("total_acctbal"),
+            F.round(exact_sum(F.col("c_acctbal")), 6).alias("total_acctbal"),
         )
     )
 
 
-ROLLUP_ORACLE = """
+ROLLUP_ORACLE = f"""
 SELECT r_name, n_name, count(*) AS n_customers,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(c_acctbal AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS total_acctbal
+       {round_sql(exact_sum_sql("c_acctbal"), 6)} AS total_acctbal
 FROM customer
 JOIN nation ON c_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
@@ -147,13 +142,13 @@ def cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.round(_dsum(F.col("o_totalprice")), 6).alias("total_price"),
+        F.round(exact_sum(F.col("o_totalprice")), 6).alias("total_price"),
     )
 
 
-CUBE_ORACLE = """
+CUBE_ORACLE = f"""
 SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(o_totalprice AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS total_price
+       {round_sql(exact_sum_sql("o_totalprice"), 6)} AS total_price
 FROM orders
 GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """
@@ -278,17 +273,16 @@ def running_user_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select(
         "user_id",
         "event_id",
-        F.round(
-            F.sum(F.col("value").cast(_DEC)).over(w).cast("double"), 6
-        ).alias("running_value"),
+        F.round(exact_sum(F.col("value"), over=w), 6).alias("running_value"),
     )
 
 
-RUNNING_ORACLE = """
+RUNNING_ORACLE = f"""
 SELECT user_id, event_id,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(value AS STRING) AS DECIMAL(27,15))) OVER (
-         PARTITION BY user_id ORDER BY event_id
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE)
+       {round_sql(exact_sum_sql("value", over=(
+           "( PARTITION BY user_id ORDER BY event_id"
+           " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+       )), 6)}
          AS running_value
 FROM events
 """
@@ -428,15 +422,15 @@ def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.grouping_id().alias("gid"),
         F.count(F.lit(1)).alias("n_orders"),
-        F.round(_dsum(F.col("o_totalprice")), 6).alias("total_price"),
+        F.round(exact_sum(F.col("o_totalprice")), 6).alias("total_price"),
     )
 
 
-GROUPING_SETS_ORACLE = """
+GROUPING_SETS_ORACLE = f"""
 SELECT o_orderstatus, o_orderpriority,
        CAST(grouping(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
        count(*) AS n_orders,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(o_totalprice AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS total_price
+       {round_sql(exact_sum_sql("o_totalprice"), 6)} AS total_price
 FROM orders
 GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
 """
@@ -452,7 +446,7 @@ def pivot_status_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = (
         o.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(F.round(_dsum(F.col("o_totalprice")), 6))
+        .agg(F.round(exact_sum(F.col("o_totalprice")), 6))
     )
     return p.select(
         "o_orderpriority",
@@ -462,11 +456,19 @@ def pivot_status_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIVOT_ORACLE = """
+def _status_total_sql(status: str) -> str:
+    # FILTER has no exact_sum_sql form, so the exact sum is spelled out.
+    return (
+        f"CAST(CAST(sum(CAST(CAST(o_totalprice AS STRING) AS {DEC})) "
+        f"FILTER (WHERE o_orderstatus = '{status}') AS STRING) AS DOUBLE)"
+    )
+
+
+PIVOT_ORACLE = f"""
 SELECT o_orderpriority,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(o_totalprice AS STRING) AS DECIMAL(27,15))) FILTER (WHERE o_orderstatus = 'F') AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS total_F,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(o_totalprice AS STRING) AS DECIMAL(27,15))) FILTER (WHERE o_orderstatus = 'O') AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS total_O,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(o_totalprice AS STRING) AS DECIMAL(27,15))) FILTER (WHERE o_orderstatus = 'P') AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS total_P
+  {round_sql(_status_total_sql("F"), 6)} AS total_F,
+  {round_sql(_status_total_sql("O"), 6)} AS total_O,
+  {round_sql(_status_total_sql("P"), 6)} AS total_P
 FROM orders
 GROUP BY o_orderpriority
 """
@@ -539,7 +541,7 @@ def views_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("user_id", "purchase_id").agg(
         F.count(F.col("v_ns")).alias("n_views_1h"),
         F.coalesce(
-            F.round(_dsum(F.col("v_value")), 6), F.lit(0.0)
+            F.round(exact_sum(F.col("v_value")), 6), F.lit(0.0)
         ).alias("view_value_1h"),
     )
 
@@ -554,7 +556,7 @@ v AS (SELECT user_id AS v_user, ts_ns AS v_ns, value AS v_value
       FROM e WHERE event_type = 'view')
 SELECT p.user_id, p.purchase_id,
        count(v.v_ns) AS n_views_1h,
-       coalesce(CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(v.v_value AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE), 0.0)
+       coalesce({round_sql(exact_sum_sql("v.v_value"), 6)}, 0.0)
          AS view_value_1h
 FROM p LEFT JOIN v
   ON p.user_id = v.v_user
@@ -600,14 +602,14 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         joined.groupBy("n_name")
-        .agg(F.round(_dsum(revenue), 6).alias("revenue"))
+        .agg(F.round(exact_sum(revenue), 6).alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("n_name"))
     )
 
 
-Q5_ORACLE = """
+Q5_ORACLE = f"""
 SELECT n_name,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount) AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS revenue
+       {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount)"), 6)} AS revenue
 FROM customer
 JOIN orders   ON c_custkey = o_custkey
 JOIN lineitem ON l_orderkey = o_orderkey
@@ -655,7 +657,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            F.round(_dsum(F.col("l_extendedprice")), 6).alias(
+            F.round(exact_sum(F.col("l_extendedprice")), 6).alias(
                 "small_qty_revenue"
             ),
         )
@@ -663,7 +665,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q17_ORACLE = """
+Q17_ORACLE = f"""
 WITH stats AS (
   SELECT l_partkey, l_quantity, l_extendedprice,
          sum(CAST(l_quantity AS BIGINT)) OVER (PARTITION BY l_partkey) AS sum_q,
@@ -671,7 +673,7 @@ WITH stats AS (
   FROM lineitem
 )
 SELECT p_brand, count(*) AS n_lines,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE)
+       {round_sql(exact_sum_sql("l_extendedprice"), 6)}
          AS small_qty_revenue
 FROM stats JOIN part ON l_partkey = p_partkey
 WHERE p_type = 'PROMO' AND CAST(l_quantity AS BIGINT) * 5 * n < sum_q
@@ -724,7 +726,7 @@ def nation_accounts_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_nationkey").alias("nationkey"))
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            F.round(_dsum(F.col("c_acctbal")), 6).alias("cust_balance"),
+            F.round(exact_sum(F.col("c_acctbal")), 6).alias("cust_balance"),
         )
     )
     s = (
@@ -732,7 +734,7 @@ def nation_accounts_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("s_nationkey").alias("nationkey"))
         .agg(
             F.count(F.lit(1)).alias("n_suppliers"),
-            F.round(_dsum(F.col("s_acctbal")), 6).alias("supp_balance"),
+            F.round(exact_sum(F.col("s_acctbal")), 6).alias("supp_balance"),
         )
     )
     return (
@@ -747,14 +749,14 @@ def nation_accounts_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-FULL_OUTER_ORACLE = """
+FULL_OUTER_ORACLE = f"""
 WITH c AS (
   SELECT c_nationkey AS nationkey, count(*) AS n_customers,
-         CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(c_acctbal AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS cust_balance
+         {round_sql(exact_sum_sql("c_acctbal"), 6)} AS cust_balance
   FROM customer GROUP BY c_nationkey
 ), s AS (
   SELECT s_nationkey AS nationkey, count(*) AS n_suppliers,
-         CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(s_acctbal AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS supp_balance
+         {round_sql(exact_sum_sql("s_acctbal"), 6)} AS supp_balance
   FROM supplier GROUP BY s_nationkey
 )
 SELECT coalesce(c.nationkey, s.nationkey) AS nationkey,
@@ -787,13 +789,13 @@ def order_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ranked.groupBy("o_orderpriority", "decile").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.round(_dsum(F.col("o_totalprice")), 6).alias("total_price"),
+        F.round(exact_sum(F.col("o_totalprice")), 6).alias("total_price"),
         F.round(F.max("pr"), 6).alias("max_percent_rank"),
         F.round(F.max("cd"), 6).alias("max_cume_dist"),
     )
 
 
-DECILES_ORACLE = """
+DECILES_ORACLE = f"""
 WITH ranked AS (
   SELECT o_orderpriority, o_totalprice,
          ntile(10) OVER w AS decile,
@@ -804,9 +806,9 @@ WITH ranked AS (
                ORDER BY o_totalprice, o_orderkey)
 )
 SELECT o_orderpriority, decile, count(*) AS n_orders,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(o_totalprice AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS total_price,
-       CAST(CAST(round(CAST(CAST(max(pr) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS max_percent_rank,
-       CAST(CAST(round(CAST(CAST(max(cd) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS max_cume_dist
+       {round_sql(exact_sum_sql("o_totalprice"), 6)} AS total_price,
+       {round_sql("max(pr)", 6)} AS max_percent_rank,
+       {round_sql("max(cd)", 6)} AS max_cume_dist
 FROM ranked
 GROUP BY o_orderpriority, decile
 """
@@ -833,16 +835,15 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(_dsum(rev), 6).alias("revenue"))
+        .agg(F.round(exact_sum(rev), 6).alias("revenue"))
         .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
         .limit(10)
     )
 
 
-Q3_ORACLE = """
+Q3_ORACLE = f"""
 SELECT l_orderkey, o_orderdate, o_orderpriority,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1 - l_discount)
-                           AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS revenue
+       {round_sql(exact_sum_sql("l_extendedprice * (1 - l_discount)"), 6)} AS revenue
 FROM customer
 JOIN orders   ON c_custkey = o_custkey
 JOIN lineitem ON l_orderkey = o_orderkey
@@ -877,7 +878,7 @@ def customer_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORDER_GAPS_ORACLE = """
+ORDER_GAPS_ORACLE = f"""
 WITH gaps AS (
   SELECT o_custkey,
          datediff('day',
@@ -887,7 +888,7 @@ WITH gaps AS (
   FROM orders
 )
 SELECT o_custkey, count(*) AS n_gaps,
-       CAST(CAST(round(CAST(CAST(avg(gap_days) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS avg_gap_days,
+       {round_sql("avg(gap_days)", 6)} AS avg_gap_days,
        max(gap_days) AS max_gap_days
 FROM gaps
 WHERE gap_days IS NOT NULL
@@ -917,19 +918,17 @@ def trailing_hour_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         F.count(F.lit(1)).over(w).alias("n_events_1h"),
-        F.round(
-            F.sum(F.col("value").cast(_DEC)).over(w).cast("double"), 6
-        ).alias("value_1h"),
+        F.round(exact_sum(F.col("value"), over=w), 6).alias("value_1h"),
     )
 
 
-TRAILING_HOUR_ORACLE = """
+TRAILING_HOUR_ORACLE = f"""
 WITH e AS (
   SELECT event_id, epoch_ns(ts) AS ts_ns, user_id, value FROM events
 )
 SELECT user_id, event_id,
        count(*) OVER w AS n_events_1h,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(value AS STRING) AS DECIMAL(27,15))) OVER w AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE)
+       {round_sql(exact_sum_sql("value", over="w"), 6)}
          AS value_1h
 FROM e
 WINDOW w AS (PARTITION BY user_id ORDER BY ts_ns

@@ -24,8 +24,8 @@ the first battery (operators/relational.py) didn't cover:
 Scale notes (100 TB): every query filters dims *before* joining and
 broadcasts only provably-small sides (nation/supplier/filtered-groups);
 fact-fact joins shuffle on their natural keys; aggregates use partial
-(map-side) combine via plain groupBy. Sums accumulate in DECIMAL(27,15)
-so results are order-independent and bit-identical to the DuckDB
+(map-side) combine via plain groupBy. Sums are exact decimal sums
+(``functions/exact.py``) so results are order-independent and bit-identical to the DuckDB
 oracle regardless of partitioning.
 """
 
@@ -34,13 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
-
-_DEC = "decimal(27,15)"
-
-
-def _dsum(col) -> F.Column:
-    return F.sum(col.cast(_DEC)).cast("double")
 
 
 def _revenue() -> F.Column:
@@ -98,17 +93,17 @@ def q7_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_nation",
             F.year("l_shipdate").cast("int").alias("l_year"),
         )
-        .agg(F.round(_dsum(F.col("revenue")), 6).alias("revenue"))
+        .agg(F.round(exact_sum(F.col("revenue")), 6).alias("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
     return out
 
 
-Q7_ORACLE = """
+Q7_ORACLE = f"""
 WITH nat AS (SELECT * FROM nation WHERE n_regionkey IN (0, 1))
 SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
        CAST(year(l_shipdate) AS INT) AS l_year,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount) AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS revenue
+       {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount)"), 6)} AS revenue
 FROM lineitem
 JOIN supplier ON l_suppkey = s_suppkey
 JOIN nat sn ON s_nationkey = sn.n_nationkey
@@ -146,16 +141,16 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", F.col("n_name").alias("nation"))
-        .agg(F.round(_dsum(F.col("revenue")), 6).alias("revenue"))
+        .agg(F.round(exact_sum(F.col("revenue")), 6).alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
         .limit(20)
     )
     return out
 
 
-Q10_ORACLE = """
+Q10_ORACLE = f"""
 SELECT c_custkey, c_name, c_acctbal, n_name AS nation,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount) AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS revenue
+       {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount)"), 6)} AS revenue
 FROM lineitem
 JOIN orders ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
@@ -223,22 +218,25 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (
         l.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .agg(
-            F.round(_dsum(promo), 6).alias("promo_revenue"),
-            F.round(_dsum(F.col("revenue")), 6).alias("total_revenue"),
+            F.round(exact_sum(promo), 6).alias("promo_revenue"),
+            F.round(exact_sum(F.col("revenue")), 6).alias("total_revenue"),
             F.round(
-                F.lit(100.0) * _dsum(promo) / _dsum(F.col("revenue")), 6
+                F.lit(100.0) * exact_sum(promo) / exact_sum(F.col("revenue")), 6
             ).alias("promo_share"),
         )
     )
     return out
 
 
-Q14_ORACLE = """
+_REVENUE_SQL = "l_extendedprice * (1.0 - l_discount)"
+_PROMO_SQL = f"CASE WHEN p_type = 'PROMO' THEN {_REVENUE_SQL} ELSE 0.0 END"
+
+Q14_ORACLE = f"""
 SELECT
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS promo_revenue,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount) AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS total_revenue,
-  CAST(CAST(round(CAST(CAST(100.0 * CAST(CAST(sum(CAST(CAST(CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE)
-        / CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount) AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS promo_share
+  {round_sql(exact_sum_sql(_PROMO_SQL), 6)} AS promo_revenue,
+  {round_sql(exact_sum_sql(_REVENUE_SQL), 6)} AS total_revenue,
+  {round_sql("100.0 * " + exact_sum_sql(_PROMO_SQL) + " / "
+             + exact_sum_sql(_REVENUE_SQL), 6)} AS promo_share
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
 WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -259,7 +257,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     big = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
-        .agg(_dsum(F.col("l_quantity")).alias("sum_qty"))
+        .agg(exact_sum(F.col("l_quantity")).alias("sum_qty"))
         .filter(F.col("sum_qty") > 250.0)
     )
     o = load_table(spark, sf_dir, "orders").select(
@@ -279,11 +277,11 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-Q18_ORACLE = """
+Q18_ORACLE = f"""
 SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice,
-       CAST(CAST(round(CAST(CAST(sum_qty AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_qty
+       {round_sql("sum_qty", 6)} AS sum_qty
 FROM (
-  SELECT l_orderkey, CAST(CAST(sum(CAST(CAST(l_quantity AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS sum_qty
+  SELECT l_orderkey, {exact_sum_sql("l_quantity")} AS sum_qty
   FROM lineitem GROUP BY l_orderkey HAVING sum_qty > 250.0
 ) big
 JOIN orders ON o_orderkey = big.l_orderkey
@@ -319,16 +317,16 @@ def q19_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         l.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .filter(bracket)
         .agg(
-            F.round(_dsum(F.col("revenue")), 6).alias("revenue"),
+            F.round(exact_sum(F.col("revenue")), 6).alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
     return out
 
 
-Q19_ORACLE = """
+Q19_ORACLE = f"""
 SELECT
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount) AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS revenue,
+  {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount)"), 6)} AS revenue,
   count(*) AS n_lines
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
@@ -353,7 +351,9 @@ def q22_idle_high_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     avg_bal = (
         c.filter(F.col("c_acctbal") > 0.0)
-        .agg((F.sum(F.col("c_acctbal").cast(_DEC)) / F.count(F.lit(1)))
+        # Own type: a decimal quotient's scale follows the operand
+        # precision, so the wider DEC could move this double.
+        .agg((F.sum(F.col("c_acctbal").cast("decimal(27,15)")) / F.count(F.lit(1)))
              .cast("double").alias("avg_bal"))
     )
     recent = load_table(spark, sf_dir, "orders").filter(
@@ -366,19 +366,19 @@ def q22_idle_high_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy((F.col("c_nationkey") % 10).cast("int").alias("cntry"))
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.round(_dsum(F.col("c_acctbal")), 6).alias("totacctbal"),
+            F.round(exact_sum(F.col("c_acctbal")), 6).alias("totacctbal"),
         )
         .orderBy("cntry")
     )
     return out
 
 
-Q22_ORACLE = """
+Q22_ORACLE = f"""
 SELECT CAST(c_nationkey % 10 AS INT) AS cntry, count(*) AS numcust,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(c_acctbal AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS totacctbal
+       {round_sql(exact_sum_sql("c_acctbal"), 6)} AS totacctbal
 FROM customer
 WHERE c_acctbal > (
-        SELECT CAST(CAST(sum(CAST(CAST(c_acctbal AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) / count(*)
+        SELECT {exact_sum_sql("c_acctbal")} / count(*)
         FROM customer WHERE c_acctbal > 0.0
       )
   AND NOT EXISTS (
@@ -406,15 +406,15 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return l.agg(
         F.round(
-            _dsum(F.col("l_extendedprice") * F.col("l_discount")), 6
+            exact_sum(F.col("l_extendedprice") * F.col("l_discount")), 6
         ).alias("revenue"),
         F.count(F.lit(1)).alias("n_lines"),
     )
 
 
-Q6_ORACLE = """
+Q6_ORACLE = f"""
 SELECT
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * l_discount AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS revenue,
+  {round_sql(exact_sum_sql("l_extendedprice * l_discount"), 6)} AS revenue,
   count(*) AS n_lines
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -468,9 +468,9 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cust, F.col("o_custkey") == F.col("c_custkey"), "left_semi")
         .groupBy("o_year")
         .agg(
-            F.round(_dsum(in_region), 6).alias("region2_revenue"),
-            F.round(_dsum(F.col("revenue")), 6).alias("total_revenue"),
-            F.round(_dsum(in_region) / _dsum(F.col("revenue")), 6).alias(
+            F.round(exact_sum(in_region), 6).alias("region2_revenue"),
+            F.round(exact_sum(F.col("revenue")), 6).alias("total_revenue"),
+            F.round(exact_sum(in_region) / exact_sum(F.col("revenue")), 6).alias(
                 "mkt_share"
             ),
         )
@@ -479,12 +479,14 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-Q8_ORACLE = """
+_REGION2_SQL = f"CASE WHEN sn.n_regionkey = 2 THEN {_REVENUE_SQL} ELSE 0.0 END"
+
+Q8_ORACLE = f"""
 SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(CASE WHEN sn.n_regionkey = 2 THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS region2_revenue,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount) AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS total_revenue,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(CASE WHEN sn.n_regionkey = 2 THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE)
-        / CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount) AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS mkt_share
+  {round_sql(exact_sum_sql(_REGION2_SQL), 6)} AS region2_revenue,
+  {round_sql(exact_sum_sql(_REVENUE_SQL), 6)} AS total_revenue,
+  {round_sql(exact_sum_sql(_REGION2_SQL) + " / "
+             + exact_sum_sql(_REVENUE_SQL), 6)} AS mkt_share
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
 JOIN supplier ON l_suppkey = s_suppkey
@@ -520,7 +522,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < F.lit("1996-04-01"))
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(F.round(_dsum(_revenue()), 6).alias("total_revenue"))
+        .agg(F.round(exact_sum(_revenue()), 6).alias("total_revenue"))
     )
     best = rev.agg(F.max("total_revenue").alias("best"))
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -534,10 +536,10 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-Q15_ORACLE = """
+Q15_ORACLE = f"""
 WITH rev AS (
   SELECT l_suppkey AS supplier_no,
-         CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount) AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS total_revenue
+         {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount)"), 6)} AS total_revenue
   FROM lineitem
   WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
     AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'

@@ -28,8 +28,8 @@ preserved is the *shape* each query exists to exercise:
 Scale notes (100 TB): dims filter *before* joining and broadcast;
 every lineitem self-reference shuffles once on ``l_orderkey`` and is
 reused (semi + anti hang off the same shuffle key); aggregates use
-map-side partial combine; money sums accumulate in DECIMAL(27,15) so
-results are order-independent and bit-identical to the DuckDB oracle
+map-side partial combine; money sums are exact decimal sums
+(``functions/exact.py``) so results are order-independent and bit-identical to the DuckDB oracle
 regardless of partitioning or AQE decisions.
 """
 
@@ -38,13 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
-
-_DEC = "decimal(27,15)"
-
-
-def _dsum(col) -> F.Column:
-    return F.sum(col.cast(_DEC)).cast("double")
 
 
 def _revenue() -> F.Column:
@@ -112,7 +107,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q2_ORACLE = """
+Q2_ORACLE = f"""
 WITH offers AS (
   SELECT p_partkey, p_brand, s_suppkey, s_name, s_acctbal, n_name,
          min(l_extendedprice / l_quantity) AS unit_cost
@@ -124,7 +119,7 @@ WITH offers AS (
   GROUP BY 1, 2, 3, 4, 5, 6
 )
 SELECT s_acctbal, s_name, n_name, p_partkey, p_brand,
-       CAST(CAST(round(CAST(CAST(unit_cost AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS unit_cost
+       {round_sql("unit_cost", 6)} AS unit_cost
 FROM offers o
 WHERE unit_cost = (
   SELECT min(unit_cost) FROM offers i WHERE i.p_partkey = o.p_partkey
@@ -168,17 +163,15 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("int").alias("o_year"),
         )
-        .agg(F.round(_dsum(amount), 6).alias("sum_profit"))
+        .agg(F.round(exact_sum(amount), 6).alias("sum_profit"))
         .orderBy("nation", F.desc("o_year"))
     )
 
 
-Q9_ORACLE = """
+Q9_ORACLE = f"""
 SELECT n_name AS nation,
        CAST(year(o_orderdate) AS INT) AS o_year,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount)
-                           - 0.6 * p_retailprice * l_quantity
-                           AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_profit
+       {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount) - 0.6 * p_retailprice * l_quantity"), 6)} AS sum_profit
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
 JOIN supplier ON l_suppkey = s_suppkey
@@ -217,10 +210,10 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_partkey", "l_suppkey", _revenue().alias("rev"))
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(F.col("l_partkey").alias("p_partkey"))
-        .agg(F.round(_dsum(F.col("rev")), 6).alias("part_value"))
+        .agg(F.round(exact_sum(F.col("rev")), 6).alias("part_value"))
     )
     threshold = per_part.agg(
-        (F.sum(F.col("part_value").cast(_DEC)).cast("double") * F.lit(0.001))
+        (exact_sum(F.col("part_value")) * F.lit(0.001))
         .alias("cut")
     )
     return (
@@ -231,11 +224,10 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q11_ORACLE = """
+Q11_ORACLE = f"""
 WITH per_part AS (
   SELECT l_partkey AS p_partkey,
-         CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount)
-                             AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS part_value
+         {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount)"), 6)} AS part_value
   FROM lineitem
   JOIN supplier ON l_suppkey = s_suppkey
   JOIN nation ON s_nationkey = n_nationkey
@@ -245,7 +237,7 @@ WITH per_part AS (
 SELECT p_partkey, part_value
 FROM per_part
 WHERE part_value > (
-  SELECT CAST(CAST(sum(CAST(CAST(part_value AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) * 0.001
+  SELECT {exact_sum_sql("part_value")} * 0.001
   FROM per_part
 )
 ORDER BY part_value DESC, p_partkey

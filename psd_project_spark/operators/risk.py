@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from psd_project_spark.config import DEFAULT_CONFIG, MEASURES
+from psd_project_spark.functions.exact import round_sql
 from psd_project_spark.functions.measures import (
     grouped_measures,
     grouped_measures_oracle_sql,
@@ -94,15 +95,14 @@ WITH seqd AS (
   FROM win WHERE len(l) = {n}
 )
 SELECT user_id, seq,
-  CAST(CAST(round(CAST(CAST(mean AS STRING) AS DECIMAL(38,21)), {digits}) AS STRING) AS DOUBLE) AS mean,
-  CAST(CAST(round(CAST(CAST((l[{n // 2}] + l[{n // 2 + 1}]) / 2 AS STRING) AS DECIMAL(38,21)), {digits}) AS STRING) AS DOUBLE) AS median,
-  CAST(CAST(round(CAST(CAST(l[{n // 10 + 1}] AS STRING) AS DECIMAL(38,21)), {digits}) AS STRING) AS DOUBLE) AS q10,
-  CAST(CAST(round(CAST(CAST((l[1] + l[2] + l[3]) / 3 AS STRING) AS DECIMAL(38,21)), {digits}) AS STRING) AS DOUBLE) AS tail_mean,
-  CAST(CAST(round(CAST(CAST(mean - list_aggregate(list_transform(l, x -> abs(x - mean)), 'sum')
-        / {2 * n} AS STRING) AS DECIMAL(38,21)), {digits}) AS STRING) AS DOUBLE) AS sm1,
-  CAST(CAST(round(CAST(CAST(mean - list_aggregate(
-          list_transform(generate_series(1, {n}), i -> (2 * i - {n + 1}) * l[i]),
-          'sum') / {n * n} AS STRING) AS DECIMAL(38,21)), {digits}) AS STRING) AS DOUBLE) AS sm2
+  {round_sql("mean", digits)} AS mean,
+  {round_sql(f"(l[{n // 2}] + l[{n // 2 + 1}]) / 2", digits)} AS median,
+  {round_sql(f"l[{n // 10 + 1}]", digits)} AS q10,
+  {round_sql("(l[1] + l[2] + l[3]) / 3", digits)} AS tail_mean,
+  {round_sql("mean - list_aggregate(list_transform(l, x -> abs(x - mean)), 'sum')"
+             f" / {2 * n}", digits)} AS sm1,
+  {round_sql("mean - list_aggregate( list_transform(generate_series(1, "
+             f"{n}), i -> (2 * i - {n + 1}) * l[i]), 'sum') / {n * n}", digits)} AS sm2
 FROM m
 """
 
@@ -270,14 +270,16 @@ def portfolio_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PORTFOLIO_ORACLE = """
+PORTFOLIO_ORACLE = f"""
 SELECT l_orderkey, l_linenumber,
-       CAST(CAST(round(CAST(CAST(0.0 + CAST(l_quantity AS DOUBLE) * 0.2
-                 + CAST(l_extendedprice AS DOUBLE) * 0.2
-                 + CAST(l_discount AS DOUBLE) * 0.2
-                 + CAST(l_tax AS DOUBLE) * 0.15
-                 + CAST(l_partkey AS DOUBLE) * 0.15
-                 + CAST(l_suppkey AS DOUBLE) * 0.1 AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS portfolio_value
+       {round_sql(
+           "0.0 + CAST(l_quantity AS DOUBLE) * 0.2"
+           " + CAST(l_extendedprice AS DOUBLE) * 0.2"
+           " + CAST(l_discount AS DOUBLE) * 0.2"
+           " + CAST(l_tax AS DOUBLE) * 0.15"
+           " + CAST(l_partkey AS DOUBLE) * 0.15"
+           " + CAST(l_suppkey AS DOUBLE) * 0.1", 6
+       )} AS portfolio_value
 FROM lineitem
 """
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from psd_project_spark.functions.exact import round_sql
 from psd_project_spark.operators.text_analysis import doc_stats
 from psd_project_spark.sources.registry import load_table
 
@@ -165,7 +166,7 @@ WITH d AS (
 )
 SELECT lang, CAST(sum(keep) AS BIGINT) AS n_kept,
        count(*) AS n_total,
-       CAST(CAST(round(CAST(CAST(CAST(sum(keep) AS DOUBLE) / count(*) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS kept_rate
+       {round_sql("CAST(sum(keep) AS DOUBLE) / count(*)", 6)} AS kept_rate
 FROM d
 GROUP BY lang
 """

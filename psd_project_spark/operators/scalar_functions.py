@@ -10,9 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
-
-_DEC = "decimal(27,15)"
 
 
 # --- JSON extraction (events.props) ------------------------------------------
@@ -30,19 +29,16 @@ def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.min("k").alias("min_k"),
             F.max("k").alias("max_k"),
-            F.round(
-                F.sum(F.col("k").cast(_DEC)).cast("double") / F.count(F.lit(1)), 6
-            ).alias("avg_k"),
+            F.round(exact_sum(F.col("k")) / F.count(F.lit(1)), 6).alias("avg_k"),
         )
     )
 
 
-JSON_PROPS_ORACLE = """
+JSON_PROPS_ORACLE = f"""
 SELECT event_type, count(*) AS n,
   min(CAST(json_extract(props, '$.k') AS INT)) AS min_k,
   max(CAST(json_extract(props, '$.k') AS INT)) AS max_k,
-  CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(CAST(json_extract(props, '$.k') AS INT) AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE)
-        / count(*) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS avg_k
+  {round_sql(exact_sum_sql("CAST(json_extract(props, '$.k') AS INT)") + " / count(*)", 6)} AS avg_k
 FROM events
 GROUP BY event_type
 """
@@ -61,19 +57,19 @@ def orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.round(
-                F.sum(F.col("o_totalprice").cast(_DEC)).cast("double"), 6
+                exact_sum(F.col("o_totalprice")), 6
             ).alias("total_price"),
             F.min(F.date_trunc("month", F.col("o_orderdate"))).alias("month_start"),
         )
     )
 
 
-ORDERS_BY_MONTH_ORACLE = """
+ORDERS_BY_MONTH_ORACLE = f"""
 SELECT CAST(year(o_orderdate) AS INT) AS order_year,
        CAST(quarter(o_orderdate) AS INT) AS order_quarter,
        CAST(month(o_orderdate) AS INT) AS order_month,
        count(*) AS n_orders,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(o_totalprice AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS total_price,
+       {round_sql(exact_sum_sql("o_totalprice"), 6)} AS total_price,
        CAST(min(date_trunc('month', o_orderdate)) AS TIMESTAMP) AS month_start
 FROM orders
 GROUP BY 1, 2, 3

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from psd_project_spark import durable
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
 
 #: Columns of the SCD2 state/event core (shared by batch + stream).
@@ -967,13 +968,12 @@ def cdf_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         ckpt=scratch_dir("psd_cdfmv_ckpt_"),
     )
     sign = F.when(F.col("op") == "I", F.lit(1)).otherwise(F.lit(-1))
-    dec = "decimal(27,15)"
     return (
         feed.groupBy("user_id")
         .agg(
             F.sum(sign).cast("long").alias("n_rows"),
             F.round(
-                F.sum((sign * F.col("value")).cast(dec)).cast("double"), 6
+                exact_sum(sign * F.col("value")), 6
             ).alias("sum_value"),
             F.sum(
                 F.when(F.col("is_current"), sign).otherwise(F.lit(0))
@@ -1328,6 +1328,7 @@ def apply_feed_epoch(
                 f"consumer; register consumers before the feed starts"
             )
         sign = F.when(F.col("op") == "I", F.lit(1)).otherwise(F.lit(-1))
+        # Own type: the consumer state's sum_value_dec column is on disk.
         dec = "decimal(27,15)"
         delta = (
             spark.read.parquet(feed_path)
@@ -1756,7 +1757,7 @@ def cdf_consumer_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: The same view computed directly from the final SCD2 state — the
 #: feed must carry exactly the information to reach it incrementally.
-CDF_VIEW_ORACLE = """
+CDF_VIEW_ORACLE = f"""
 WITH s AS (
   SELECT user_id, value,
          lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -1765,9 +1766,7 @@ WITH s AS (
 )
 SELECT user_id,
        count(*) AS n_rows,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(value
-         AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING)
-         AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_value,
+       {round_sql(exact_sum_sql("value"), 6)} AS sum_value,
        CAST(sum(CASE WHEN valid_to IS NULL THEN 1 ELSE 0 END) AS BIGINT)
          AS n_current
 FROM s GROUP BY 1 ORDER BY 1

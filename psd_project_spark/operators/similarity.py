@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from psd_project_spark.functions import text as T
 from psd_project_spark.functions import vectors as V
 from psd_project_spark.functions.caching import transient_cache
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table, spread_small
 
 #: Fixed query set and result size.
@@ -534,11 +535,7 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("pos", F.col("pos").cast("long"))
     return exploded.groupBy("label", "pos").agg(
         F.count(F.lit(1)).alias("n_vecs"),
-        F.round(
-            F.sum(F.col("val").cast("decimal(27,15)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("centroid_val"),
+        F.round(exact_sum(F.col("val")) / F.count(F.lit(1)), 6).alias("centroid_val"),
     )
 
 
@@ -550,7 +547,7 @@ WITH e AS (
   FROM e, unnest(generate_series(0, len(v) - 1)) AS t(i)
 )
 SELECT label, pos, count(*) AS n_vecs,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(val AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) / count(*) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE)
+       {round_sql(exact_sum_sql("val") + " / count(*)", 6)}
          AS centroid_val
 FROM exploded
 GROUP BY label, pos
@@ -637,12 +634,7 @@ def _train_codebook(
             assigned = assigned.cache()
         if collect_stats:
             stats = assigned.agg(
-                F.round(
-                    F.sum(F.col("d2").cast("decimal(27,15)")).cast(
-                        "double"
-                    ),
-                    6,
-                ),
+                F.round(exact_sum(F.col("d2")), 6),
                 F.countDistinct("cid"),
             ).collect()[0]
             report.append((it, float(stats[0]), int(stats[1])))
@@ -666,12 +658,7 @@ def _centroid_update(assigned: DataFrame, loop_parts: int = 4) -> dict:
         assigned.select("cid", F.posexplode("_v").alias("pos", "val"))
         .repartition(loop_parts, "cid", "pos")
         .groupBy("cid", "pos")
-        .agg(
-            (
-                F.sum(F.col("val").cast("decimal(27,15)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("cval")
-        )
+        .agg((exact_sum(F.col("val")) / F.count(F.lit(1))).alias("cval"))
         .repartition(loop_parts, "cid")
         .groupBy("cid")
         .agg(
@@ -961,7 +948,7 @@ def _kmeans_cte_list(k: int = K_CLUSTERS, iters: int = KMEANS_ITERS,
       over the same ``(x-y)*(x-y)`` IEEE terms in the same order, so
       every distance double is bit-identical.
     - argmin tie-break is ``ORDER BY d2, cid`` in both.
-    - centroid update is an order-independent DECIMAL(27,15) sum cast
+    - centroid update is an order-independent exact decimal sum cast
       to double, divided by a bigint count — identical on both sides.
     """
     # one shared distance/assignment template per iteration
@@ -984,7 +971,7 @@ def _kmeans_cte_list(k: int = K_CLUSTERS, iters: int = KMEANS_ITERS,
     def update(n: int) -> str:
         return f"""u{n} AS (
   SELECT cid, t.i AS pos,
-         CAST(CAST(sum(CAST(CAST(v[t.i] AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) / count(*) AS cval
+         {exact_sum_sql("v[t.i]")} / count(*) AS cval
   FROM a{n}, (SELECT unnest(generate_series(1, {dim})) AS i) t
   GROUP BY cid, t.i
 ), c{n} AS (
@@ -1015,7 +1002,7 @@ def _kmeans_oracle_sql(k: int = K_CLUSTERS, iters: int = KMEANS_ITERS,
     for it in range(1, iters + 1):
         reports.append(
             f"SELECT CAST({it} AS INT) AS iteration, "
-            f"(SELECT CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(d2 AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) "
+            f"(SELECT {round_sql(exact_sum_sql('d2'), 6)} "
             f"FROM a{it}) AS inertia, "
             f"(SELECT CAST(count(DISTINCT cid) AS INT) FROM a{it}) "
             f"AS n_active_clusters"

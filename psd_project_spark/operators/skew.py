@@ -29,9 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psd_project_spark.functions.exact import DEC, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
-
-_DEC = "decimal(27,15)"
 
 #: Salt fan-out per hot key. Sized to the reducer count that should
 #: share one hot key's load; 16 spreads a 20%-of-all-rows key over 16
@@ -48,7 +47,7 @@ def salted_agg(df: DataFrame, key: str, salt_src: str) -> DataFrame:
         .groupBy(key, "_salt")
         .agg(
             F.count(F.lit(1)).alias("_n"),
-            F.sum(F.col("value").cast(_DEC)).alias("_sum"),
+            F.sum(F.col("value").cast(DEC)).alias("_sum"),
         )
     )
     return partial.groupBy(key).agg(
@@ -76,10 +75,10 @@ def salted_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return totals.join(users, "event_type")
 
 
-SALTED_ORACLE = """
+SALTED_ORACLE = f"""
 SELECT event_type,
        count(*) AS n_events,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(value AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_value,
+       {round_sql(exact_sum_sql("value"), 6)} AS sum_value,
        count(DISTINCT user_id) AS n_users,
        max(per_user) AS max_events_per_user
 FROM (

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from psd_project_spark.functions import text as T
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.functions.text_udfs import (
     minhash_sig_udf,
     shingles_udf,
@@ -150,13 +151,15 @@ WITH t AS (
   FROM t
 )
 SELECT doc_id, lang, source, n_tokens, n_subword_tokens, n_distinct_tokens,
-  CAST(CAST(round(CAST(CAST(n_distinct_tokens / CAST(n_tokens AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS ttr,
-  CAST(CAST(round(CAST(CAST(char_sum / CAST(n_tokens AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS avg_token_len,
-  CAST(CAST(round(CAST(CAST(n_punct / CAST(length(text) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS punct_ratio,
-  CAST(CAST(round(CAST(CAST(least(CAST(1.0 AS DOUBLE), n_tokens / CAST(50.0 AS DOUBLE))
-        * (CAST(0.3 AS DOUBLE) + CAST(0.7 AS DOUBLE)
-           * (n_distinct_tokens / CAST(n_tokens AS DOUBLE)))
-        * (CAST(1.0 AS DOUBLE) - n_punct / CAST(length(text) AS DOUBLE)) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE)
+  {round_sql("n_distinct_tokens / CAST(n_tokens AS DOUBLE)", 6)} AS ttr,
+  {round_sql("char_sum / CAST(n_tokens AS DOUBLE)", 6)} AS avg_token_len,
+  {round_sql("n_punct / CAST(length(text) AS DOUBLE)", 6)} AS punct_ratio,
+  {round_sql(
+      "least(CAST(1.0 AS DOUBLE), n_tokens / CAST(50.0 AS DOUBLE))"
+      " * (CAST(0.3 AS DOUBLE) + CAST(0.7 AS DOUBLE)"
+      " * (n_distinct_tokens / CAST(n_tokens AS DOUBLE)))"
+      " * (CAST(1.0 AS DOUBLE) - n_punct / CAST(length(text) AS DOUBLE))", 6
+  )}
     AS quality_score
 FROM s
 """
@@ -245,7 +248,7 @@ def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs_kept"),
         F.sum("n_tokens").alias("total_tokens"),
         F.round(
-            F.sum(F.col("quality_score").cast("decimal(27,15)")).cast("double")
+            exact_sum(F.col("quality_score"))
             / F.count(F.lit(1)),
             6,
         ).alias("avg_quality"),
@@ -256,8 +259,7 @@ CORPUS_FILTER_ORACLE = f"""
 WITH stats AS ({DOC_STATS_ORACLE})
 SELECT lang, count(*) AS n_docs_kept,
        CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(quality_score AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE)
-             / count(*) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS avg_quality
+       {round_sql(exact_sum_sql("quality_score") + " / count(*)", 6)} AS avg_quality
 FROM stats
 WHERE n_tokens >= {MIN_TOKENS} AND quality_score >= {MIN_QUALITY}
 GROUP BY lang
@@ -295,7 +297,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_tokens").alias("total_tokens"),
         F.sum("n_subword_tokens").alias("total_subword_tokens"),
         F.round(
-            F.sum(F.col("quality_score").cast("decimal(27,15)")).cast("double")
+            exact_sum(F.col("quality_score"))
             / F.count(F.lit(1)),
             6,
         ).alias("avg_quality"),
@@ -314,8 +316,7 @@ kept AS (
 SELECT lang, source, count(*) AS n_docs,
        CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
        CAST(sum(n_subword_tokens) AS BIGINT) AS total_subword_tokens,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(quality_score AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE)
-             / count(*) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS avg_quality
+       {round_sql(exact_sum_sql("quality_score") + " / count(*)", 6)} AS avg_quality
 FROM stats JOIN kept USING (doc_id)
 WHERE n_tokens >= {MIN_TOKENS} AND quality_score >= {MIN_QUALITY}
 GROUP BY lang, source
@@ -396,8 +397,7 @@ WITH t AS (
   SELECT count(*) AS _n FROM documents
 ), scored AS (
   SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-         CAST(CAST(round(CAST(CAST(CAST(tf.tf AS DOUBLE)
-               * (CAST(n._n AS DOUBLE) / CAST(dfreq.df AS DOUBLE)) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE)
+         {round_sql("CAST(tf.tf AS DOUBLE) * (CAST(n._n AS DOUBLE) / CAST(dfreq.df AS DOUBLE))", 6)}
            AS score
   FROM tf JOIN dfreq USING (term) CROSS JOIN n
 ), ranked AS (
@@ -538,7 +538,7 @@ WITH base AS (
     {df_defs}
   FROM base
 )
-SELECT doc_id, CAST(CAST(round(CAST(CAST({contribs} AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS score
+SELECT doc_id, {round_sql(contribs, 6)} AS score
 FROM base, stats
 WHERE tf_0 + tf_1 + tf_2 > 0
 ORDER BY score DESC, doc_id
@@ -700,9 +700,8 @@ WITH t AS (
   SELECT bigram, count(*) AS corpus_n FROM bgr GROUP BY 1
 )
 SELECT doc_id, count(*) AS n_bigrams,
-  CAST(CAST(round(CAST(CAST(CAST(sum(corpus_n) AS DOUBLE) / count(*) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS avg_corpus_freq,
-  CAST(CAST(round(CAST(CAST(CAST(sum(CASE WHEN corpus_n <= {RARE_BIGRAM_MAX} THEN 1 ELSE 0 END) AS DOUBLE)
-        / count(*) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS rare_frac
+  {round_sql("CAST(sum(corpus_n) AS DOUBLE) / count(*)", 6)} AS avg_corpus_freq,
+  {round_sql(f"CAST(sum(CASE WHEN corpus_n <= {RARE_BIGRAM_MAX} THEN 1 ELSE 0 END) AS DOUBLE) / count(*)", 6)} AS rare_frac
 FROM bgr JOIN model USING (bigram)
 GROUP BY doc_id
 """
@@ -736,7 +735,8 @@ def _dsir_ln_stages():
     # casts round differently across engines on irrational values, but
     # round()-to-integer of the SAME double is identical — and integer
     # sums are exact and order-independent (the vectors.py CSCALE
-    # discipline).
+    # discipline). Integer rounding (no digits, then BIGINT): not
+    # round_sql's shape.
     stages.append(
         (
             "wq",
@@ -865,7 +865,7 @@ scored AS (
   FROM bgr JOIN {stage_sel} USING (bigram) GROUP BY 1
 )
 SELECT d.doc_id, d.lang, coalesce(n_bigrams, 0) AS n_bigrams,
-       CAST(CAST(round(CAST(CAST(CAST(swq AS DOUBLE) / 1000000000.0 AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS dsir_weight
+       {round_sql("CAST(swq AS DOUBLE) / 1000000000.0", 6)} AS dsir_weight
 FROM documents d LEFT JOIN scored USING (doc_id)
 """
 
@@ -1096,8 +1096,8 @@ def _bpe_encode_oracle() -> str:
 SELECT d.doc_id,
        coalesce(n_words, 0) AS n_words,
        coalesce(n_tokens, 0) AS n_tokens,
-       CAST(CAST(round(CAST(CAST(CAST(n_tokens AS DOUBLE) / n_words AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS fertility,
-       CAST(CAST(round(CAST(CAST(CAST(n_word_chars AS DOUBLE) / n_tokens AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS chars_per_token
+       {round_sql("CAST(n_tokens AS DOUBLE) / n_words", 6)} AS fertility,
+       {round_sql("CAST(n_word_chars AS DOUBLE) / n_tokens", 6)} AS chars_per_token
 FROM documents d LEFT JOIN scored USING (doc_id)
 """
     )

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psd_project_spark.functions.exact import round_sql
 from psd_project_spark.functions.text import tokens_expr, tokens_sql
 from psd_project_spark.functions.caching import transient_cache
 from psd_project_spark.sources.registry import load_table, spread_small
@@ -333,8 +334,7 @@ WITH t AS (
 SELECT doc_id, count(*) AS n_chunks,
   CAST(sum(CASE WHEN n_docs >= {BOILER_MIN_DOCS} THEN 1 ELSE 0 END) AS BIGINT)
     AS n_boiler,
-  CAST(CAST(round(CAST(CAST(CAST(sum(CASE WHEN n_docs >= {BOILER_MIN_DOCS} THEN 1 ELSE 0 END) AS DOUBLE)
-        / count(*) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS boiler_frac
+  {round_sql(f"CAST(sum(CASE WHEN n_docs >= {BOILER_MIN_DOCS} THEN 1 ELSE 0 END) AS DOUBLE) / count(*)", 6)} AS boiler_frac
 FROM chunks JOIN freq USING (chunk)
 GROUP BY doc_id
 """

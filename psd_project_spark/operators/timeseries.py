@@ -26,9 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
-
-_DEC = "decimal(27,15)"
 
 
 # --- resample_ffill ----------------------------------------------------------
@@ -135,21 +134,19 @@ def partitioned_parquet_roundtrip(
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
             F.round(
-                F.sum(F.col("l_extendedprice").cast(_DEC)).cast("double"), 6
+                exact_sum(F.col("l_extendedprice")), 6
             ).alias("sum_price"),
-            F.round(
-                F.sum(F.col("l_quantity").cast(_DEC)).cast("double"), 6
-            ).alias("sum_qty"),
+            F.round(exact_sum(F.col("l_quantity")), 6).alias("sum_qty"),
         )
         .orderBy("l_linestatus")
     )
     return out
 
 
-ROUNDTRIP_ORACLE = """
+ROUNDTRIP_ORACLE = f"""
 SELECT l_linestatus, count(*) AS n_lines,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_price,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_quantity AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_qty
+       {round_sql(exact_sum_sql("l_extendedprice"), 6)} AS sum_price,
+       {round_sql(exact_sum_sql("l_quantity"), 6)} AS sum_qty
 FROM lineitem
 WHERE l_returnflag = 'R'
 GROUP BY l_linestatus
@@ -220,7 +217,7 @@ def _ewma_oracle() -> str:
     )
     return f"""
 SELECT event_id, user_id, epoch_ns(ts) AS ts_ns, value,
-       CAST(CAST(round(CAST(CAST(({terms}) / ({masks}) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS ewma8
+       {round_sql(f"({terms}) / ({masks})", 6)} AS ewma8
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts), event_id)
 """

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from psd_project_spark import durable
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
 
 #: Bits per dimension: 8 bins × 8 bins = 64 z-cells. Test-scale sizing
@@ -207,9 +208,7 @@ def zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZORDER_ORACLE = f"""
 SELECT o_orderpriority,
        count(*) AS n_orders,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(o_totalprice
-         AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING)
-         AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS revenue
+       {round_sql(exact_sum_sql("o_totalprice"), 6)} AS revenue
 FROM orders
 WHERE o_orderdate BETWEEN TIMESTAMP '{_D1.isoformat()} 00:00:00'
                       AND TIMESTAMP '{_D2.isoformat()} 00:00:00'
@@ -297,21 +296,17 @@ def _returnflag_agg(src: DataFrame) -> DataFrame:
     revenue per return flag) — ONE definition so every zone-map probe
     stays bit-identical to the oracle's decimal chain by construction
     (it appeared four times before the round-13 review)."""
-    dec = "decimal(27,15)"
     return (
         src.groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
             F.round(
-                F.sum(F.col("l_quantity").cast(dec)).cast("double"), 6
+                exact_sum(F.col("l_quantity")), 6
             ).alias("sum_qty"),
             F.round(
-                F.sum(
-                    (
-                        F.col("l_extendedprice")
-                        * (F.lit(1.0) - F.col("l_discount"))
-                    ).cast(dec)
-                ).cast("double"),
+                exact_sum(
+                    F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+                ),
                 6,
             ).alias("revenue"),
         )
@@ -324,13 +319,12 @@ def _priority_agg(src: DataFrame) -> DataFrame:
     revenue per priority) — same single-definition discipline as
     :func:`_returnflag_agg` (five inline copies before the round-13
     review)."""
-    dec = "decimal(27,15)"
     return (
         src.groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.round(
-                F.sum(F.col("o_totalprice").cast(dec)).cast("double"), 6
+                exact_sum(F.col("o_totalprice")), 6
             ).alias("revenue"),
         )
         .orderBy("o_orderpriority")
@@ -378,12 +372,8 @@ def zonemap_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZONEMAP_ORACLE = f"""
 SELECT l_returnflag,
        count(*) AS n_items,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_quantity
-         AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING)
-         AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_qty,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice
-         * (1.0 - l_discount) AS STRING) AS DECIMAL(27,15))) AS STRING)
-         AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE)
+       {round_sql(exact_sum_sql("l_quantity"), 6)} AS sum_qty,
+       {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount)"), 6)}
          AS revenue
 FROM lineitem
 WHERE l_shipdate BETWEEN TIMESTAMP '{_Z1}' AND TIMESTAMP '{_Z2}'
@@ -1116,12 +1106,8 @@ def zonemap_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZONEMAP_DELETE_ORACLE = f"""
 SELECT l_returnflag,
        count(*) AS n_items,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_quantity
-         AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING)
-         AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_qty,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice
-         * (1.0 - l_discount) AS STRING) AS DECIMAL(27,15))) AS STRING)
-         AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE)
+       {round_sql(exact_sum_sql("l_quantity"), 6)} AS sum_qty,
+       {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount)"), 6)}
          AS revenue
 FROM lineitem
 WHERE NOT (l_shipdate BETWEEN TIMESTAMP '{_DL1}' AND TIMESTAMP '{_DL2}')
@@ -1263,9 +1249,7 @@ def zorder_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZORDER_DELETE_ORACLE = f"""
 SELECT o_orderpriority,
        count(*) AS n_orders,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(o_totalprice
-         AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING)
-         AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS revenue
+       {round_sql(exact_sum_sql("o_totalprice"), 6)} AS revenue
 FROM orders
 WHERE NOT (o_custkey BETWEEN {_KC1} AND {_KC2})
 GROUP BY 1 ORDER BY 1
@@ -1657,12 +1641,8 @@ def stream_zonemap_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZONEMAP_RESUME_ORACLE = f"""
 SELECT l_returnflag,
        count(*) AS n_items,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_quantity
-         AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING)
-         AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_qty,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice
-         * (1.0 - l_discount) AS STRING) AS DECIMAL(27,15))) AS STRING)
-         AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE)
+       {round_sql(exact_sum_sql("l_quantity"), 6)} AS sum_qty,
+       {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount)"), 6)}
          AS revenue
 FROM lineitem
 WHERE l_orderkey % 5 = 2
@@ -1674,9 +1654,7 @@ GROUP BY 1 ORDER BY 1
 ZORDER_RESUME_ORACLE = f"""
 SELECT o_orderpriority,
        count(*) AS n_orders,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(o_totalprice
-         AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING)
-         AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS revenue
+       {round_sql(exact_sum_sql("o_totalprice"), 6)} AS revenue
 FROM orders
 WHERE o_orderkey % 5 = 2 OR NOT (o_custkey BETWEEN {_KC1} AND {_KC2})
 GROUP BY 1 ORDER BY 1

@@ -47,6 +47,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from psd_project_spark import durable
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 
 _SCHEMA_DDL = (
     "seq long, measure string, user_id long, measure_value double, "
@@ -245,12 +246,7 @@ def alert_log_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         parsed.groupBy("user_id", "measure")
         .agg(
             F.count(F.lit(1)).alias("n_alerts"),
-            F.round(
-                F.sum(F.col("measure_value").cast("decimal(27,15)")).cast(
-                    "double"
-                ),
-                6,
-            ).alias("sum_value"),
+            F.round(exact_sum(F.col("measure_value")), 6).alias("sum_value"),
         )
         .orderBy("user_id", "measure")
     )
@@ -263,7 +259,7 @@ def _roundtrip_oracle() -> str:
 WITH alerts AS ({_alerts_oracle()})
 SELECT user_id, measure,
        count(*) AS n_alerts,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(measure_value AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE)
+       {round_sql(exact_sum_sql("measure_value"), 6)}
          AS sum_value
 FROM alerts
 GROUP BY 1, 2

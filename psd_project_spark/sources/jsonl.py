@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
 
 EVENTS_JSONL_SCHEMA = StructType(
@@ -77,7 +78,7 @@ def events_jsonl_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(
-            F.sum(F.col("value").cast("decimal(27,15)")).cast("double"), 6
+            exact_sum(F.col("value")), 6
         ).alias("sum_value"),
         F.min("event_id").alias("min_event_id"),
         F.max("event_id").alias("max_event_id"),
@@ -85,9 +86,9 @@ def events_jsonl_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EVENTS_JSONL_ORACLE = """
+EVENTS_JSONL_ORACLE = f"""
 SELECT event_type, count(*) AS n_events,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(value AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_value,
+       {round_sql(exact_sum_sql("value"), 6)} AS sum_value,
        min(event_id) AS min_event_id,
        max(event_id) AS max_event_id,
        max(epoch_ns(ts)) AS max_ts_ns

@@ -27,6 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
 
 
@@ -72,10 +73,9 @@ def lineitem_orc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
             F.round(
-                F.sum(
-                    (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
-                    .cast("decimal(27,15)")
-                ).cast("double"),
+                exact_sum(
+                    F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+                ),
                 6,
             ).alias("revenue"),
             F.max("l_shipdate").alias("max_shipdate"),
@@ -84,10 +84,9 @@ def lineitem_orc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LINEITEM_ORC_ORACLE = """
+LINEITEM_ORC_ORACLE = f"""
 SELECT l_returnflag, count(*) AS n_lines,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(l_extendedprice * (1.0 - l_discount)
-                           AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS revenue,
+       {round_sql(exact_sum_sql("l_extendedprice * (1.0 - l_discount)"), 6)} AS revenue,
        max(l_shipdate) AS max_shipdate
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'

@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 )
 
 from psd_project_spark.config import DEFAULT_CONFIG
+from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.operators.risk import (
     MEASURES_WINDOW_ORACLE,
     _alerts_oracle,
@@ -214,7 +215,7 @@ def events_time_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(
-                F.sum(F.col("value").cast("decimal(27,15)")).cast("double"), 6
+                exact_sum(F.col("value")), 6
             ).alias("sum_value"),
         )
         .select(
@@ -231,7 +232,7 @@ def events_time_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(agg, mode="complete")
 
 
-EVENTS_TIME_WINDOWS_ORACLE = """
+EVENTS_TIME_WINDOWS_ORACLE = f"""
 WITH e AS (
   SELECT CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events
 ), w AS (
@@ -246,7 +247,7 @@ SELECT bucket_start AS window_start,
        bucket_start + INTERVAL 10 MINUTE AS window_end,
        event_type,
        count(*) AS n_events,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(value AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_value
+       {round_sql(exact_sum_sql("value"), 6)} AS sum_value
 FROM w
 GROUP BY bucket_start, event_type
 """
@@ -310,7 +311,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(
-                F.sum(F.col("value").cast("decimal(27,15)")).cast("double"), 6
+                exact_sum(F.col("value")), 6
             ).alias("sum_value"),
         )
         .select(
@@ -343,7 +344,7 @@ SELECT user_id,
        make_timestamp(min(ts_ns) // 1000) AS session_start,
        make_timestamp((max(ts_ns) + {SESSION_GAP_NS}) // 1000) AS session_end,
        count(*) AS n_events,
-       CAST(CAST(round(CAST(CAST(CAST(CAST(sum(CAST(CAST(value AS STRING) AS DECIMAL(27,15))) AS STRING) AS DOUBLE) AS STRING) AS DECIMAL(38,21)), 6) AS STRING) AS DOUBLE) AS sum_value
+       {round_sql(exact_sum_sql("value"), 6)} AS sum_value
 FROM sessions
 GROUP BY user_id, sid
 """

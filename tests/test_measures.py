@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from psd_project_spark.functions.measures import (
     grouped_measures,
+    grouped_measures_oracle_sql,
     sorted_array_measures,
 )
 
@@ -101,6 +102,29 @@ def test_measure_invariants(spark):
         assert got["sm2"] <= got["mean"] + 1e-12
         assert got["tail_mean"] <= got["q10"] + 1e-12
         assert got["q10"] <= got["median"] + 1e-12
+
+
+def test_grouped_measures_hold_100x_scale_prices(spark):
+    """sm2's per-row Gini term (2·rn − n − 1)·v reaches -1e12 here: 13
+    integer digits, one more than a decimal(27,15) accumulator holds.
+    Under ANSI both engines must return the same row, bit for bit."""
+    import duckdb
+
+    values = [5.0e11, 5.5e11, 6.0e11]
+    df = spark.createDataFrame([(1, v) for v in values], "g int, v double")
+    got = [r.asDict() for r in grouped_measures(df, ["g"], "v").collect()]
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (g INTEGER, v DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", [(1, v) for v in values])
+    cur = con.execute(grouped_measures_oracle_sql("t", ["g"], "v"))
+    cols = [d[0] for d in cur.description]
+    want = [dict(zip(cols, row)) for row in cur.fetchall()]
+
+    assert got == want
+    assert (got[0]["mean"], got[0]["sm1"], got[0]["sm2"]) == (
+        550000000000.0, 533333333333.3333, 527777777777.7778
+    )
 
 
 def test_numpy_window_path_matches_hof_path_chunked(spark):

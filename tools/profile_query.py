@@ -73,6 +73,9 @@ def main() -> None:
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "24g")
         .config("spark.eventLog.enabled", "true")
+        # Spark 4.1 compresses the log with zstd by default, which this
+        # line-by-line JSON reader cannot parse.
+        .config("spark.eventLog.compress", "false")
         .config("spark.eventLog.dir", f"file://{evdir}")
     )
     for k, v in DYNAMIC_CONF.items():
@@ -91,8 +94,6 @@ def main() -> None:
     _timed(fsink, "stage_stream_splits")
     _timed(fsink, "read_versioned")
     _timed(scd, "apply_feed_epoch")
-    # scd imports these by name in places; repoint where cheap
-    scd.run_scd2_maintenance = scd.run_scd2_maintenance
 
     from psd_project_spark.registry import queries
 
@@ -134,7 +135,6 @@ def main() -> None:
             os.path.join(root, f) for f in files if "events" in f
         ]
     for f in logfiles:
-        # event logs may be zstd-compressed or carry stray bytes
         with open(f, errors="replace") as fh:
             starts = {}
             for line in fh:
@@ -150,11 +150,12 @@ def main() -> None:
                     jid = e["Job ID"]
                     if jid in starts:
                         jobs.append((e["Completion Time"] - starts[jid]) / 1000.0)
-    if jobs:
-        print(
-            f"\n[eventlog] {len(jobs)} jobs, total {sum(jobs):.2f}s, "
-            f"mean {sum(jobs)/len(jobs)*1000:.0f}ms, max {max(jobs):.2f}s"
-        )
+    if not jobs:
+        sys.exit(f"[eventlog] no Spark job parsed from {logfiles or evdir}")
+    print(
+        f"\n[eventlog] {len(jobs)} jobs, total {sum(jobs):.2f}s, "
+        f"mean {sum(jobs)/len(jobs)*1000:.0f}ms, max {max(jobs):.2f}s"
+    )
 
 
 if __name__ == "__main__":
