@@ -43,7 +43,7 @@ from psd_project_spark.functions.text_udfs import (
     shingles_udf,
     simhash_udf,
 )
-from psd_project_spark.functions.caching import transient_cache
+from psd_project_spark.functions.caching import cache_dir, transient_cache
 from psd_project_spark.sources.registry import load_table, spread_small
 
 COSINE_DUP_THRESHOLD = 0.95
@@ -918,21 +918,9 @@ MINHASH_INDEX_BUCKETS = 256
 
 
 def _minhash_index_dir(sf_dir: str) -> str:
-    import hashlib
-
-    from psd_project_spark.sources.registry import source_fingerprint
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    # layout-version suffix + source-data fingerprint: stale dirs from
-    # older layouts OR regenerated source data must never satisfy the
-    # _SUCCESS check (ADVICE r04 — the index rebuilds when documents
-    # changes under the same path). Superseded fingerprints' trees are
-    # pruned by the BUILD branches (index_compact.prune_siblings_of)
-    # so the sink root stays bounded across data regenerations.
-    fp = source_fingerprint(sf_dir, "documents")
-    return (
-        f"/tmp/psd_spark_sink/{key}/minhash_index_"
-        f"{T.LSH_BANDS}x{MINHASH_INDEX_BUCKETS}_{fp}"
+    return cache_dir(
+        sf_dir, "documents",
+        f"minhash_index_{T.LSH_BANDS}x{MINHASH_INDEX_BUCKETS}",
     )
 
 
@@ -978,12 +966,10 @@ def minhash_index_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_eval = F.col("doc_id") % 50 == 0
     if not os.path.exists(os.path.join(ensure_conf_path, "_SUCCESS")):
         from psd_project_spark.operators.index_compact import (
-            prune_siblings_of,
             single_writer,
             write_partition_manifest,
         )
 
-        prune_siblings_of(ensure_conf_path)
         with single_writer(ensure_conf_path):
             _write_minhash_index(
                 sigs.filter(~is_eval), ensure_conf_path, "overwrite"

@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from psd_project_spark.functions import text as T
-from psd_project_spark.functions.caching import transient_cache
+from psd_project_spark.functions.caching import cache_dir, transient_cache
 from psd_project_spark.functions.exact import round_sql
 from psd_project_spark.sources.registry import load_table, spread_small
 
@@ -584,15 +584,9 @@ _SUBSTR_INDEX_SCHEMA = (
 
 
 def _substr_index_dir(sf_dir: str) -> str:
-    import hashlib
-
-    from psd_project_spark.sources.registry import source_fingerprint
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    fp = source_fingerprint(sf_dir, "documents")
-    return (
-        f"/tmp/psd_spark_sink/{key}/substr_anchor_index_"
-        f"{EXACT_SUBSTR_K}x{SUBSTR_INDEX_BUCKETS}_{fp}"
+    return cache_dir(
+        sf_dir, "documents",
+        f"substr_anchor_index_{EXACT_SUBSTR_K}x{SUBSTR_INDEX_BUCKETS}",
     )
 
 
@@ -783,7 +777,6 @@ def stream_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from psd_project_spark.functions.caching import scratch_dir
     from psd_project_spark.operators.index_compact import (
         compact_index,
-        prune_siblings_of,
         single_writer,
         write_partition_manifest,
     )
@@ -794,7 +787,6 @@ def stream_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _substr_index_dir(sf_dir) + "_stream"
     marker = os.path.join(path, "_DELTA_APPENDED")
     if not os.path.exists(marker):
-        prune_siblings_of(path)
         src = scratch_dir("substr_maint_src_")
         from psd_project_spark.streaming.foreach_sink import (
             stage_stream_splits,

@@ -22,12 +22,12 @@ all are standard requirements for a 100 TB training-data platform:
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psd_project_spark.functions.caching import cache_dir
 from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
 
@@ -132,8 +132,7 @@ ORDER BY event_type
 # --- training_shard_export ---------------------------------------------------
 
 def _shard_dir(sf_dir: str) -> str:
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return f"/tmp/psd_spark_sink/{key}/event_shards"
+    return cache_dir(sf_dir, "events", "event_shards")
 
 
 def training_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,103 +31,7 @@ import os
 from pyspark.sql import SparkSession
 
 from psd_project_spark import durable
-
-
-def prune_stale_siblings(parent: str, prefix: str, fp: str) -> int:
-    """Delete sibling index dirs of the same layout ``prefix`` whose
-    fingerprint segment differs from the current ``fp`` — the
-    fingerprinted cache key (sources/registry.source_fingerprint)
-    mints a new directory whenever the source data changes, and the
-    superseded trees (each a full corpus band/vector copy) would
-    otherwise accumulate under the sink root forever. Returns the
-    number of directories actually removed.
-
-    The match is an exact parse of the name's fingerprint position
-    (``{prefix}{fp}`` or ``{prefix}{fp}_suffix``), never a substring
-    test — a substring test would mis-keep/mis-drop depending on how
-    the prefix happens to end.
-
-    A superseded sibling whose writer lock names a LIVE pid is SKIPPED
-    (ADVICE r06 #3): a concurrent run still building against the older
-    source state must not have its in-progress index rmtree'd out from
-    under it — the same refusal :class:`single_writer` applies to a
-    live holder, extended to sibling trees. The skipped tree is
-    reclaimed by the next prune after that writer exits."""
-    import shutil
-
-    if not os.path.isdir(parent):
-        return 0
-    entries = [e for e in os.listdir(parent) if e.startswith(prefix)]
-    protected: set[str] = set()
-    for entry in entries:
-        if not entry.endswith(LOCK_SUFFIX):
-            continue
-        lockfile = os.path.join(parent, entry)
-        if not os.path.isfile(lockfile):
-            continue
-        try:
-            holder = int(open(lockfile).read().strip())
-        except (ValueError, OSError):
-            holder = 0  # unreadable = mid-acquisition: treat as live
-        if holder == 0 or _pid_alive(holder):
-            # protect the lock AND the index dir it guards
-            protected.add(entry)
-            protected.add(entry[: -len(LOCK_SUFFIX)])
-    n = 0
-    for entry in entries:
-        rest = entry[len(prefix):]
-        if rest == fp or rest.startswith(fp + "_") or rest.startswith(
-            fp + LOCK_SUFFIX
-        ):
-            continue  # the live index (or its _incr sibling / lock)
-        if entry in protected:
-            continue  # a live writer still owns this superseded tree
-        target = os.path.join(parent, entry)
-        if os.path.isfile(target):  # a superseded index's lock file
-            try:
-                os.remove(target)
-            except OSError:
-                pass
-        else:
-            shutil.rmtree(target, ignore_errors=True)
-        if not os.path.exists(target):
-            n += 1
-    return n
-
-
-def prune_siblings_of(path: str) -> int:
-    """Prune superseded fingerprint siblings of a current index dir
-    whose basename is ``{prefix}{fp10}`` or ``{prefix}{fp10}_<layout>``
-    (``source_fingerprint`` returns exactly 10 hex chars; the layout
-    suffix is ``_incr``, ``_cmp``, or any future variant including
-    multi-segment ones like ``_incr_v2`` — ``_``-segments are stripped
-    right-to-left until the remaining stem ends in the 10-hex
-    fingerprint, preferring the longest such stem, so a new variant
-    can't silently opt out of pruning). Called from the BUILD branches
-    only — pruning is meaningful exactly when the fingerprint changed,
-    i.e. when the completion gate fails."""
-    def _fp_stem(s: str) -> bool:
-        return len(s) > 10 and all(
-            c in "0123456789abcdef" for c in s[-10:]
-        )
-
-    base = os.path.basename(path)
-    core = base
-    if not _fp_stem(core):  # longest stem first: an un-suffixed name
-        cand = base         # already ends in its fingerprint
-        while "_" in cand:
-            cand = cand.rpartition("_")[0]
-            if _fp_stem(cand):
-                core = cand
-                break
-    fp = core[-10:]
-    # only act on real fingerprinted names (10 hex chars after a
-    # non-empty prefix) — a test-scratch dir like "idx" must never
-    # trigger a prune of its whole parent
-    if len(core) <= 10 or not all(c in "0123456789abcdef" for c in fp):
-        return 0
-    return prune_stale_siblings(os.path.dirname(path), core[:-10], fp)
-
+from psd_project_spark.functions.caching import LOCK_SUFFIX, _pid_alive
 
 #: Partition manifest written at build/append/compact time: one
 #: relative bucket dir per line. Probes read THIS instead of issuing
@@ -135,27 +39,6 @@ def prune_siblings_of(path: str) -> int:
 #: probed bucket is one LIST each (VERDICT r05 "What's wrong" #1);
 #: the manifest makes probe enumeration a single small-file read.
 MANIFEST = "_PARTITIONS"
-
-#: Single-writer lock (ADVICE r05 #2): build+append+compact mutate the
-#: index directory non-atomically (gates off → rewrite → gates on), so
-#: two writers interleaving would corrupt it. The lock is advisory —
-#: a PID file taken around every mutating section; a live holder makes
-#: the second writer fail LOUDLY instead of corrupting, and a stale
-#: lock (dead PID, e.g. a crashed run) is broken automatically. It is
-#: a SIBLING of the index dir (``<path>.writer.pid``), never inside
-#: it — an ``overwrite`` build job wipes the index dir itself, which
-#: would silently drop an in-dir lock mid-build.
-LOCK_SUFFIX = ".writer.pid"
-
-
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    return True
 
 
 class single_writer:
@@ -402,10 +285,10 @@ def build_base_plus_delta(
     """The shared incremental-index build protocol, in ONE place so the
     durability ordering can't diverge between the MinHash and ANN
     builders (it previously lived as near-verbatim copies at every
-    call site): prune superseded fingerprint siblings → take the
-    writer lock → base batch (``overwrite``) → delta batch
-    (``append``) → partition manifest → optional compaction → the
-    ``_DELTA_APPENDED`` completion marker, strictly LAST.
+    call site): take the writer lock → base batch (``overwrite``) →
+    delta batch (``append``) → partition manifest → optional
+    compaction → the ``_DELTA_APPENDED`` completion marker, strictly
+    LAST.
 
     Marker-last is the whole crash contract: a death anywhere in the
     sequence — including inside ``compact_fn``, which previously ran
@@ -418,7 +301,6 @@ def build_base_plus_delta(
     marker = os.path.join(path, "_DELTA_APPENDED")
     if os.path.exists(marker):
         return False
-    prune_siblings_of(path)
     with single_writer(path):
         write_base()
         write_delta()

@@ -80,7 +80,6 @@ def stream_minhash_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from psd_project_spark.operators.index_compact import (
         list_partitions,
-        prune_siblings_of,
         single_writer,
         write_partition_manifest,
     )
@@ -95,7 +94,6 @@ def stream_minhash_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serves — one corpus artifact, batch and streaming probes alike
     path = _minhash_index_dir(sf_dir)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        prune_siblings_of(path)
         with single_writer(path):
             _write_minhash_index(sigs.filter(~is_eval), path, "overwrite")
             write_partition_manifest(path)

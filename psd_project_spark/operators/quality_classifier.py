@@ -54,7 +54,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from psd_project_spark.functions.caching import transient_cache
+from psd_project_spark.functions.caching import cache_dir, transient_cache
 from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 
 #: (name, spark expr over quality_features, duckdb expr over qf CTE).
@@ -331,23 +331,17 @@ _STORE_SCHEMA = (
 def _qstore_dir(sf_dir: str) -> str:
     import hashlib
 
-    from psd_project_spark.sources.registry import source_fingerprint
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    fp = source_fingerprint(sf_dir, "documents")
     # Recipe fingerprint (ADVICE r07 #1): the store caches FEATURE
     # ROWS, so its identity is (source data × feature definition), not
     # source data alone — without this, editing FEATURES/_STORE_SCHEMA
     # would serve a stale store through the marker gate and the
     # explicit-schema read would silently null-fill renamed columns.
-    # The source fingerprint stays LAST in the dir name (the
-    # prune_siblings_of parse contract).
     rh = hashlib.md5(
         (_STORE_SCHEMA + "|" + repr(FEATURES)).encode()
     ).hexdigest()[:8]
-    return (
-        f"/tmp/psd_spark_sink/{key}/quality_feature_store_"
-        f"{FEATURE_STORE_BUCKETS}_{rh}_{fp}"
+    return cache_dir(
+        sf_dir, "documents",
+        f"quality_feature_store_{FEATURE_STORE_BUCKETS}_{rh}",
     )
 
 

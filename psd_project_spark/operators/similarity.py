@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from psd_project_spark.functions import text as T
 from psd_project_spark.functions import vectors as V
-from psd_project_spark.functions.caching import transient_cache
+from psd_project_spark.functions.caching import cache_dir, transient_cache
 from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table, spread_small
 
@@ -1047,20 +1047,9 @@ ORDER BY r.cid, r.pick_rank
 # --- ann_index_export (bucket-partitioned ANN index + pruned probe) ----------
 
 def _ann_index_dir(sf_dir: str) -> str:
-    import hashlib
-
-    from psd_project_spark.sources.registry import source_fingerprint
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    # layout version suffix + source-data fingerprint: a stale dir from
-    # an older layout OR regenerated source data must never satisfy the
-    # _SUCCESS check (ADVICE r04); superseded fingerprints' trees are
-    # pruned by the BUILD branches (index_compact.prune_siblings_of)
-    # so the sink root stays bounded across data regenerations
-    fp = source_fingerprint(sf_dir, "embeddings")
-    return (
-        f"/tmp/psd_spark_sink/{key}/ann_lsh_index_"
-        f"{PAIR_N_BANDS}x{PAIR_BAND_BITS}_ibkey_{fp}"
+    return cache_dir(
+        sf_dir, "embeddings",
+        f"ann_lsh_index_{PAIR_N_BANDS}x{PAIR_BAND_BITS}_ibkey",
     )
 
 
@@ -1097,12 +1086,10 @@ def _ensure_ann_index(sf_dir: str, e: DataFrame) -> str:
 
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         from psd_project_spark.operators.index_compact import (
-            prune_siblings_of,
             single_writer,
             write_partition_manifest,
         )
 
-        prune_siblings_of(path)
         with single_writer(path):
             _write_ann_index(e, path, "overwrite")
             write_partition_manifest(path)
@@ -1403,19 +1390,8 @@ def _search_batch_fn(
 
 
 def _ivf_index_dir(sf_dir: str) -> str:
-    import hashlib
-
-    from psd_project_spark.sources.registry import source_fingerprint
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    # layout version (cells × probe width) + source fingerprint, same
-    # staleness contract as _ann_index_dir: a regenerated source or an
-    # older layout never satisfies the completion gate, and superseded
-    # fingerprint trees are pruned by the build branches
-    fp = source_fingerprint(sf_dir, "embeddings")
-    return (
-        f"/tmp/psd_spark_sink/{key}/ivf_index_"
-        f"{N_CELLS}c{N_PROBE}p_ibkey_{fp}"
+    return cache_dir(
+        sf_dir, "embeddings", f"ivf_index_{N_CELLS}c{N_PROBE}p_ibkey"
     )
 
 
@@ -1619,13 +1595,11 @@ def _ensure_ivf_index(
         and os.path.exists(os.path.join(path, "_quantizer", "_SUCCESS"))
     ):
         from psd_project_spark.operators.index_compact import (
-            prune_siblings_of,
             single_writer,
             write_partition_manifest,
         )
 
         codebook, cb_ids = _ivf_codebook(e)
-        prune_siblings_of(path)
         with single_writer(path):
             _write_ivf_index(spark, e, path, "overwrite", codebook, cb_ids)
             write_partition_manifest(path)

@@ -20,12 +20,12 @@
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from psd_project_spark.functions.caching import cache_dir
 from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
 
@@ -112,8 +112,7 @@ FROM grid g LEFT JOIN hl ON g.user_id = hl.user_id AND g.hour = hl.hour
 # --- partitioned_parquet_roundtrip ------------------------------------------
 
 def _sink_dir(sf_dir: str) -> str:
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return f"/tmp/psd_spark_sink/{key}/lineitem_by_flag"
+    return cache_dir(sf_dir, "lineitem", "lineitem_by_flag")
 
 
 def partitioned_parquet_roundtrip(

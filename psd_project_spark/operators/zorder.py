@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from psd_project_spark import durable
+from psd_project_spark.functions.caching import cache_dir
 from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
 
@@ -64,15 +65,7 @@ _PARAMS = "_ZPARAMS.json"
 
 
 def _zorder_dir(sf_dir: str) -> str:
-    import hashlib
-
-    from psd_project_spark.sources.registry import source_fingerprint
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    fp = source_fingerprint(sf_dir, "orders")
-    return (
-        f"/tmp/psd_spark_sink/{key}/zorder_orders_{ZORDER_BITS}b_{fp}"
-    )
+    return cache_dir(sf_dir, "orders", f"zorder_orders_{ZORDER_BITS}b")
 
 
 def _day_expr() -> F.Column:
@@ -96,16 +89,12 @@ def build_zorder_layout(spark: SparkSession, sf_dir: str) -> str:
     the layout's tiny model state, like the IVF quantizer) are
     persisted NEXT to the data and written STRICTLY LAST, so a crashed
     build fails the gate and rebuilds. Returns the layout path."""
-    from psd_project_spark.operators.index_compact import (
-        prune_siblings_of,
-        single_writer,
-    )
+    from psd_project_spark.operators.index_compact import single_writer
 
     path = _zorder_dir(sf_dir)
     params_path = os.path.join(path, _PARAMS)
     if os.path.exists(params_path):
         return path
-    prune_siblings_of(path)
     with single_writer(path):
         if os.path.exists(params_path):  # raced build finished first
             return path
@@ -229,14 +218,8 @@ _ZONEMAP = "_ZONEMAP.json"
 
 
 def _zonemap_dir(sf_dir: str) -> str:
-    import hashlib
-
-    from psd_project_spark.sources.registry import source_fingerprint
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    fp = source_fingerprint(sf_dir, "lineitem")
-    return (
-        f"/tmp/psd_spark_sink/{key}/zonemap_lineitem_{ZONEMAP_FILES}f_{fp}"
+    return cache_dir(
+        sf_dir, "lineitem", f"zonemap_lineitem_{ZONEMAP_FILES}f"
     )
 
 
@@ -254,16 +237,12 @@ def build_zonemap_table(spark: SparkSession, sf_dir: str) -> str:
     the written files (``input_file_name()`` groupBy — never a
     driver-side footer loop), and a reader consults the one small
     manifest instead of listing/opening every file."""
-    from psd_project_spark.operators.index_compact import (
-        prune_siblings_of,
-        single_writer,
-    )
+    from psd_project_spark.operators.index_compact import single_writer
 
     path = _zonemap_dir(sf_dir)
     zpath = os.path.join(path, _ZONEMAP)
     if os.path.exists(zpath):
         return path
-    prune_siblings_of(path)
     with single_writer(path):
         if os.path.exists(zpath):  # raced build finished first
             return path
@@ -461,10 +440,7 @@ def stream_zonemap_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     files-per-epoch entries and the probe's file-selection work stays
     one small-manifest read."""
     from psd_project_spark.functions.caching import scratch_dir
-    from psd_project_spark.operators.index_compact import (
-        prune_siblings_of,
-        single_writer,
-    )
+    from psd_project_spark.operators.index_compact import single_writer
     from psd_project_spark.streaming.foreach_sink import (
         run_stream,
         stage_stream_splits,
@@ -474,7 +450,6 @@ def stream_zonemap_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     zpath = os.path.join(path, _ZONEMAP)
     marker = os.path.join(path, "_INGESTED")
     if not os.path.exists(marker):
-        prune_siblings_of(path)
         li = load_table(spark, sf_dir, "lineitem")
         is_delta = F.col("l_orderkey") % 4 == 0
         src = scratch_dir("psd_zmstream_src_")
@@ -925,10 +900,7 @@ def stream_zorder_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     of listing cell dirs (the IVF-index / bucketed-sink discipline
     applied to the 2-D layout)."""
     from psd_project_spark.functions.caching import scratch_dir
-    from psd_project_spark.operators.index_compact import (
-        prune_siblings_of,
-        single_writer,
-    )
+    from psd_project_spark.operators.index_compact import single_writer
     from psd_project_spark.streaming.foreach_sink import (
         run_stream,
         stage_stream_splits,
@@ -937,7 +909,6 @@ def stream_zorder_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _zorder_dir(sf_dir) + "_stream"
     marker = os.path.join(path, "_INGESTED")
     if not os.path.exists(marker):
-        prune_siblings_of(path)
         o = load_table(spark, sf_dir, "orders")
         is_delta = F.col("o_orderkey") % 4 == 0
         src = scratch_dir("psd_zostream_src_")
@@ -1072,17 +1043,13 @@ def zonemap_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     files) rewrite work + one manifest edit, with the zone map
     guaranteeing the straddle set is ~2 files per range edge no
     matter how big the table is."""
-    from psd_project_spark.operators.index_compact import (
-        prune_siblings_of,
-        single_writer,
-    )
+    from psd_project_spark.operators.index_compact import single_writer
 
     base = build_zonemap_table(spark, sf_dir)
     path = base + "_del"
     zpath = os.path.join(path, _ZONEMAP)
     marker = os.path.join(path, _DELETED)
     if not os.path.exists(marker):
-        prune_siblings_of(path)
         with single_writer(path):
             if not os.path.exists(marker):  # raced delete finished first
                 import shutil
@@ -1166,16 +1133,12 @@ def zorder_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlink per fully-covered cell — the 2-D analog of the zone map's
     O(straddling files) bound, with the Morton layout guaranteeing
     the band maps to a bin rectangle."""
-    from psd_project_spark.operators.index_compact import (
-        prune_siblings_of,
-        single_writer,
-    )
+    from psd_project_spark.operators.index_compact import single_writer
 
     base = build_zorder_layout(spark, sf_dir)
     path = base + "_del"
     marker = os.path.join(path, _DELETED)
     if not os.path.exists(marker):
-        prune_siblings_of(path)
         with single_writer(path):
             if not os.path.exists(marker):  # raced delete finished first
                 import shutil
@@ -1275,10 +1238,7 @@ def stream_zorder_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: same bound as the batch verb — O(edge-bin cells' live
     sets) rewrite work + manifest entry drops — but now compounding
     with online ingestion instead of requiring a frozen layout."""
-    from psd_project_spark.operators.index_compact import (
-        prune_siblings_of,
-        single_writer,
-    )
+    from psd_project_spark.operators.index_compact import single_writer
 
     # ensure the streamed layout exists (gated, shared with the
     # ingest query — the returned probe frame is lazy and unused)
@@ -1287,7 +1247,6 @@ def stream_zorder_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = src_path + "_del"
     marker = os.path.join(path, _DELETED)
     if not os.path.exists(marker):
-        prune_siblings_of(path)
         with single_writer(path):
             if not os.path.exists(marker):  # raced delete finished first
                 import shutil
@@ -1449,10 +1408,7 @@ def stream_zorder_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest publish + O(straddling cells) rewrite, and ingestion
     resumes against the published manifest)."""
     from psd_project_spark.functions.caching import scratch_dir
-    from psd_project_spark.operators.index_compact import (
-        prune_siblings_of,
-        single_writer,
-    )
+    from psd_project_spark.operators.index_compact import single_writer
     from psd_project_spark.streaming.foreach_sink import (
         run_stream,
         stage_stream_splits,
@@ -1461,7 +1417,6 @@ def stream_zorder_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _zorder_dir(sf_dir) + "_resume"
     marker = os.path.join(path, "_RESUMED")
     if not os.path.exists(marker):
-        prune_siblings_of(path)
         o = load_table(spark, sf_dir, "orders")
         m5 = F.col("o_orderkey") % 5
         with single_writer(path):
@@ -1578,10 +1533,7 @@ def stream_zonemap_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite + metadata drops) compounding with online ingestion; the
     journal is one small JSON consulted per epoch commit."""
     from psd_project_spark.functions.caching import scratch_dir
-    from psd_project_spark.operators.index_compact import (
-        prune_siblings_of,
-        single_writer,
-    )
+    from psd_project_spark.operators.index_compact import single_writer
     from psd_project_spark.streaming.foreach_sink import (
         run_stream,
         stage_stream_splits,
@@ -1590,7 +1542,6 @@ def stream_zonemap_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _zonemap_dir(sf_dir) + "_resume"
     marker = os.path.join(path, "_RESUMED")
     if not os.path.exists(marker):
-        prune_siblings_of(path)
         li = load_table(spark, sf_dir, "lineitem")
         m5 = F.col("l_orderkey") % 5
         with single_writer(path):

@@ -63,6 +63,12 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _default_driver_memory() -> str:
+    """min(24g, ¾ of physical RAM), in MiB as Spark's size string."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, ram_mb * 3 // 4)}m"
+
+
 def get_spark(
     app_name: str = "psd_project_spark",
     cpus: int | None = None,
@@ -74,6 +80,9 @@ def get_spark(
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or 32. In local mode the
     driver JVM is the only process, so ``driver_memory`` is the single
     memory knob; it only takes effect if the JVM is not yet started.
+    It defaults to ``$SPARK_GRAFT_DRIVER_MEM``, else the smaller of 24g
+    and three quarters of physical RAM, so a small host never grants
+    the heap more memory than it has.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or cpus
@@ -82,7 +91,12 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            driver_memory
+            or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or _default_driver_memory(),
+        )
     )
     for key, value in DYNAMIC_CONF.items():
         builder = builder.config(key, value)

@@ -47,6 +47,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from psd_project_spark import durable
+from psd_project_spark.functions.caching import cache_dir
 from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 
 _SCHEMA_DDL = (
@@ -213,14 +214,7 @@ def register(spark) -> None:
 # --- round-trip registry query ----------------------------------------------
 
 def _stage_dir(sf_dir: str) -> str:
-    """Content-fingerprinted staging (same invalidation discipline as
-    the ORC staging: driver regenerates testdata in place)."""
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    key = (
-        f"{sf_dir.strip('/').replace('/', '_')}"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    return f"/tmp/psd_alert_log/{key}"
+    return cache_dir(sf_dir, "events", "alert_log")
 
 
 def alert_log_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from psd_project_spark.functions.caching import cache_dir
 from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
 
@@ -45,28 +46,25 @@ EVENTS_JSONL_SCHEMA = StructType(
 )
 
 
-def _stage_events_jsonl(spark: SparkSession, sf_dir: str) -> str:
-    """Write events as JSONL once per (sf_dir) under /tmp; idempotent."""
-    key = sf_dir.strip("/").replace("/", "_")
-    out = f"/tmp/psd_spark_jsonl/{key}/events"
-    marker = f"{out}/_SUCCESS"
-    if not os.path.exists(marker):
+def _stage_events_jsonl(sf_dir: str) -> str:
+    return cache_dir(sf_dir, "events", "events_jsonl")
+
+
+def read_events_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JSONL reader with declared schema over the events staged as
+    JSONL (written once per source content); malformed lines are
+    dropped and counted via the _corrupt_record column (PERMISSIVE),
+    mirroring the reference's parse-and-drop (S2)."""
+    path = _stage_events_jsonl(sf_dir)
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             load_table(spark, sf_dir, "events")
             .select(
                 "event_id", "ts_ns", "user_id", "event_type", "value", "props"
             )
             .write.mode("overwrite")
-            .json(out)
+            .json(path)
         )
-    return out
-
-
-def read_events_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSONL reader with declared schema; malformed lines are dropped
-    and counted via the _corrupt_record column (PERMISSIVE), mirroring
-    the reference's parse-and-drop (S2)."""
-    path = _stage_events_jsonl(spark, sf_dir)
     return spark.read.schema(EVENTS_JSONL_SCHEMA).json(path)
 
 

@@ -27,33 +27,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from psd_project_spark.functions.caching import cache_dir
 from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.sources.registry import load_table
 
 
-def _stage_lineitem_orc(spark: SparkSession, sf_dir: str) -> str:
-    """Write lineitem as ORC once per SOURCE CONTENT under /tmp.
-
-    The staging key includes the source parquet's (mtime_ns, size)
-    fingerprint: the test-data driver regenerates /root/testdata in
-    place between rounds, and a path-only key would silently serve
-    stale ORC against a fresh-parquet oracle. Same-fingerprint reruns
-    still short-circuit on the _SUCCESS marker."""
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    st = os.stat(src)
-    key = (
-        f"{sf_dir.strip('/').replace('/', '_')}"
-        f"_{st.st_mtime_ns}_{st.st_size}"
-    )
-    out = f"/tmp/psd_spark_orc/{key}/lineitem"
-    marker = f"{out}/_SUCCESS"
-    if not os.path.exists(marker):
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .write.mode("overwrite")
-            .orc(out)
-        )
-    return out
+def _stage_lineitem_orc(sf_dir: str) -> str:
+    return cache_dir(sf_dir, "lineitem", "lineitem_orc")
 
 
 def lineitem_orc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -63,7 +43,10 @@ def lineitem_orc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doubles, timestamps, strings). The shipdate filter lands in the
     ORC scan as a pushed predicate (same pushdown surface as parquet).
     """
-    l = spark.read.orc(_stage_lineitem_orc(spark, sf_dir))
+    out = _stage_lineitem_orc(sf_dir)
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        load_table(spark, sf_dir, "lineitem").write.mode("overwrite").orc(out)
+    l = spark.read.orc(out)
     return (
         l.filter(
             (F.col("l_shipdate") >= F.lit("1995-01-01"))

@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 )
 
 from psd_project_spark.config import DEFAULT_CONFIG
+from psd_project_spark.functions.caching import cache_dir
 from psd_project_spark.functions.exact import exact_sum, exact_sum_sql, round_sql
 from psd_project_spark.operators.risk import (
     MEASURES_WINDOW_ORACLE,
@@ -71,13 +72,12 @@ _EVENTS_FIELDS_TAIL = [
 
 def _stream_dir(sf_dir: str, table: str) -> str:
     """The file-stream source needs a *directory*; stage one with a
-    symlink to the single parquet file (idempotent, /tmp-local)."""
-    key = sf_dir.strip("/").replace("/", "_")
-    d = f"/tmp/psd_spark_stream/{key}/{table}"
+    symlink to the single parquet file (idempotent)."""
+    d = cache_dir(sf_dir, table, f"stream_{table}")
     os.makedirs(d, exist_ok=True)
     link = f"{d}/{table}.parquet"
     if not os.path.exists(link):
-        os.symlink(f"{sf_dir}/{table}.parquet", link)
+        os.symlink(os.path.abspath(f"{sf_dir}/{table}.parquet"), link)
     return d
 
 

@@ -183,7 +183,7 @@ def test_prune_stale_siblings_scopes_correctly(tmp_path):
     layouts survive."""
     import os
 
-    from psd_project_spark.operators.index_compact import (
+    from psd_project_spark.functions.caching import (
         prune_stale_siblings,
     )
 
@@ -208,7 +208,7 @@ def test_prune_siblings_of_parses_and_guards(tmp_path):
     non-fingerprinted (test-scratch) names."""
     import os
 
-    from psd_project_spark.operators.index_compact import prune_siblings_of
+    from psd_project_spark.functions.caching import prune_siblings_of
 
     for d in ["minhash_index_4x256_aaaa0000bb",
               "minhash_index_4x256_aaaa0000bb_incr",

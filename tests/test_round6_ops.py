@@ -263,7 +263,7 @@ def test_prune_siblings_of_handles_cmp_suffix(tmp_path):
     layout suffix after the 10-hex fingerprint — a '_cmp' path used to
     parse as a non-hex fingerprint and silently no-op, letting
     superseded compaction-index trees accumulate unboundedly."""
-    from psd_project_spark.operators.index_compact import prune_siblings_of
+    from psd_project_spark.functions.caching import prune_siblings_of
 
     keep = ["minhash_index_4x256_aaaa0000bb",
             "minhash_index_4x256_aaaa0000bb_incr",
@@ -370,7 +370,7 @@ def test_prune_siblings_of_multi_segment_suffix(tmp_path):
     """The suffix strip walks multiple '_'-segments (e.g. a future
     '_incr_v2' layout) back to the fingerprint stem — a new variant
     cannot silently opt out of pruning."""
-    from psd_project_spark.operators.index_compact import prune_siblings_of
+    from psd_project_spark.functions.caching import prune_siblings_of
 
     keep = ["minhash_index_4x256_aaaa0000bb_incr_v2",
             "minhash_index_4x256_aaaa0000bb"]
@@ -389,7 +389,7 @@ def test_prune_siblings_of_prefers_unsuffixed_stem(tmp_path):
     a fingerprint that happens to follow another hex-looking segment
     must not be mistaken for a layout suffix (which would mis-scope
     the prune to a shorter prefix)."""
-    from psd_project_spark.operators.index_compact import prune_siblings_of
+    from psd_project_spark.functions.caching import prune_siblings_of
 
     keep = ["pfx_deadbeef01_cafebabe02",      # current: fp = cafebabe02
             "pfx_deadbeef01_cafebabe02_incr"]

@@ -71,7 +71,7 @@ def test_enter_still_breaks_stale_end_to_end(tmp_path):
 # --- prune_stale_siblings live-writer protection (ADVICE r06 #3) -------------
 
 def test_prune_skips_sibling_with_live_writer(tmp_path):
-    from psd_project_spark.operators.index_compact import prune_siblings_of
+    from psd_project_spark.functions.caching import prune_siblings_of
 
     current = "minhash_index_4x256_aaaa0000bb"
     busy = "minhash_index_4x256_ccc111ddd2"
@@ -98,7 +98,7 @@ def test_prune_skips_sibling_with_live_writer(tmp_path):
 def test_prune_protects_unreadable_lock_sibling(tmp_path):
     """An unreadable lock is mid-acquisition (the single_writer
     contention discipline): its tree must be protected, not pruned."""
-    from psd_project_spark.operators.index_compact import prune_siblings_of
+    from psd_project_spark.functions.caching import prune_siblings_of
 
     current = "ann_index_8x4_aaaa0000bb"
     odd = "ann_index_8x4_ccc111ddd2"

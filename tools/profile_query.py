@@ -20,6 +20,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 from collections import defaultdict
 
@@ -55,7 +56,7 @@ def main() -> None:
         if a.startswith("--passes"):
             passes = int(a.split("=", 1)[1])
 
-    evdir = "/tmp/psd_eventlog"
+    evdir = os.path.join(tempfile.gettempdir(), "psd_eventlog")
     import shutil
 
     shutil.rmtree(evdir, ignore_errors=True)
