@@ -4,7 +4,9 @@
 Usage: python bench.py [<query> ...]
 
 Prints ONE JSON line:
-``{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}``
+``{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+"sf_dir": ..., "cpus": ...}`` — ``cpus`` is the session's
+``defaultParallelism``, so a line names the host shape it was taken on.
 
 Named queries restrict the run to those queries (the optimisation inner
 loop): same passes, retry and stall gate, the line lists every named
@@ -242,6 +244,8 @@ def main() -> None:
         "n_queries": len(timings),
         "detail": "BENCH_detail.json",
         "sf": sf_val,
+        "sf_dir": SF_DIR,
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     if only:
         del out["detail"]

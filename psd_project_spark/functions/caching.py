@@ -28,6 +28,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from psd_project_spark.durable import LOCK_SUFFIX, lock_is_live
+
 _TRANSIENT: list[DataFrame] = []
 
 
@@ -134,28 +136,6 @@ def cache_dir(sf_dir: str, table: str, name: str) -> str:
     return path
 
 
-#: Single-writer lock (ADVICE r05 #2): build+append+compact mutate the
-#: index directory non-atomically (gates off → rewrite → gates on), so
-#: two writers interleaving would corrupt it. The lock is advisory —
-#: a PID file taken around every mutating section; a live holder makes
-#: the second writer fail LOUDLY instead of corrupting, and a stale
-#: lock (dead PID, e.g. a crashed run) is broken automatically. It is
-#: a SIBLING of the index dir (``<path>.writer.pid``), never inside
-#: it — an ``overwrite`` build job wipes the index dir itself, which
-#: would silently drop an in-dir lock mid-build.
-LOCK_SUFFIX = ".writer.pid"
-
-
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    return True
-
-
 def prune_stale_siblings(parent: str, prefix: str, fp: str) -> int:
     """Delete sibling index dirs of the same layout ``prefix`` whose
     fingerprint segment differs from the current ``fp`` — the
@@ -173,9 +153,10 @@ def prune_stale_siblings(parent: str, prefix: str, fp: str) -> int:
     A superseded sibling whose writer lock names a LIVE pid is SKIPPED
     (ADVICE r06 #3): a concurrent run still building against the older
     source state must not have its in-progress index rmtree'd out from
-    under it — the same refusal ``index_compact.single_writer``
-    applies to a live holder, extended to sibling trees. The skipped tree is
-    reclaimed by the next prune after that writer exits."""
+    under it — the same refusal ``durable.single_writer`` applies to
+    a live holder, extended to sibling trees; an unreadable lock is a
+    writer mid-acquisition and protects its tree too. The skipped tree
+    is reclaimed by the next prune after that writer exits."""
     import shutil
 
     if not os.path.isdir(parent):
@@ -186,13 +167,7 @@ def prune_stale_siblings(parent: str, prefix: str, fp: str) -> int:
         if not entry.endswith(LOCK_SUFFIX):
             continue
         lockfile = os.path.join(parent, entry)
-        if not os.path.isfile(lockfile):
-            continue
-        try:
-            holder = int(open(lockfile).read().strip())
-        except (ValueError, OSError):
-            holder = 0  # unreadable = mid-acquisition: treat as live
-        if holder == 0 or _pid_alive(holder):
+        if os.path.isfile(lockfile) and lock_is_live(lockfile):
             # protect the lock AND the index dir it guards
             protected.add(entry)
             protected.add(entry[: -len(LOCK_SUFFIX)])

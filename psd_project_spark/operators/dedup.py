@@ -957,25 +957,25 @@ def minhash_index_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     those — candidate generation cost tracks the PROBE batch, not the
     corpus. Exact-Jaccard verification re-fetches shingle sets from
     the signature table for candidates only."""
-    import os
-
-    ensure_conf_path = _minhash_index_dir(sf_dir)
     sigs = transient_cache(
         _with_signatures(load_table(spark, sf_dir, "documents"), spark)
     )
-    is_eval = F.col("doc_id") % 50 == 0
-    if not os.path.exists(os.path.join(ensure_conf_path, "_SUCCESS")):
-        from psd_project_spark.operators.index_compact import (
-            single_writer,
-            write_partition_manifest,
-        )
+    path = _ensure_minhash_index(sf_dir, sigs)
+    return _probe_minhash_index(spark, sf_dir, sigs, path)
 
-        with single_writer(ensure_conf_path):
-            _write_minhash_index(
-                sigs.filter(~is_eval), ensure_conf_path, "overwrite"
-            )
-            write_partition_manifest(ensure_conf_path)
-    return _probe_minhash_index(spark, sf_dir, sigs, ensure_conf_path)
+
+def _ensure_minhash_index(sf_dir: str, sigs: DataFrame) -> str:
+    """Build (or reuse) the one-shot train-split band index — the one
+    corpus artifact the batch and streaming probes share. Returns the
+    index path."""
+    from psd_project_spark.operators.index_compact import build_one_shot
+
+    path = _minhash_index_dir(sf_dir)
+    train = sigs.filter(F.col("doc_id") % 50 != 0)
+    build_one_shot(
+        path, lambda: _write_minhash_index(train, path, "overwrite")
+    )
+    return path
 
 
 def _write_minhash_index(train: DataFrame, path: str, mode: str) -> None:

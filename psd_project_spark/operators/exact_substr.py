@@ -757,11 +757,8 @@ def stream_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``compact_index`` rewrites only the multi-file buckets via dynamic
     partition overwrite, so maintenance cost tracks the delta volume
     and the appended-to buckets, never the standing index size. The
-    lifecycle writes the ``_PARTITIONS`` manifest, removes the staging
-    tree, and publishes the ``_DELTA_APPENDED`` marker STRICTLY LAST —
-    a crash anywhere leaves a directory that fails the gate and
-    rebuilds; a rerun gates on the marker and skips straight to the
-    probe.
+    lifecycle is one ``durable.build_once`` gated on
+    ``_DELTA_APPENDED``.
 
     The arriving crawl is staged as a 3-file stream source split on
     ``doc_id % 3`` (the base/delta split, one step further) and
@@ -774,24 +771,24 @@ def stream_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
+    from psd_project_spark import durable
     from psd_project_spark.functions.caching import scratch_dir
     from psd_project_spark.operators.index_compact import (
         compact_index,
-        single_writer,
         write_partition_manifest,
     )
-    from psd_project_spark.streaming.foreach_sink import run_stream
+    from psd_project_spark.streaming.foreach_sink import (
+        run_stream,
+        stage_stream_splits,
+    )
 
     docs = spread_small(load_table(spark, sf_dir, "documents"), spark)
     is_eval = F.col("doc_id") % 50 == 0
     path = _substr_index_dir(sf_dir) + "_stream"
-    marker = os.path.join(path, "_DELTA_APPENDED")
-    if not os.path.exists(marker):
-        src = scratch_dir("substr_maint_src_")
-        from psd_project_spark.streaming.foreach_sink import (
-            stage_stream_splits,
-        )
+    stage = path + "_stage"
 
+    def build() -> str:
+        src = scratch_dir("substr_maint_src_")
         # explicit filtered splits, not repartition(3, expr): hash
         # partitioning collides residues {0,1,2} into 2 of 3
         # partitions, leaving one epoch empty and one with 2/3 of the
@@ -801,41 +798,37 @@ def stream_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id") % 3,
             src,
         )
-        stage = path + "_stage"
-        with single_writer(path):
-            for d in (stage, path):
-                if os.path.isdir(d):
-                    shutil.rmtree(d)  # a crashed prior maintenance
-            ckpt = scratch_dir("substr_maint_ckpt_")
-            arriving = (
-                spark.readStream.schema("doc_id long, text string")
-                .option("maxFilesPerTrigger", 1)
-                .option("recursiveFileLookup", "true")
-                .parquet(src)
-            )
-            run_stream(
-                arriving,
-                _maintain_batch_fn(stage, path),
-                ckpt,
-                state_partitions=None,
-            )
-            # PER-BUCKET merge discipline (VERDICT r08 "What's wrong"
-            # #4): adopt the base-plus-delta shape instead of
-            # re-shuffling the whole standing index through one
-            # overwrite job. Staged epoch files MOVE into their bucket
-            # dirs — a metadata-only commit (zero data read; on object
-            # storage, a manifest move), epoch-prefixed filenames so
-            # replayed epochs can never collide — then the shared
-            # ``compact_index`` rewrites ONLY the multi-file buckets
-            # via dynamic partition overwrite. Maintenance cost tracks
-            # the delta volume + the appended-to buckets, never the
-            # standing index size.
-            _merge_staged_epochs(stage, path)
-            compact_index(spark, path, ["bucket"], _SUBSTR_INDEX_SCHEMA)
-            write_partition_manifest(path)
-            shutil.rmtree(stage)
-            with open(marker, "w") as fh:
-                fh.write("stream epochs + compaction\n")
+        if os.path.isdir(stage):
+            shutil.rmtree(stage)  # a crashed prior maintenance
+        arriving = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .parquet(src)
+        )
+        run_stream(
+            arriving,
+            _maintain_batch_fn(stage, path),
+            scratch_dir("substr_maint_ckpt_"),
+            state_partitions=None,
+        )
+        # PER-BUCKET merge discipline (VERDICT r08 "What's wrong" #4):
+        # adopt the base-plus-delta shape instead of re-shuffling the
+        # whole standing index through one overwrite job. Staged epoch
+        # files MOVE into their bucket dirs — a metadata-only commit
+        # (zero data read; on object storage, a manifest move),
+        # epoch-prefixed filenames so replayed epochs can never collide
+        # — then the shared ``compact_index`` rewrites ONLY the
+        # multi-file buckets via dynamic partition overwrite.
+        # Maintenance cost tracks the delta volume + the appended-to
+        # buckets, never the standing index size.
+        _merge_staged_epochs(stage, path)
+        compact_index(spark, path, ["bucket"], _SUBSTR_INDEX_SCHEMA)
+        write_partition_manifest(path)
+        shutil.rmtree(stage)
+        return "stream epochs + compaction\n"
+
+    durable.build_once(path, os.path.join(path, "_DELTA_APPENDED"), build)
     return _probe_substr_index(spark, docs, path)
 
 
@@ -877,7 +870,7 @@ def _maintain_batch_fn(stage: str, lock_path: str):
     ``epoch={batch_id}`` staging partition — idempotent by layout."""
 
     def maintain_batch(batch: DataFrame, batch_id: int) -> None:
-        from psd_project_spark.operators.index_compact import single_writer
+        from psd_project_spark.durable import single_writer
 
         anchors_b = _anchor_positions(batch)
         with single_writer(lock_path):

@@ -8,20 +8,8 @@ multi-file buckets, rewrite each as one file via dynamic partition
 overwrite — never a full-index rebuild, and untouched buckets keep
 their files byte-identical. Probe results are invariant (pinned by
 tests/test_round5_ops.py::test_compaction_preserves_probe).
-
-Storage-interface boundary (VERDICT r06 "What's wrong" #3): the
-PROBE side is object-store-ready — partition enumeration is one
-``_PARTITIONS`` manifest read, never per-bucket existence checks.
-The WRITER-side durability primitives in this module are POSIX-bound
-by design of this harness: ``os.link`` lock acquisition (atomic
-link), ``os.rename`` stale-lock break, ``os.walk`` partition listing,
-``os.replace`` manifest swap. An object-store deployment substitutes
-a conditional-put (if-none-match) lock with content-validated delete,
-a list-prefix walk for partition enumeration, and a put-then-rename
-(or versioned-pointer) manifest publish; every protocol ORDERING in
-this module — gates off before mutation, marker strictly last,
-content-validated lock break — carries over unchanged, because the
-ordering, not the primitive, is the crash contract.
+The writer lock, the gated build and the publish these builds ride
+on live in ``durable.py``.
 """
 
 from __future__ import annotations
@@ -31,7 +19,7 @@ import os
 from pyspark.sql import SparkSession
 
 from psd_project_spark import durable
-from psd_project_spark.functions.caching import LOCK_SUFFIX, _pid_alive
+from psd_project_spark.durable import single_writer
 
 #: Partition manifest written at build/append/compact time: one
 #: relative bucket dir per line. Probes read THIS instead of issuing
@@ -39,122 +27,6 @@ from psd_project_spark.functions.caching import LOCK_SUFFIX, _pid_alive
 #: probed bucket is one LIST each (VERDICT r05 "What's wrong" #1);
 #: the manifest makes probe enumeration a single small-file read.
 MANIFEST = "_PARTITIONS"
-
-
-class single_writer:
-    """``with single_writer(path):`` around any index-mutating section.
-    Raises ``RuntimeError`` if another LIVE process holds the lock.
-
-    Acquisition is ATOMIC INCLUDING CONTENT (pid written to a temp
-    file, ``os.link``'d into place — never check-then-create, and
-    never create-then-write, either of which lets a second writer
-    observe an empty or missing pid and "win" concurrently), and
-    RE-ENTRANT within one process: an inner section that already holds
-    the lock (e.g. ``compact_index`` called from inside a gated build)
-    enters as a no-op and leaves the outer holder's lock file alone."""
-
-    def __init__(self, path: str):
-        self.path = path
-        self.lock = path.rstrip("/") + LOCK_SUFFIX
-        self._nested = False
-
-    def __enter__(self):
-        os.makedirs(os.path.dirname(self.lock), exist_ok=True)
-        self._nested = False
-        # Atomic pid PUBLICATION, not just atomic creation: the pid is
-        # written to a private temp file and os.link'd into place, so
-        # the lock file can never be observed empty (an O_EXCL-create-
-        # then-write sequence has a window where a second writer reads
-        # an empty file, judges it garbled/stale, and deletes a LIVE
-        # lock). Unreadable content is therefore CONTENTION (another
-        # writer mid-flight or external interference) — loud, never
-        # silently broken; only a readable DEAD pid is stale.
-        tmp = f"{self.lock}.{os.getpid()}.tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(os.getpid()))
-        try:
-            # two passes: the second retries the atomic link after a
-            # stale lock was broken; losing BOTH (live contention
-            # during the break window) fails loudly
-            for _ in range(2):
-                try:
-                    os.link(tmp, self.lock)
-                    return self
-                except FileExistsError:
-                    try:
-                        holder = int(open(self.lock).read().strip())
-                    except (ValueError, OSError):
-                        raise RuntimeError(
-                            f"index writer lock {self.lock} unreadable — "
-                            "possible concurrent writer mid-acquisition; "
-                            "build/compact refused (remove the lock "
-                            "manually if it is genuinely orphaned)"
-                        ) from None
-                    if holder == os.getpid():
-                        self._nested = True  # re-entrant: outer owns it
-                        return self
-                    if holder > 0 and _pid_alive(holder):
-                        raise RuntimeError(
-                            f"index writer lock held by live pid {holder}:"
-                            f" {self.lock} — concurrent build/compact "
-                            "refused"
-                        )
-                    self._break_stale(holder)
-            raise RuntimeError(
-                f"index writer lock {self.lock} contended while breaking "
-                "a stale holder — concurrent build/compact refused"
-            )
-        finally:
-            os.unlink(tmp)
-
-    def _break_stale(self, holder: int) -> None:
-        """Break a dead-pid lock ATOMICALLY PER HOLDER (ADVICE r06 #1):
-        the previous unconditional ``os.remove`` let two racers both
-        diagnose the same dead pid; after racer A removed it and linked
-        its own LIVE lock, racer B's remove deleted A's lock and B
-        linked too — two concurrent writers, the exact corruption the
-        lock exists to prevent. Instead the lock is renamed aside to a
-        breaker-unique name — only one racer's rename succeeds (the
-        loser sees ``FileNotFoundError`` and retries the link against
-        whatever lock now exists) — and the captured file's CONTENT is
-        validated before being discarded: if the rename raced a
-        re-acquisition and captured a lock whose pid is not the stale
-        holder this process diagnosed, the live lock is restored via
-        ``os.link`` (same inode, content intact) and the break is
-        treated as contention, loudly."""
-        victim = f"{self.lock}.breaking.{os.getpid()}"
-        try:
-            os.rename(self.lock, victim)
-        except FileNotFoundError:
-            return  # another racer already broke it; retry the link
-        try:
-            got = open(victim).read().strip()
-        except OSError:
-            got = ""
-        if got != str(holder):
-            # captured a FRESHER lock (a racer broke the stale holder
-            # and re-acquired inside our diagnose→rename window):
-            # restore it untouched and refuse — never break a live
-            # writer's lock
-            try:
-                os.link(victim, self.lock)
-            except FileExistsError:
-                pass  # slot already re-filled; nothing to restore
-            os.remove(victim)
-            raise RuntimeError(
-                f"index writer lock {self.lock} re-acquired while "
-                "breaking a stale holder — concurrent build/compact "
-                "refused"
-            )
-        os.remove(victim)
-
-    def __exit__(self, *exc):
-        if not self._nested:
-            try:
-                os.remove(self.lock)
-            except FileNotFoundError:
-                pass
-        return False
 
 
 def _walk_partitions(path: str, min_files: int = 1) -> list[str]:
@@ -178,16 +50,20 @@ def _walk_partitions(path: str, min_files: int = 1) -> list[str]:
     return sorted(out)
 
 
+def partition_manifest(path: str) -> str:
+    """The ``_PARTITIONS`` document for the index at ``path``: its
+    partition dirs, enumerated ONCE (build-side, where a recursive
+    listing is already paid by the write job), one per line."""
+    return "".join(p + "\n" for p in _walk_partitions(path))
+
+
 def write_partition_manifest(path: str) -> list[str]:
-    """Enumerate the index's partition dirs ONCE (build-side, where a
-    recursive listing is already paid by the write job) and persist
-    them to ``_PARTITIONS`` atomically (tmp + rename — a reader never
-    sees a half-written manifest)."""
-    parts = _walk_partitions(path)
-    durable.publish(
-        os.path.join(path, MANIFEST), "".join(p + "\n" for p in parts)
-    )
-    return parts
+    """Persist :func:`partition_manifest` to ``_PARTITIONS`` atomically
+    (a reader never sees a half-written manifest); returns the
+    partition dirs."""
+    doc = partition_manifest(path)
+    durable.publish(os.path.join(path, MANIFEST), doc)
+    return doc.splitlines()
 
 
 def list_partitions(path: str) -> set[str]:
@@ -229,13 +105,14 @@ def compact_index(
     the rewrite frame are replaced — the per-bucket rewrite contract:
     cost tracks the appended-to buckets, not the index size.
 
-    Crash safety: the completion gates (``_SUCCESS``, and
-    ``_DELTA_APPENDED`` for incremental indexes) are REMOVED before
-    the rewrite touches any bucket and restored only after the job
-    commits — a crash mid-compaction leaves a directory that fails
-    the builders' gate, forcing a rebuild instead of silently serving
-    an index with destroyed buckets (the same durability contract the
-    incremental build path documents)."""
+    Crash safety: the completion gates (``_PARTITIONS`` for one-shot
+    indexes, ``_DELTA_APPENDED`` for incremental ones) and Spark's
+    ``_SUCCESS`` are REMOVED before the rewrite touches any bucket and
+    restored only after the job commits — a crash mid-compaction
+    leaves a directory that fails the builders' gate, forcing a
+    rebuild instead of silently serving an index with destroyed
+    buckets (the same durability contract ``durable.build_once``
+    documents)."""
     buckets = multi_file_buckets(path)
     if not buckets:
         return 0
@@ -262,8 +139,9 @@ def compact_index(
             # failure DURING it leaves a gate-less dir that rebuilds
             if had_marker:
                 os.remove(marker)
-            if os.path.exists(succ):
-                os.remove(succ)  # the overwrite job recreates on commit
+            for gate in (succ, os.path.join(path, MANIFEST)):
+                if os.path.exists(gate):
+                    os.remove(gate)  # re-published once the job commits
             _rewrite(hot, path, partition_cols, max(1, len(buckets) // 4))
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
@@ -276,39 +154,49 @@ def compact_index(
     return len(buckets)
 
 
+def build_one_shot(path: str, write) -> bool:
+    """The shared one-shot index build, one :func:`durable.build_once`:
+    ``write()`` lays down the partitions, and the ``_PARTITIONS``
+    manifest listing them is the gate, published strictly LAST.
+    Returns True if a build ran, False if the manifest already gated."""
+
+    def build() -> str:
+        write()
+        return partition_manifest(path)
+
+    return durable.build_once(path, os.path.join(path, MANIFEST), build)
+
+
 def build_base_plus_delta(
     path: str,
     write_base,
     write_delta,
     compact_fn=None,
 ) -> bool:
-    """The shared incremental-index build protocol, in ONE place so the
-    durability ordering can't diverge between the MinHash and ANN
-    builders (it previously lived as near-verbatim copies at every
-    call site): take the writer lock → base batch (``overwrite``) →
-    delta batch (``append``) → partition manifest → optional
-    compaction → the ``_DELTA_APPENDED`` completion marker, strictly
-    LAST.
+    """The shared incremental-index build, one :func:`durable.build_once`
+    whose build is: base batch (``overwrite``) → delta batch
+    (``append``) → partition manifest → optional compaction; the
+    ``_DELTA_APPENDED`` marker is the gate, published strictly LAST.
 
     Marker-last is the whole crash contract: a death anywhere in the
-    sequence — including inside ``compact_fn``, which previously ran
-    AFTER the marker was written and so could be skipped forever by a
-    crash in between — leaves a directory that fails the gate and
-    rebuilds. ``compact_fn`` runs inside the lock (``single_writer``
-    is re-entrant), so the whole lifecycle is one mutation section.
+    sequence — including inside ``compact_fn`` — leaves a directory
+    that fails the gate and rebuilds. ``compact_fn`` runs inside the
+    lock (``single_writer`` is re-entrant), so the whole lifecycle is
+    one mutation section.
 
     Returns True if a build ran, False if the marker already gated."""
-    marker = os.path.join(path, "_DELTA_APPENDED")
-    if os.path.exists(marker):
-        return False
-    with single_writer(path):
+
+    def build() -> str:
         write_base()
         write_delta()
         write_partition_manifest(path)
         if compact_fn is not None:
             compact_fn()
-        durable.publish(marker, "base+delta\n")
-    return True
+        return "base+delta\n"
+
+    return durable.build_once(
+        path, os.path.join(path, "_DELTA_APPENDED"), build
+    )
 
 
 def compact_minhash_index(spark: SparkSession, path: str) -> int:

@@ -421,7 +421,7 @@ def _delete_batch_fn(path: str):
     is explicit ids, not a predicate over state) or resurrect rows."""
 
     def delete_batch(batch: DataFrame, batch_id: int) -> None:
-        from psd_project_spark.operators.index_compact import single_writer
+        from psd_project_spark.durable import single_writer
 
         sigs_b = _with_signatures(batch, batch.sparkSession)
         with single_writer(path):

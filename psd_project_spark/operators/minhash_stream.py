@@ -26,10 +26,9 @@ from psd_project_spark.functions.caching import scratch_dir, transient_cache
 from psd_project_spark.operators.dedup import (
     CROSS_DEDUP_ORACLE,
     _band_frame,
-    _minhash_index_dir,
+    _ensure_minhash_index,
     _with_bucket,
     _with_signatures,
-    _write_minhash_index,
 )
 from psd_project_spark.sources.registry import load_table
 
@@ -76,13 +75,7 @@ def stream_minhash_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads ≤ the epoch's band buckets; the corpus-sized sides are one
     cached shingle table scan per epoch with broadcast-hash probes,
     zero corpus exchanges)."""
-    import os
-
-    from psd_project_spark.operators.index_compact import (
-        list_partitions,
-        single_writer,
-        write_partition_manifest,
-    )
+    from psd_project_spark.operators.index_compact import list_partitions
     from psd_project_spark.streaming.foreach_sink import run_stream
     from psd_project_spark.streaming.jobs import _stream_dir
 
@@ -92,11 +85,7 @@ def stream_minhash_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_eval = F.col("doc_id") % 50 == 0
     # build (or reuse) the SAME standing index minhash_index_export
     # serves — one corpus artifact, batch and streaming probes alike
-    path = _minhash_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        with single_writer(path):
-            _write_minhash_index(sigs.filter(~is_eval), path, "overwrite")
-            write_partition_manifest(path)
+    path = _ensure_minhash_index(sf_dir, sigs)
     present = list_partitions(path)
     st = sigs.filter(~is_eval).select(
         F.col("doc_id").alias("doc_train"), F.col("_sh").alias("_sht")

@@ -633,11 +633,9 @@ def run_time_travel(
     streaming runner it replaces here (see :func:`run_change_feed`'s
     optimization note); ``src`` and ``ckpt`` are accepted for
     call-site compatibility and no longer used."""
-    import os
-
     from psd_project_spark.streaming.foreach_sink import (
         apply_versioned_epoch,
-        parse_version,
+        current_version,
         read_versioned,
     )
 
@@ -666,9 +664,7 @@ def run_time_travel(
             affected_buckets=slice_buckets[i],
         )
         if i == 1:  # the snapshot as of T2
-            pinned = parse_version(
-                os.readlink(os.path.join(out_dir, "current"))
-            )[0]
+            pinned = current_version(out_dir)[0]
     return (
         read_versioned(spark, out_dir, version=pinned)
         .select(
@@ -1194,11 +1190,9 @@ def bootstrap_view(src_view_dir: str, dst_view_dir: str) -> int:
     if os.path.isdir(dst_view_dir):
         shutil.rmtree(dst_view_dir)
     shutil.copytree(src_view_dir, dst_view_dir, symlinks=True)
-    from psd_project_spark.streaming.foreach_sink import parse_version
+    from psd_project_spark.streaming.foreach_sink import current_version
 
-    return parse_version(
-        os.readlink(os.path.join(dst_view_dir, "current"))
-    )[0]
+    return current_version(dst_view_dir)[0]
 
 
 _VIEW_APPLIED = "_FEED_APPLIED"
@@ -1279,7 +1273,7 @@ def apply_feed_epoch(
 
     from psd_project_spark.streaming.foreach_sink import (
         apply_versioned_epoch,
-        parse_version,
+        current_version,
     )
 
     # replay guard BEFORE touching the feed (a replayed apply's change
@@ -1307,13 +1301,7 @@ def apply_feed_epoch(
             f"rejoin_feed_consumer at that snapshot's epoch before "
             f"applying again"
         )
-    current_link = os.path.join(view_dir, "current")
-    applied = (
-        parse_version(os.readlink(current_link))[0]
-        if os.path.lexists(current_link)
-        else -1
-    )
-    applied = max(applied, _view_applied(view_dir))
+    applied = max(current_version(view_dir)[0], _view_applied(view_dir))
     if consumer is not None:
         applied = max(
             applied, feed_consumer_progress(feed_dir).get(consumer, -1)

@@ -1077,22 +1077,13 @@ def ann_index_export(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ensure_ann_index(sf_dir: str, e: DataFrame) -> str:
-    """Build (or reuse) the one-shot full-corpus ANN index for
-    ``sf_dir`` under the writer lock; shared by the batch probe
-    (:func:`ann_index_export`) and the streaming search
-    (:func:`stream_ann_search`). Returns the index path."""
+    """Build (or reuse) the one-shot full-corpus ANN index; shared by
+    :func:`ann_index_export` and :func:`stream_ann_search`. Returns the
+    index path."""
+    from psd_project_spark.operators.index_compact import build_one_shot
+
     path = _ann_index_dir(sf_dir)
-    import os
-
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        from psd_project_spark.operators.index_compact import (
-            single_writer,
-            write_partition_manifest,
-        )
-
-        with single_writer(path):
-            _write_ann_index(e, path, "overwrite")
-            write_partition_manifest(path)
+    build_one_shot(path, lambda: _write_ann_index(e, path, "overwrite"))
     return path
 
 
@@ -1580,29 +1571,20 @@ def ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ensure_ivf_index(
     spark: SparkSession, sf_dir: str, e: DataFrame
 ) -> str:
-    """Build (or reuse) the one-shot full-corpus IVF index for
-    ``sf_dir`` under the writer lock; shared by the batch probe
-    (:func:`ivf_index_search`) and the streaming search
-    (:func:`stream_ivf_search`). Returns the index path."""
-    import os
+    """Build (or reuse) the one-shot full-corpus IVF index; shared by
+    :func:`ivf_index_search` and :func:`stream_ivf_search`. Its
+    ``_PARTITIONS`` gate is published after both the cell data and the
+    quantizer, so a crash between the two rebuilds. Returns the index
+    path."""
+    from psd_project_spark.operators.index_compact import build_one_shot
 
     path = _ivf_index_dir(sf_dir)
-    # completion gate = BOTH commits: the data write's _SUCCESS and
-    # the quantizer's (written after — a crash between the two leaves
-    # a dir that fails this gate and rebuilds)
-    if not (
-        os.path.exists(os.path.join(path, "_SUCCESS"))
-        and os.path.exists(os.path.join(path, "_quantizer", "_SUCCESS"))
-    ):
-        from psd_project_spark.operators.index_compact import (
-            single_writer,
-            write_partition_manifest,
-        )
-
-        codebook, cb_ids = _ivf_codebook(e)
-        with single_writer(path):
-            _write_ivf_index(spark, e, path, "overwrite", codebook, cb_ids)
-            write_partition_manifest(path)
+    build_one_shot(
+        path,
+        lambda: _write_ivf_index(
+            spark, e, path, "overwrite", *_ivf_codebook(e)
+        ),
+    )
     return path
 
 

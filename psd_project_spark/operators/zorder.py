@@ -84,20 +84,13 @@ def _bin_width(lo: int, hi: int) -> int:
 def build_zorder_layout(spark: SparkSession, sf_dir: str) -> str:
     """Write ``orders`` under ``zcell=N`` directory partitions (Morton
     interleave of the binned ``o_orderdate`` day number and
-    ``o_custkey``), gated + writer-locked like every persisted layout
-    here. The quantization params (per-dimension min and bin width —
-    the layout's tiny model state, like the IVF quantizer) are
-    persisted NEXT to the data and written STRICTLY LAST, so a crashed
-    build fails the gate and rebuilds. Returns the layout path."""
-    from psd_project_spark.operators.index_compact import single_writer
-
+    ``o_custkey``) through ``durable.build_once``. The quantization
+    params (per-dimension min and bin width — the layout's tiny model
+    state, like the IVF quantizer) are the gate, persisted NEXT to the
+    data. Returns the layout path."""
     path = _zorder_dir(sf_dir)
-    params_path = os.path.join(path, _PARAMS)
-    if os.path.exists(params_path):
-        return path
-    with single_writer(path):
-        if os.path.exists(params_path):  # raced build finished first
-            return path
+
+    def build() -> dict:
         o = load_table(spark, sf_dir, "orders")
         # ONE 4-value driver row: the two dimensions' bounds
         b = o.select(
@@ -131,7 +124,9 @@ def build_zorder_layout(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("zcell")
             .parquet(path)
         )
-        durable.publish(params_path, params)  # the gate, strictly last
+        return params
+
+    durable.build_once(path, os.path.join(path, _PARAMS), build)
     return path
 
 
@@ -237,15 +232,9 @@ def build_zonemap_table(spark: SparkSession, sf_dir: str) -> str:
     the written files (``input_file_name()`` groupBy — never a
     driver-side footer loop), and a reader consults the one small
     manifest instead of listing/opening every file."""
-    from psd_project_spark.operators.index_compact import single_writer
-
     path = _zonemap_dir(sf_dir)
-    zpath = os.path.join(path, _ZONEMAP)
-    if os.path.exists(zpath):
-        return path
-    with single_writer(path):
-        if os.path.exists(zpath):  # raced build finished first
-            return path
+
+    def build() -> dict:
         li = load_table(spark, sf_dir, "lineitem")
         (
             li.repartitionByRange(ZONEMAP_FILES, F.col("l_shipdate"))
@@ -262,11 +251,12 @@ def build_zonemap_table(spark: SparkSession, sf_dir: str) -> str:
             )
             .collect()  # bounded: one row per written file
         )
-        zmap = {
+        return {
             os.path.basename(urlparse(r["file"]).path): [r["lo"], r["hi"]]
             for r in stats
         }
-        durable.publish(zpath, zmap)  # the gate, strictly last
+
+    durable.build_once(path, os.path.join(path, _ZONEMAP), build)
     return path
 
 
@@ -440,50 +430,38 @@ def stream_zonemap_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     files-per-epoch entries and the probe's file-selection work stays
     one small-manifest read."""
     from psd_project_spark.functions.caching import scratch_dir
-    from psd_project_spark.operators.index_compact import single_writer
     from psd_project_spark.streaming.foreach_sink import (
         run_stream,
         stage_stream_splits,
     )
 
     path = _zonemap_dir(sf_dir) + "_stream"
-    zpath = os.path.join(path, _ZONEMAP)
-    marker = os.path.join(path, "_INGESTED")
-    if not os.path.exists(marker):
+
+    def build() -> str:
         li = load_table(spark, sf_dir, "lineitem")
         is_delta = F.col("l_orderkey") % 4 == 0
         src = scratch_dir("psd_zmstream_src_")
         stage_stream_splits(
             li.filter(is_delta), F.col("l_orderkey") % 3, src
         )
-        with single_writer(path):
-            # re-check the completion gate UNDER the lock (ADVICE r11):
-            # a process that saw the marker absent pre-lock may acquire
-            # the lock after a concurrent ingest finished — without
-            # this guard it would rmtree the finished layout it is
-            # about to probe (the same raced-build guard the batch
-            # builders above carry).
-            if not os.path.exists(marker):
-                if os.path.isdir(path):
-                    import shutil
+        # base phase: clustered write + full stats (the manifest
+        # exists before any epoch extends it)
+        _build_zonemap_base(spark, li.filter(~is_delta), path)
+        arriving = (
+            spark.readStream.schema(li.schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .parquet(src)
+        )
+        run_stream(
+            arriving,
+            _zonemap_ingest_batch_fn(path),
+            scratch_dir("psd_zmstream_ckpt_"),
+            state_partitions=None,
+        )
+        return "base + streamed appends + stats\n"
 
-                    shutil.rmtree(path)  # a crashed prior ingest
-                # base phase: clustered write + full stats (the
-                # manifest exists before any epoch extends it)
-                _build_zonemap_base(spark, li.filter(~is_delta), path)
-                arriving = (
-                    spark.readStream.schema(li.schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .option("recursiveFileLookup", "true")
-                    .parquet(src)
-                )
-                run_stream(
-                    arriving,
-                    _zonemap_ingest_batch_fn(path),
-                    scratch_dir("psd_zmstream_ckpt_"),
-                    state_partitions=None,
-                )
-                durable.publish(marker, "base + streamed appends + stats\n")
+    durable.build_once(path, os.path.join(path, "_INGESTED"), build)
     names = zonemap_files_for_range(path, _Z1, _Z2)
     src_df = (
         spark.read.parquet(*(os.path.join(path, n) for n in names))
@@ -559,9 +537,7 @@ def _zonemap_ingest_batch_fn(path: str):
     (:data:`_ZPURGES`)."""
 
     def ingest_batch(batch: DataFrame, batch_id: int) -> None:
-        from psd_project_spark.operators.index_compact import (
-            single_writer,
-        )
+        from psd_project_spark.durable import single_writer
 
         spark = batch.sparkSession
         prefix = f"e{batch_id}-"
@@ -729,9 +705,7 @@ def _zorder_ingest_batch_fn(path: str):
     def ingest_batch(batch: DataFrame, batch_id: int) -> None:
         import shutil
 
-        from psd_project_spark.operators.index_compact import (
-            single_writer,
-        )
+        from psd_project_spark.durable import single_writer
 
         spark = batch.sparkSession
         prefix = f"e{batch_id}-"
@@ -900,43 +874,36 @@ def stream_zorder_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     of listing cell dirs (the IVF-index / bucketed-sink discipline
     applied to the 2-D layout)."""
     from psd_project_spark.functions.caching import scratch_dir
-    from psd_project_spark.operators.index_compact import single_writer
     from psd_project_spark.streaming.foreach_sink import (
         run_stream,
         stage_stream_splits,
     )
 
     path = _zorder_dir(sf_dir) + "_stream"
-    marker = os.path.join(path, "_INGESTED")
-    if not os.path.exists(marker):
+
+    def build() -> str:
         o = load_table(spark, sf_dir, "orders")
         is_delta = F.col("o_orderkey") % 4 == 0
         src = scratch_dir("psd_zostream_src_")
         stage_stream_splits(
             o.filter(is_delta), F.col("o_orderkey") % 3, src
         )
-        with single_writer(path):
-            # re-check the completion gate UNDER the lock (the raced
-            # ingest guard — same as stream_zonemap_ingest)
-            if not os.path.exists(marker):
-                import shutil
+        _build_zcell_base(spark, o.filter(~is_delta), path)
+        arriving = (
+            spark.readStream.schema(o.schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .parquet(src)
+        )
+        run_stream(
+            arriving,
+            _zorder_ingest_batch_fn(path),
+            scratch_dir("psd_zostream_ckpt_"),
+            state_partitions=None,
+        )
+        return "base + streamed z-cell appends\n"
 
-                if os.path.isdir(path):
-                    shutil.rmtree(path)  # a crashed prior ingest
-                _build_zcell_base(spark, o.filter(~is_delta), path)
-                arriving = (
-                    spark.readStream.schema(o.schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .option("recursiveFileLookup", "true")
-                    .parquet(src)
-                )
-                run_stream(
-                    arriving,
-                    _zorder_ingest_batch_fn(path),
-                    scratch_dir("psd_zostream_ckpt_"),
-                    state_partitions=None,
-                )
-                durable.publish(marker, "base + streamed z-cell appends\n")
+    durable.build_once(path, os.path.join(path, "_INGESTED"), build)
     paths, _manifest = zcell_files_for_box(path, _D1, _D2, _C1, _C2)
     src_df = (
         spark.read.parquet(*paths)
@@ -1043,27 +1010,21 @@ def zonemap_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     files) rewrite work + one manifest edit, with the zone map
     guaranteeing the straddle set is ~2 files per range edge no
     matter how big the table is."""
-    from psd_project_spark.operators.index_compact import single_writer
+    import shutil
 
     base = build_zonemap_table(spark, sf_dir)
     path = base + "_del"
     zpath = os.path.join(path, _ZONEMAP)
-    marker = os.path.join(path, _DELETED)
-    if not os.path.exists(marker):
-        with single_writer(path):
-            if not os.path.exists(marker):  # raced delete finished first
-                import shutil
 
-                if os.path.isdir(path):
-                    shutil.rmtree(path)
-                os.makedirs(path)
-                zmap = durable.read_json(os.path.join(base, _ZONEMAP))
-                new_zmap = _purge_range_zones(
-                    spark, zmap, base, path, _DL1, _DL2
-                )
-                shutil.rmtree(path + "_stage", ignore_errors=True)
-                durable.publish(zpath, new_zmap)
-                durable.publish(marker, f"deleted [{_DL1}, {_DL2}]\n")
+    def build() -> str:
+        os.makedirs(path)
+        zmap = durable.read_json(os.path.join(base, _ZONEMAP))
+        new_zmap = _purge_range_zones(spark, zmap, base, path, _DL1, _DL2)
+        shutil.rmtree(path + "_stage", ignore_errors=True)
+        durable.publish(zpath, new_zmap)
+        return f"deleted [{_DL1}, {_DL2}]\n"
+
+    durable.build_once(path, os.path.join(path, _DELETED), build)
     names = sorted(durable.read_json(zpath))
     return _returnflag_agg(
         spark.read.parquet(*(os.path.join(path, n) for n in names))
@@ -1133,80 +1094,62 @@ def zorder_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlink per fully-covered cell — the 2-D analog of the zone map's
     O(straddling files) bound, with the Morton layout guaranteeing
     the band maps to a bin rectangle."""
-    from psd_project_spark.operators.index_compact import single_writer
+    import shutil
 
     base = build_zorder_layout(spark, sf_dir)
     path = base + "_del"
-    marker = os.path.join(path, _DELETED)
-    if not os.path.exists(marker):
-        with single_writer(path):
-            if not os.path.exists(marker):  # raced delete finished first
-                import shutil
 
-                if os.path.isdir(path):
-                    shutil.rmtree(path)
-                os.makedirs(path)
-                params = durable.read_json(os.path.join(base, _PARAMS))
-                bins = _cell_bins()
-                affected = set(
-                    zcells_for_box(
-                        params,
-                        _dt.date(1992, 1, 1),
-                        _dt.date(2005, 12, 31),
-                        _KC1,
-                        _KC2,
-                    )
+    def build() -> str:
+        os.makedirs(path)
+        params = durable.read_json(os.path.join(base, _PARAMS))
+        bins = _cell_bins()
+        affected = set(
+            zcells_for_box(
+                params, _dt.date(1992, 1, 1), _dt.date(2005, 12, 31),
+                _KC1, _KC2,
+            )
+        )
+        for d in sorted(os.listdir(base)):
+            if not d.startswith("zcell="):
+                continue
+            cell = int(d.split("=", 1)[1])
+            cdir_base = os.path.join(base, d)
+            files = [
+                f for f in os.listdir(cdir_base) if f.endswith(".parquet")
+            ]
+            if cell not in affected:  # zero-copy carry-over
+                cdir = os.path.join(path, d)
+                os.makedirs(cdir)
+                for f in files:
+                    os.link(os.path.join(cdir_base, f), os.path.join(cdir, f))
+                continue
+            if _bbin_fully_inside_band(
+                params, bins[cell][1], _KC1, _KC2, clamped=False
+            ):
+                continue  # bin fully inside the band: drop cell
+            stage = os.path.join(path + "_stage", d)
+            (
+                spark.read.parquet(*(f"{cdir_base}/{f}" for f in files))
+                .filter(~F.col("o_custkey").between(_KC1, _KC2))
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(stage)
+            )
+            cdir = os.path.join(path, d)
+            os.makedirs(cdir)
+            for i, f in enumerate(
+                sorted(x for x in os.listdir(stage) if x.endswith(".parquet"))
+            ):
+                os.replace(
+                    os.path.join(stage, f),
+                    os.path.join(cdir, f"d-p{i:05d}.parquet"),
                 )
-                for d in sorted(os.listdir(base)):
-                    if not d.startswith("zcell="):
-                        continue
-                    cell = int(d.split("=", 1)[1])
-                    cdir_base = os.path.join(base, d)
-                    files = [
-                        f for f in os.listdir(cdir_base)
-                        if f.endswith(".parquet")
-                    ]
-                    if cell not in affected:  # zero-copy carry-over
-                        cdir = os.path.join(path, d)
-                        os.makedirs(cdir)
-                        for f in files:
-                            os.link(
-                                os.path.join(cdir_base, f),
-                                os.path.join(cdir, f),
-                            )
-                        continue
-                    if _bbin_fully_inside_band(
-                        params, bins[cell][1], _KC1, _KC2, clamped=False
-                    ):
-                        continue  # bin fully inside the band: drop cell
-                    stage = os.path.join(path + "_stage", d)
-                    (
-                        spark.read.parquet(
-                            *(os.path.join(cdir_base, f) for f in files)
-                        )
-                        .filter(~F.col("o_custkey").between(_KC1, _KC2))
-                        .coalesce(1)
-                        .write.mode("overwrite")
-                        .parquet(stage)
-                    )
-                    cdir = os.path.join(path, d)
-                    os.makedirs(cdir)
-                    for i, f in enumerate(
-                        sorted(
-                            x for x in os.listdir(stage)
-                            if x.endswith(".parquet")
-                        )
-                    ):
-                        os.replace(
-                            os.path.join(stage, f),
-                            os.path.join(cdir, f"d-p{i:05d}.parquet"),
-                        )
-                shutil.rmtree(path + "_stage", ignore_errors=True)
-                durable.publish(os.path.join(path, _PARAMS), params)
-                durable.publish(marker, f"purged custkey [{_KC1}, {_KC2}]\n")
-    return _priority_agg(
-        spark.read.parquet(path)
-    )
+        shutil.rmtree(path + "_stage", ignore_errors=True)
+        durable.publish(os.path.join(path, _PARAMS), params)
+        return f"purged custkey [{_KC1}, {_KC2}]\n"
+
+    durable.build_once(path, os.path.join(path, _DELETED), build)
+    return _priority_agg(spark.read.parquet(path))
 
 
 ZORDER_DELETE_ORACLE = f"""
@@ -1238,36 +1181,32 @@ def stream_zorder_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: same bound as the batch verb — O(edge-bin cells' live
     sets) rewrite work + manifest entry drops — but now compounding
     with online ingestion instead of requiring a frozen layout."""
-    from psd_project_spark.operators.index_compact import single_writer
+    import shutil
 
     # ensure the streamed layout exists (gated, shared with the
     # ingest query — the returned probe frame is lazy and unused)
     stream_zorder_ingest(spark, sf_dir)
     src_path = _zorder_dir(sf_dir) + "_stream"
     path = src_path + "_del"
-    marker = os.path.join(path, _DELETED)
-    if not os.path.exists(marker):
-        with single_writer(path):
-            if not os.path.exists(marker):  # raced delete finished first
-                import shutil
 
-                if os.path.isdir(path):
-                    shutil.rmtree(path)
-                os.makedirs(path)
-                manifest = _load_zcells(src_path)
-                new_cells = _purge_band_from_manifest(
-                    spark, manifest, src_path, path, _KC1, _KC2
-                )
-                shutil.rmtree(path + "_stage", ignore_errors=True)
-                _publish_zcells(
-                    path,
-                    {
-                        "applied": manifest["applied"],
-                        "params": manifest["params"],
-                        "cells": new_cells,
-                    },
-                )
-                durable.publish(marker, f"purged custkey [{_KC1}, {_KC2}]\n")
+    def build() -> str:
+        os.makedirs(path)
+        manifest = _load_zcells(src_path)
+        new_cells = _purge_band_from_manifest(
+            spark, manifest, src_path, path, _KC1, _KC2
+        )
+        shutil.rmtree(path + "_stage", ignore_errors=True)
+        _publish_zcells(
+            path,
+            {
+                "applied": manifest["applied"],
+                "params": manifest["params"],
+                "cells": new_cells,
+            },
+        )
+        return f"purged custkey [{_KC1}, {_KC2}]\n"
+
+    durable.build_once(path, os.path.join(path, _DELETED), build)
     manifest = _load_zcells(path)
     paths = [
         os.path.join(path, f"zcell={c}", f)
@@ -1408,53 +1347,47 @@ def stream_zorder_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest publish + O(straddling cells) rewrite, and ingestion
     resumes against the published manifest)."""
     from psd_project_spark.functions.caching import scratch_dir
-    from psd_project_spark.operators.index_compact import single_writer
     from psd_project_spark.streaming.foreach_sink import (
         run_stream,
         stage_stream_splits,
     )
 
     path = _zorder_dir(sf_dir) + "_resume"
-    marker = os.path.join(path, "_RESUMED")
-    if not os.path.exists(marker):
+
+    def build() -> str:
         o = load_table(spark, sf_dir, "orders")
         m5 = F.col("o_orderkey") % 5
-        with single_writer(path):
-            if not os.path.exists(marker):  # raced lifecycle finished
-                import shutil
+        _build_zcell_base(spark, o.filter(m5 >= 3), path)
+        src = scratch_dir("psd_zores_src_")
+        ckpt = scratch_dir("psd_zores_ckpt_")
+        stage_stream_splits(o.filter(m5 < 2), m5, src, n=2)
 
-                if os.path.isdir(path):
-                    shutil.rmtree(path)
-                _build_zcell_base(spark, o.filter(m5 >= 3), path)
-                src = scratch_dir("psd_zores_src_")
-                ckpt = scratch_dir("psd_zores_ckpt_")
-                stage_stream_splits(o.filter(m5 < 2), m5, src, n=2)
+        def ingest() -> None:
+            run_stream(
+                spark.readStream.schema(o.schema)
+                .option("maxFilesPerTrigger", 1)
+                .option("recursiveFileLookup", "true")
+                .parquet(src),
+                _zorder_ingest_batch_fn(path),
+                ckpt,
+                state_partitions=None,
+            )
 
-                def ingest() -> None:
-                    run_stream(
-                        spark.readStream.schema(o.schema)
-                        .option("maxFilesPerTrigger", 1)
-                        .option("recursiveFileLookup", "true")
-                        .parquet(src),
-                        _zorder_ingest_batch_fn(path),
-                        ckpt,
-                        state_partitions=None,
-                    )
+        ingest()  # epochs 0 and 1
+        _purge_band_inplace(spark, path, _KC1, _KC2)
+        (
+            o.filter(m5 == 2)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{src}/p2")
+        )
+        ingest()  # the late epoch: batch id 2 > applied 1
+        return (
+            f"base + 2 epochs, purged custkey "
+            f"[{_KC1}, {_KC2}], then 1 more epoch\n"
+        )
 
-                ingest()  # epochs 0 and 1
-                _purge_band_inplace(spark, path, _KC1, _KC2)
-                (
-                    o.filter(m5 == 2)
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(f"{src}/p2")
-                )
-                ingest()  # the late epoch: batch id 2 > applied 1
-                durable.publish(
-                    marker,
-                    f"base + 2 epochs, purged custkey "
-                    f"[{_KC1}, {_KC2}], then 1 more epoch\n",
-                )
+    durable.build_once(path, os.path.join(path, "_RESUMED"), build)
     manifest = _load_zcells(path)
     paths = [
         os.path.join(path, f"zcell={c}", f)
@@ -1533,53 +1466,47 @@ def stream_zonemap_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite + metadata drops) compounding with online ingestion; the
     journal is one small JSON consulted per epoch commit."""
     from psd_project_spark.functions.caching import scratch_dir
-    from psd_project_spark.operators.index_compact import single_writer
     from psd_project_spark.streaming.foreach_sink import (
         run_stream,
         stage_stream_splits,
     )
 
     path = _zonemap_dir(sf_dir) + "_resume"
-    marker = os.path.join(path, "_RESUMED")
-    if not os.path.exists(marker):
+
+    def build() -> str:
         li = load_table(spark, sf_dir, "lineitem")
         m5 = F.col("l_orderkey") % 5
-        with single_writer(path):
-            if not os.path.exists(marker):  # raced lifecycle finished
-                import shutil
+        _build_zonemap_base(spark, li.filter(m5 >= 3), path)
+        src = scratch_dir("psd_zmres_src_")
+        ckpt = scratch_dir("psd_zmres_ckpt_")
+        stage_stream_splits(li.filter(m5 < 2), m5, src, n=2)
 
-                if os.path.isdir(path):
-                    shutil.rmtree(path)
-                _build_zonemap_base(spark, li.filter(m5 >= 3), path)
-                src = scratch_dir("psd_zmres_src_")
-                ckpt = scratch_dir("psd_zmres_ckpt_")
-                stage_stream_splits(li.filter(m5 < 2), m5, src, n=2)
+        def ingest() -> None:
+            run_stream(
+                spark.readStream.schema(li.schema)
+                .option("maxFilesPerTrigger", 1)
+                .option("recursiveFileLookup", "true")
+                .parquet(src),
+                _zonemap_ingest_batch_fn(path),
+                ckpt,
+                state_partitions=None,
+            )
 
-                def ingest() -> None:
-                    run_stream(
-                        spark.readStream.schema(li.schema)
-                        .option("maxFilesPerTrigger", 1)
-                        .option("recursiveFileLookup", "true")
-                        .parquet(src),
-                        _zonemap_ingest_batch_fn(path),
-                        ckpt,
-                        state_partitions=None,
-                    )
+        ingest()  # epochs 0 and 1
+        _purge_range_inplace(spark, path, _DL1, _DL2)
+        (
+            li.filter(m5 == 2)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{src}/p2")
+        )
+        ingest()  # the late epoch: not in the purge journal
+        return (
+            f"base + 2 epochs, purged [{_DL1}, {_DL2}], "
+            f"then 1 more epoch\n"
+        )
 
-                ingest()  # epochs 0 and 1
-                _purge_range_inplace(spark, path, _DL1, _DL2)
-                (
-                    li.filter(m5 == 2)
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(f"{src}/p2")
-                )
-                ingest()  # the late epoch: not in the purge journal
-                durable.publish(
-                    marker,
-                    f"base + 2 epochs, purged [{_DL1}, {_DL2}], "
-                    f"then 1 more epoch\n",
-                )
+    durable.build_once(path, os.path.join(path, "_RESUMED"), build)
     names = sorted(durable.read_json(os.path.join(path, _ZONEMAP)))
     src_df = (
         spark.read.parquet(*(os.path.join(path, n) for n in names))

@@ -545,22 +545,10 @@ def parse_version(name: str) -> tuple[int, int]:
 
 def current_version(out_dir: str) -> tuple[int, int]:
     """The published version's ``(major, minor)``; ``(-1, 0)`` when
-    nothing is published yet."""
-    current = os.path.join(out_dir, "current")
-    if not os.path.lexists(current):
-        return (-1, 0)
-    return parse_version(os.readlink(current))
-
-
-def _publish_version(out_dir: str, vname: str) -> None:
-    """Atomically repoint ``current`` at ``<vname>`` (tmp symlink +
-    rename — readers never see a missing or half-written link)."""
-    current = os.path.join(out_dir, "current")
-    tmp = os.path.join(out_dir, f".swap{vname}")
-    if os.path.lexists(tmp):
-        os.unlink(tmp)
-    os.symlink(vname, tmp)
-    os.replace(tmp, current)  # atomic repoint
+    nothing is published yet. Raises ``durable.CorruptMetadata`` when
+    ``current`` is not a symlink."""
+    vname = durable.read_pointer(os.path.join(out_dir, "current"))
+    return (-1, 0) if vname is None else parse_version(vname)
 
 
 def _retain_versions(
@@ -722,7 +710,7 @@ def apply_versioned_epoch(
         merged.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"v{batch_id}")
         )
-        _publish_version(out_dir, f"v{batch_id}")
+        durable.repoint(current, f"v{batch_id}")
 
     def write_bucketed(current) -> None:
         spark = df.sparkSession
@@ -847,7 +835,7 @@ def apply_versioned_epoch(
         _write_manifest(
             out_dir, f"v{batch_id}", schema, buckets, mapping, n_buckets
         )
-        _publish_version(out_dir, f"v{batch_id}")
+        durable.repoint(current, f"v{batch_id}")
 
     # an empty epoch changes nothing — skip the version write entirely
     # (the symlink simply stays at the last data epoch; a replay of
@@ -864,7 +852,7 @@ def apply_versioned_epoch(
         # would read and clobber the same version directory. Only the
         # MAJOR counts: a dotted metadata version (v1.1) on top of
         # batch 1 must not swallow batch 2.
-        applied = parse_version(os.readlink(current))[0]
+        applied = current_version(out_dir)[0]
         if applied >= batch_id:
             return
         if bucket_by is None:
@@ -903,7 +891,7 @@ def _load_current_manifest_for_ddl(
         raise FileNotFoundError(
             f"{out_dir} has no published version to evolve"
         )
-    major, minor = parse_version(os.readlink(current))
+    major, minor = current_version(out_dir)
     if batch_id is None:
         vname = f"v{major}.{minor + 1}"
     else:
@@ -1006,7 +994,7 @@ def rename_versioned_column(
         mapping,
         m["n_buckets"],  # a metadata epoch must not drop the layout record
     )
-    _publish_version(out_dir, m["vname"])
+    durable.repoint(os.path.join(out_dir, "current"), m["vname"])
     _retain_versions(out_dir, keep_versions, bucketed=True)
 
 
@@ -1050,7 +1038,7 @@ def drop_versioned_column(
         mapping,
         m["n_buckets"],  # a metadata epoch must not drop the layout record
     )
-    _publish_version(out_dir, m["vname"])
+    durable.repoint(os.path.join(out_dir, "current"), m["vname"])
     _retain_versions(out_dir, keep_versions, bucketed=True)
 
 
@@ -1098,7 +1086,7 @@ def rebucket_versioned(
     vname = m["vname"]
     if not buckets:  # an emptied table rebuckets as metadata
         _write_manifest(out_dir, vname, schema, {}, mapping, new_n_buckets)
-        _publish_version(out_dir, vname)
+        durable.repoint(os.path.join(out_dir, "current"), vname)
         _retain_versions(out_dir, keep_versions, bucketed=True)
         return
     paths = [os.path.join(out_dir, rel) for rel in sorted(buckets.values())]
@@ -1143,7 +1131,7 @@ def rebucket_versioned(
     _write_manifest(
         out_dir, vname, schema, new_buckets, mapping, new_n_buckets
     )
-    _publish_version(out_dir, vname)
+    durable.repoint(os.path.join(out_dir, "current"), vname)
     _retain_versions(out_dir, keep_versions, bucketed=True)
 
 

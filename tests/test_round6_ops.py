@@ -215,7 +215,7 @@ def test_fingerprint_sees_middle_byte_rewrite(tmp_path):
 
 
 def test_single_writer_lock_refuses_live_holder(tmp_path):
-    from psd_project_spark.operators.index_compact import single_writer
+    from psd_project_spark.durable import single_writer
 
     path = str(tmp_path / "idx")
     os.makedirs(path)
@@ -228,7 +228,7 @@ def test_single_writer_lock_refuses_live_holder(tmp_path):
 
 
 def test_single_writer_lock_breaks_stale_and_releases(tmp_path):
-    from psd_project_spark.operators.index_compact import single_writer
+    from psd_project_spark.durable import single_writer
 
     path = str(tmp_path / "idx")
     os.makedirs(path)
@@ -243,7 +243,7 @@ def test_single_writer_lock_breaks_stale_and_releases(tmp_path):
 def test_lock_survives_overwrite_build(spark, tmp_path):
     """The lock lives OUTSIDE the index dir, so an overwrite-mode
     Spark write (which wipes the dir) cannot drop it mid-build."""
-    from psd_project_spark.operators.index_compact import single_writer
+    from psd_project_spark.durable import single_writer
 
     path = str(tmp_path / "idx")
     df = spark.range(10).selectExpr(
@@ -281,7 +281,7 @@ def test_single_writer_is_reentrant(tmp_path):
     """An inner mutation section in the SAME process (compaction inside
     a gated build) enters as a no-op and must not release the outer
     holder's lock on exit."""
-    from psd_project_spark.operators.index_compact import single_writer
+    from psd_project_spark.durable import single_writer
 
     path = str(tmp_path / "idx")
     os.makedirs(path)
@@ -302,7 +302,6 @@ def test_compact_refusal_leaks_no_session_conf(spark, tmp_path):
     partition swap that silently keeps stale buckets."""
     from psd_project_spark.operators.index_compact import (
         compact_minhash_index,
-        single_writer,
     )
 
     path = str(tmp_path / "idx")
@@ -406,7 +405,7 @@ def test_single_writer_refuses_unreadable_lock(tmp_path):
     mid-acquisition or external interference), never silently broken:
     with atomic pid publication our own protocol can't produce one, so
     breaking it could delete a live writer's lock."""
-    from psd_project_spark.operators.index_compact import single_writer
+    from psd_project_spark.durable import single_writer
 
     path = str(tmp_path / "idx")
     os.makedirs(path)

@@ -10,7 +10,7 @@ import pytest
 # --- single_writer._break_stale (ADVICE r06 #1: TOCTOU) ----------------------
 
 def test_break_stale_removes_diagnosed_dead_lock(tmp_path):
-    from psd_project_spark.operators.index_compact import single_writer
+    from psd_project_spark.durable import single_writer
 
     path = str(tmp_path / "idx")
     os.makedirs(path)
@@ -25,7 +25,7 @@ def test_break_stale_removes_diagnosed_dead_lock(tmp_path):
 def test_break_stale_is_noop_when_already_broken(tmp_path):
     """The losing racer's rename hits FileNotFoundError and must return
     quietly (it then retries the link against the winner's new lock)."""
-    from psd_project_spark.operators.index_compact import single_writer
+    from psd_project_spark.durable import single_writer
 
     path = str(tmp_path / "idx")
     os.makedirs(path)
@@ -39,7 +39,7 @@ def test_break_stale_restores_reacquired_live_lock(tmp_path):
     and linked its own LIVE lock. The rename captures the live lock —
     content validation must RESTORE it byte-identical and raise,
     never leave the live writer lockless."""
-    from psd_project_spark.operators.index_compact import single_writer
+    from psd_project_spark.durable import single_writer
 
     path = str(tmp_path / "idx")
     os.makedirs(path)
@@ -56,7 +56,7 @@ def test_break_stale_restores_reacquired_live_lock(tmp_path):
 def test_enter_still_breaks_stale_end_to_end(tmp_path):
     """The full acquisition path over a genuinely stale lock still
     acquires (the atomic break composes with the two-pass retry)."""
-    from psd_project_spark.operators.index_compact import single_writer
+    from psd_project_spark.durable import single_writer
 
     path = str(tmp_path / "idx")
     os.makedirs(path)

@@ -73,10 +73,12 @@ def test_ivf_compaction_leaves_single_file_cells(ivf_results):
 
 def test_ivf_gate_rejects_missing_quantizer(spark, ivf_results):
     """Crash contract: a directory whose data write committed but
-    whose quantizer is missing fails the completion gate and
+    whose quantizer is missing — so its ``_PARTITIONS`` gate, published
+    after both, is missing too — fails the completion gate and
     rebuilds (rather than serving a probe that cannot be answered)."""
     path = S._ivf_index_dir(SF_DIR)
     shutil.rmtree(os.path.join(path, "_quantizer"))
+    os.remove(os.path.join(path, "_PARTITIONS"))
     got = _rows(S.ivf_index_search(spark, SF_DIR))
     assert os.path.exists(os.path.join(path, "_quantizer", "_SUCCESS"))
     assert got == ivf_results["mem"]

@@ -64,7 +64,7 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from psd_project_spark.session import DYNAMIC_CONF
+    from psd_project_spark.session import DYNAMIC_CONF, _default_driver_memory
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
@@ -72,7 +72,11 @@ def main() -> None:
         .appName("psd-profile")
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or _default_driver_memory(),
+        )
         .config("spark.eventLog.enabled", "true")
         # Spark 4.1 compresses the log with zstd by default, which this
         # line-by-line JSON reader cannot parse.
