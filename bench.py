@@ -10,8 +10,17 @@ Prints ONE JSON line:
 
 Named queries restrict the run to those queries (the optimisation inner
 loop): same passes, retry and stall gate, the line lists every named
-query, and the SF2 pass, the baseline refresh and BENCH_detail.json are
-skipped, so a subset run never rewrites the committed files.
+query and its ``counters``, and the SF2 pass, the baseline refresh and
+BENCH_detail.json are skipped, so a subset run never rewrites the
+committed files.
+
+The session writes an uncompressed event log to a throwaway dir; after
+``spark.stop()`` it is parsed with ``perfbench/eventlog.py`` and each
+query's kept (fastest) run gets the Spark counters of the jobs submitted
+inside its wall-clock window (``perfbench/layers.spark_layer`` plus
+``spark.input_bytes``). Full runs write them to BENCH_detail.json under
+``counters``. A kept run with no job in its window means the log
+collected nothing: bench.py exits non-zero and names the query.
 
 Each query runs twice: a warm-up is NOT used — cold numbers are what the
 driver compares — but the session/JVM start is excluded (measured after
@@ -23,10 +32,16 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
+from bisect import bisect_left, bisect_right
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench import eventlog  # noqa: E402
+from perfbench.layers import spark_layer  # noqa: E402
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 SF_DIR = os.path.normpath(
@@ -53,11 +68,84 @@ HEADLINE = [
 ]
 
 
+def time_query(spark, fn, sf_dir: str) -> tuple[float, tuple[float, float]]:
+    """Run registry query ``fn`` at ``sf_dir`` through the noop sink.
+
+    Returns the elapsed seconds and the run's ``(start, end)`` wall-clock
+    window (``time.time()``), which event-log jobs are attributed by.
+    The query's cached intermediates are dropped afterwards, so the next
+    query is not timed under this one's memory pressure.
+    """
+    start = time.time()
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    dt = time.perf_counter() - t0
+    end = time.time()
+    spark.catalog.clearCache()
+    return dt, (start, end)
+
+
+def keep_fastest(
+    best: dict[str, float],
+    windows: dict[str, tuple[float, float]],
+    name: str,
+    dt: float,
+    window: tuple[float, float],
+) -> None:
+    """Keep ``dt`` as ``name``'s time if it beats the one kept so far,
+    and its run's window with it, so the counters describe the run
+    whose time is reported."""
+    if dt < best.get(name, float("inf")):
+        best[name] = dt
+        windows[name] = window
+
+
+def query_counters(
+    jobs: list[dict], windows: dict[str, tuple[float, float]]
+) -> dict[str, dict[str, float]]:
+    """Per-query Spark counters: each job (an ``eventlog.parse`` record)
+    counts for the window that contains its submission time; jobs in no
+    window (warm-up, discarded runs) are dropped. Attribution is by time,
+    not job group: a streaming micro-batch job carries the stream's run
+    id as its group, but is submitted inside the caller's window."""
+    jobs = sorted(jobs, key=lambda j: j["start"])
+    starts = [j["start"] for j in jobs]
+    out = {}
+    for name, (lo, hi) in windows.items():
+        mine = jobs[bisect_left(starts, lo):bisect_right(starts, hi)]
+        if not mine:
+            raise SystemExit(
+                f"bench.py: no Spark job in the event log for {name}'s "
+                "kept run — the counters collected nothing"
+            )
+        out[name] = spark_layer(mine, [(lo, hi)], 1)
+        out[name]["spark.input_bytes"] = sum(j["input_bytes"] for j in mine)
+    return out
+
+
 def main() -> None:
-    from psd_project_spark.session import get_spark
+    log_dir = tempfile.mkdtemp(prefix="psd-bench-eventlog-")
+    try:
+        run(log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+
+
+def run(log_dir: str) -> None:
+    from psd_project_spark.session import get_spark, spark_builder
     from psd_project_spark.registry import queries
 
     only = sys.argv[1:]
+    # the event log is a static conf: set before the JVM starts, then
+    # get_spark picks the session up and applies the engine defaults
+    (
+        spark_builder(app_name="psd-bench")
+        .config("spark.eventLog.enabled", "true")
+        .config("spark.eventLog.dir", log_dir)
+        # zstandard is not installed, and the parser reads plain JSON
+        .config("spark.eventLog.compress", "false")
+        .getOrCreate()
+    )
     spark = get_spark(app_name="psd-bench")
     qs = queries()
     unknown = sorted(set(only) - set(qs))
@@ -86,19 +174,16 @@ def main() -> None:
     # maintenance threads) that would otherwise land on random queries;
     # min-of-2 reports steady-state engine throughput.
     timings: dict[str, float] = {}
+    # wall-clock window of the run each ``timings`` entry keeps
+    windows: dict[str, tuple[float, float]] = {}
 
     def run_once(name: str, pass_no, sf_dir: str = SF_DIR,
-                 book: dict[str, float] | None = None) -> None:
-        book = timings if book is None else book
-        t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        dt = round(time.perf_counter() - t0, 3)
-        book[name] = min(book.get(name, dt), dt)
+                 book: dict[str, float] = timings,
+                 book_windows: dict = windows) -> None:
+        dt, window = time_query(spark, qs[name], sf_dir)
+        dt = round(dt, 3)
+        keep_fastest(book, book_windows, name, dt, window)
         print(f"[bench] pass{pass_no} {name}: {dt}s", file=sys.stderr, flush=True)
-        # queries cache their own intermediates; drop them so later
-        # queries aren't timed under another query's memory pressure
-        spark.catalog.clearCache()
 
     for pass_no in range(2):
         for name in names:
@@ -123,24 +208,19 @@ def main() -> None:
     # ({"_sf_dir": ..., "queries": {...}}): a bench run at a smaller SF
     # must not permanently lower the committed per-query baselines
     # (which would mass-flag normal-SF runs as stall_suspects). On
-    # mismatch the committed file is left untouched and this run
-    # proceeds baseline-less. Legacy flat files (name→sec) predate the
-    # sf key and were all measured at the default SF_DIR.
+    # mismatch (or a file without that key) the committed file is left
+    # untouched and this run proceeds baseline-less.
     baseline: dict[str, float] = {}
     baseline_sf_ok = True
     if os.path.exists(base_path):
         with open(base_path) as fh:
             raw_base = json.load(fh)
-        if "queries" in raw_base and isinstance(raw_base["queries"], dict):
-            # normpath both sides: a trailing slash in the env var must
-            # not silently disable the stall gate + baseline refresh
-            baseline_sf_ok = (
-                os.path.normpath(str(raw_base.get("_sf_dir"))) == SF_DIR
-            )
-            baseline = raw_base["queries"] if baseline_sf_ok else {}
-        else:
-            baseline_sf_ok = SF_DIR == os.path.normpath(DEFAULT_SF_DIR)
-            baseline = raw_base if baseline_sf_ok else {}
+        # normpath both sides: a trailing slash in the env var must
+        # not silently disable the stall gate + baseline refresh
+        baseline_sf_ok = isinstance(raw_base.get("queries"), dict) and (
+            os.path.normpath(str(raw_base.get("_sf_dir"))) == SF_DIR
+        )
+        baseline = raw_base["queries"] if baseline_sf_ok else {}
 
     def stalled(name: str) -> bool:
         # Floor lowered 1.5 → 0.3 s (round-15 harness change, VERDICT
@@ -193,12 +273,28 @@ def main() -> None:
     # Second-SF pass: headline queries only (bounded wall time), min of
     # 2 runs, so the output carries a per-query scaling ratio.
     timings_small: dict[str, float] = {}
+    windows_small: dict[str, tuple[float, float]] = {}  # no counters kept
     sf2_val: float | str | None = None
     if not only and SF2_DIR and os.path.isdir(SF2_DIR) and SF2_DIR != SF_DIR:
         sf2_val = parse_sf(SF2_DIR)
         for pass_no in range(2):
             for name in [n for n in HEADLINE if n in qs]:
-                run_once(name, f"sf2-{pass_no}", SF2_DIR, timings_small)
+                run_once(
+                    name, f"sf2-{pass_no}", SF2_DIR,
+                    timings_small, windows_small,
+                )
+    cpus = spark.sparkContext.defaultParallelism
+    spark.stop()  # closes the event log
+    t0 = time.perf_counter()
+    paths = eventlog.log_files(log_dir)
+    jobs = eventlog.parse(paths)
+    counters = query_counters(jobs, windows)
+    print(
+        f"[bench] event log: {len(jobs)} jobs, "
+        f"{sum(map(os.path.getsize, paths)) / 2**20:.1f} MB, "
+        f"parsed in {time.perf_counter() - t0:.2f}s",
+        file=sys.stderr, flush=True,
+    )
     # The driver captures only the TAIL of stdout, so the final line must
     # stay short: headline + worst-5 queries inline, full per-query detail
     # in BENCH_detail.json next to this script.
@@ -216,6 +312,7 @@ def main() -> None:
                     "sf": sf_val,
                     "sf_small": sf2_val,
                     "queries_small": timings_small,
+                    "counters": counters,
                 },
                 fh,
                 indent=1,
@@ -245,10 +342,11 @@ def main() -> None:
         "detail": "BENCH_detail.json",
         "sf": sf_val,
         "sf_dir": SF_DIR,
-        "cpus": spark.sparkContext.defaultParallelism,
+        "cpus": cpus,
     }
     if only:
         del out["detail"]
+        out["counters"] = counters
     if stall_suspects:
         # queries whose best-of-5 still exceeds 2× the committed
         # best-known baseline — treat their numbers as VM noise until
@@ -268,7 +366,6 @@ def main() -> None:
             if timings_small[n] > 0 and n in timings
         }
     print(json.dumps(out))
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -537,6 +537,8 @@ def _zonemap_ingest_batch_fn(path: str):
     (:data:`_ZPURGES`)."""
 
     def ingest_batch(batch: DataFrame, batch_id: int) -> None:
+        import shutil
+
         from psd_project_spark.durable import single_writer
 
         spark = batch.sparkSession
@@ -580,6 +582,7 @@ def _zonemap_ingest_batch_fn(path: str):
                 )
                 renamed[dest] = bounds
             _merge_zonemap(path, renamed, drop_prefix=prefix)
+            shutil.rmtree(path + "_stage", ignore_errors=True)
 
     return ingest_batch
 

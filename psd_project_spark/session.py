@@ -3,7 +3,8 @@
 Two layers:
 
 - :func:`get_spark` builds a local session with scale-appropriate
-  defaults (AQE on, shuffle partitions ~ cores, UTC, Arrow).
+  defaults (AQE on, shuffle partitions ~ cores, UTC, Arrow) from
+  :func:`spark_builder`, which harnesses extend with static confs.
 - :func:`ensure_conf` applies the *dynamic* SQL confs this engine needs
   to any externally-provided session (the correctness driver constructs
   its own ``SparkSession``), e.g. nanosecond-parquet handling for the
@@ -69,20 +70,18 @@ def _default_driver_memory() -> str:
     return f"{min(24 * 1024, ram_mb * 3 // 4)}m"
 
 
-def get_spark(
+def spark_builder(
     app_name: str = "psd_project_spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
-) -> SparkSession:
-    """Build (or reuse) a local SparkSession with engine defaults.
+) -> SparkSession.Builder:
+    """The configured local-session builder behind :func:`get_spark`.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or 32. In local mode the
-    driver JVM is the only process, so ``driver_memory`` is the single
-    memory knob; it only takes effect if the JVM is not yet started.
-    It defaults to ``$SPARK_GRAFT_DRIVER_MEM``, else the smaller of 24g
-    and three quarters of physical RAM, so a small host never grants
-    the heap more memory than it has.
+    A harness that needs a static conf (one read only when the JVM
+    starts, e.g. an event log) chains it onto this builder, calls
+    ``getOrCreate`` and then :func:`get_spark`, which picks that
+    session up.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or cpus
@@ -100,6 +99,26 @@ def get_spark(
     )
     for key, value in DYNAMIC_CONF.items():
         builder = builder.config(key, value)
-    spark = builder.getOrCreate()
+    return builder
+
+
+def get_spark(
+    app_name: str = "psd_project_spark",
+    cpus: int | None = None,
+    shuffle_partitions: int | None = None,
+    driver_memory: str | None = None,
+) -> SparkSession:
+    """Build (or reuse) a local SparkSession with engine defaults.
+
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or 32. In local mode the
+    driver JVM is the only process, so ``driver_memory`` is the single
+    memory knob; it only takes effect if the JVM is not yet started.
+    It defaults to ``$SPARK_GRAFT_DRIVER_MEM``, else the smaller of 24g
+    and three quarters of physical RAM, so a small host never grants
+    the heap more memory than it has.
+    """
+    spark = spark_builder(
+        app_name, cpus, shuffle_partitions, driver_memory
+    ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return ensure_conf(spark)

@@ -221,10 +221,6 @@ def run_stream(
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-#: Backward-compatible internal alias (pre-dates the public name).
-_run = run_stream
-
-
 def write_epoch(
     df: DataFrame,
     out_dir: str,
@@ -1183,7 +1179,7 @@ def run_foreachbatch_versioned(
             affected_buckets=affected,
         )
 
-    _run(result, write_batch, ckpt, state_partitions)
+    run_stream(result, write_batch, ckpt, state_partitions)
 
 
 def run_foreachbatch_upsert(

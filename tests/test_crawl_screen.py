@@ -139,7 +139,7 @@ def test_stream_crawl_screen_multi_epoch(spark, tmp_path):
         _leak_report,
         _screen_batch_fn,
     )
-    from psd_project_spark.streaming.foreach_sink import _run
+    from psd_project_spark.streaming.foreach_sink import run_stream
     from pyspark.sql import functions as F
 
     shared = _words("dup", 15)
@@ -167,7 +167,7 @@ def test_stream_crawl_screen_multi_epoch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/f*")
     )
-    _run(arriving, _screen_batch_fn(path, present, out), ckpt,
+    run_stream(arriving, _screen_batch_fn(path, present, out), ckpt,
          state_partitions=None)
 
     got = (
@@ -256,7 +256,7 @@ def test_stream_ann_search_multi_epoch(spark, tmp_path):
         _probe_ann_index,
         _search_batch_fn,
     )
-    from psd_project_spark.streaming.foreach_sink import _run
+    from psd_project_spark.streaming.foreach_sink import run_stream
 
     e = _embeddings(spark, SF_DIR)
     path = _ensure_ann_index(SF_DIR, e)
@@ -279,7 +279,7 @@ def test_stream_ann_search_multi_epoch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/f*")
     )
-    _run(arriving, _search_batch_fn(e, path, out), ckpt,
+    run_stream(arriving, _search_batch_fn(e, path, out), ckpt,
          state_partitions=None)
     got = (
         spark.read.parquet(out)

@@ -401,6 +401,23 @@ def test_purge_journal_retires_behind_commit_horizon(spark, tmp_path):
     ).count() == 0
 
 
+def test_zonemap_ingest_leaves_no_stage_dir(spark, tmp_path):
+    """Each ingest epoch stages under ``<layout>_stage/epoch=N/`` and
+    renames its parts into the layout; once the zone map is merged the
+    stage dir is removed, as the Z-order ingest removes its own."""
+    from psd_project_spark.operators.zorder import (
+        _build_zonemap_base,
+        _zonemap_ingest_batch_fn,
+    )
+
+    path = str(tmp_path / "layout")
+    _build_zonemap_base(spark, _li_like(spark, range(5), lambda k: k), path)
+    fn = _zonemap_ingest_batch_fn(path)
+    fn(_li_like(spark, range(100, 110), lambda k: k % 100), 0)
+    fn(_li_like(spark, range(200, 210), lambda k: k % 100 + 20), 1)
+    assert not os.path.exists(path + "_stage")
+
+
 # --- bucket-count evolution (round-14 second half) ---------------------------
 
 def test_bucket_count_mismatch_fails_loudly(spark, tmp_path):

@@ -67,7 +67,7 @@ def test_stream_score_multi_epoch_union_equals_oneshot(spark, tmp_path):
     from psd_project_spark.operators.quality_classifier import (
         _score_store_batch_fn,
     )
-    from psd_project_spark.streaming.foreach_sink import _run
+    from psd_project_spark.streaming.foreach_sink import run_stream
 
     rows = [_feat_row(i, 0.5 + 0.1 * i, 1.0 if i % 2 else 0.0)
             for i in range(9)]
@@ -87,7 +87,7 @@ def test_stream_score_multi_epoch_union_equals_oneshot(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/f*")
     )
-    _run(arriving, _score_store_batch_fn(store, present, w, b, out), ckpt,
+    run_stream(arriving, _score_store_batch_fn(store, present, w, b, out), ckpt,
          state_partitions=None)
 
     assert (

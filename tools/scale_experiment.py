@@ -20,9 +20,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import time_query  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 #: Replication factor and destination are env-tunable (round-15,
@@ -328,6 +329,17 @@ def _prune_sinks(name: str, sf_dir: str) -> None:
             shutil.rmtree(p, ignore_errors=True)
 
 
+def _best(spark, qs, name: str, sf_dir: str) -> float:
+    """Min of two ``bench.time_query`` reps, each after
+    :func:`_prune_sinks`."""
+
+    def rep() -> float:
+        _prune_sinks(name, sf_dir)
+        return time_query(spark, qs[name], sf_dir)[0]
+
+    return min(rep() for _ in range(2))
+
+
 def build() -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -386,17 +398,7 @@ def run(names: list[str] | None = None) -> None:
     for name in names or QUERIES:
         row = {}
         for label, sf_dir in (("sf0.1", SRC), ("sf1x10", DST)):
-            best = None
-            for _ in range(2):
-                _prune_sinks(name, sf_dir)
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-                spark.catalog.clearCache()
-            row[label] = round(best, 3)
+            row[label] = round(_best(spark, qs, name, sf_dir), 3)
         row["ratio"] = round(row["sf1x10"] / row["sf0.1"], 2)
         result[name] = row
         print(f"{name:24s} {row['sf0.1']:7.2f}s {row['sf1x10']:8.2f}s "
@@ -434,16 +436,7 @@ def run_cores(names: list[str]) -> None:
     qs = queries()
     out = {}
     for name in names:
-        best = None
-        for _ in range(2):
-            _prune_sinks(name, DST)
-            t0 = time.perf_counter()
-            qs[name](spark, DST).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache()
+        best = _best(spark, qs, name, DST)
         out[name] = round(best, 3)
         print(f"{name:28s} {best:8.2f}s", file=sys.stderr, flush=True)
     print(json.dumps(out))
