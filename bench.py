@@ -176,13 +176,16 @@ def run(log_dir: str) -> None:
     timings: dict[str, float] = {}
     # wall-clock window of the run each ``timings`` entry keeps
     windows: dict[str, tuple[float, float]] = {}
+    # the SF2 pass keeps times only: its runs get no counters
+    timings_small: dict[str, float] = {}
 
-    def run_once(name: str, pass_no, sf_dir: str = SF_DIR,
-                 book: dict[str, float] = timings,
-                 book_windows: dict = windows) -> None:
+    def run_once(name: str, pass_no, sf_dir: str = SF_DIR) -> None:
         dt, window = time_query(spark, qs[name], sf_dir)
         dt = round(dt, 3)
-        keep_fastest(book, book_windows, name, dt, window)
+        if sf_dir == SF_DIR:
+            keep_fastest(timings, windows, name, dt, window)
+        else:
+            timings_small[name] = min(dt, timings_small.get(name, dt))
         print(f"[bench] pass{pass_no} {name}: {dt}s", file=sys.stderr, flush=True)
 
     for pass_no in range(2):
@@ -244,6 +247,38 @@ def run(log_dir: str) -> None:
             if not stalled(name):
                 break
     stall_suspects = sorted(n for n in names if stalled(n))
+
+    def parse_sf(d: str) -> float | str:
+        tail = d.rstrip("/").rsplit("sf", 1)[-1]
+        try:
+            return float(tail)
+        except ValueError:
+            return tail
+
+    sf_val = parse_sf(SF_DIR)
+    # Second-SF pass: headline queries only (bounded wall time), min of
+    # 2 runs, so the output carries a per-query scaling ratio.
+    sf2_val: float | str | None = None
+    if not only and SF2_DIR and os.path.isdir(SF2_DIR) and SF2_DIR != SF_DIR:
+        sf2_val = parse_sf(SF2_DIR)
+        for pass_no in range(2):
+            for name in [n for n in HEADLINE if n in qs]:
+                run_once(name, f"sf2-{pass_no}", SF2_DIR)
+    cpus = spark.sparkContext.defaultParallelism
+    spark.stop()  # closes the event log
+    # The counters come before any file is written: a log that fails to
+    # parse or collected nothing for a query ends the run here, leaving
+    # BENCH_BASELINE.json and BENCH_detail.json as they were.
+    t0 = time.perf_counter()
+    paths = eventlog.log_files(log_dir)
+    jobs = eventlog.parse(paths)
+    counters = query_counters(jobs, windows)
+    print(
+        f"[bench] event log: {len(jobs)} jobs, "
+        f"{sum(map(os.path.getsize, paths)) / 2**20:.1f} MB, "
+        f"parsed in {time.perf_counter() - t0:.2f}s",
+        file=sys.stderr, flush=True,
+    )
     # Refresh the baseline with this run's clean minima so it tracks
     # real improvements (never a suspect value) — but only when this
     # run's data dir matches the committed baseline's (or there is no
@@ -261,40 +296,6 @@ def run(log_dir: str) -> None:
                 fh, indent=1, sort_keys=True,
             )
     total = round(sum(timings.values()), 3)
-
-    def parse_sf(d: str) -> float | str:
-        tail = d.rstrip("/").rsplit("sf", 1)[-1]
-        try:
-            return float(tail)
-        except ValueError:
-            return tail
-
-    sf_val = parse_sf(SF_DIR)
-    # Second-SF pass: headline queries only (bounded wall time), min of
-    # 2 runs, so the output carries a per-query scaling ratio.
-    timings_small: dict[str, float] = {}
-    windows_small: dict[str, tuple[float, float]] = {}  # no counters kept
-    sf2_val: float | str | None = None
-    if not only and SF2_DIR and os.path.isdir(SF2_DIR) and SF2_DIR != SF_DIR:
-        sf2_val = parse_sf(SF2_DIR)
-        for pass_no in range(2):
-            for name in [n for n in HEADLINE if n in qs]:
-                run_once(
-                    name, f"sf2-{pass_no}", SF2_DIR,
-                    timings_small, windows_small,
-                )
-    cpus = spark.sparkContext.defaultParallelism
-    spark.stop()  # closes the event log
-    t0 = time.perf_counter()
-    paths = eventlog.log_files(log_dir)
-    jobs = eventlog.parse(paths)
-    counters = query_counters(jobs, windows)
-    print(
-        f"[bench] event log: {len(jobs)} jobs, "
-        f"{sum(map(os.path.getsize, paths)) / 2**20:.1f} MB, "
-        f"parsed in {time.perf_counter() - t0:.2f}s",
-        file=sys.stderr, flush=True,
-    )
     # The driver captures only the TAIL of stdout, so the final line must
     # stay short: headline + worst-5 queries inline, full per-query detail
     # in BENCH_detail.json next to this script.
