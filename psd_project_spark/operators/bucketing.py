@@ -385,7 +385,7 @@ def run_bucketed_fact_ingest(
 def stream_bucketed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming bucketed-fact ingestion end-to-end: lineitem arrives
     in 5 epochs (source split on ``l_orderkey % 5``,
-    ``maxFilesPerTrigger=1``), each epoch appends bucket-aligned into
+    read by ``epoch_stream``), each epoch appends bucket-aligned into
     the standing lineitem table, a mid-stream compaction fires when a
     bucket passes the query-scoped threshold of 3 files (epoch 0
     creates the table, so epochs ≥3 push past it — the lifecycle
@@ -419,6 +419,7 @@ def stream_bucketed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     from psd_project_spark.streaming.foreach_sink import (
+        epoch_stream,
         stage_stream_splits,
     )
 
@@ -433,11 +434,8 @@ def stream_bucketed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         stage_stream_splits(lineitem, F.col("l_orderkey") % 5, src, n=5)
         _orders_build.result()
-    arriving = (
-        spark.readStream.schema(spark.read.parquet(f"{src}/p0").schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    arriving = epoch_stream(
+        spark, src, spark.read.parquet(f"{src}/p0").schema
     )
     ctrl = f"{root}/ctrl"
     os.makedirs(ctrl, exist_ok=True)

@@ -762,7 +762,7 @@ def stream_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The arriving crawl is staged as a 3-file stream source split on
     ``doc_id % 3`` (the base/delta split, one step further) and
-    consumed with ``maxFilesPerTrigger=1``, so the registry row itself
+    read through ``epoch_stream``, so the registry row itself
     exercises REAL multi-epoch maintenance, not a single-batch
     degenerate. At 100 TB: per-epoch cost tracks the epoch's anchor
     volume (bucket-local writes, no corpus reads); compaction is the
@@ -778,6 +778,7 @@ def stream_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_partition_manifest,
     )
     from psd_project_spark.streaming.foreach_sink import (
+        epoch_stream,
         run_stream,
         stage_stream_splits,
     )
@@ -800,12 +801,7 @@ def stream_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if os.path.isdir(stage):
             shutil.rmtree(stage)  # a crashed prior maintenance
-        arriving = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
+        arriving = epoch_stream(spark, src, "doc_id long, text string")
         run_stream(
             arriving,
             _maintain_batch_fn(stage, path),
@@ -916,18 +912,15 @@ def stream_crawl_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from psd_project_spark.functions.caching import scratch_dir
     from psd_project_spark.operators.index_compact import list_partitions
     from psd_project_spark.streaming.foreach_sink import run_stream
-    from psd_project_spark.streaming.jobs import _stream_dir
+    from psd_project_spark.streaming.jobs import table_stream
 
     docs = spread_small(load_table(spark, sf_dir, "documents"), spark)
     path = _ensure_substr_index(spark, sf_dir, _anchor_positions(docs))
     present = list_partitions(path)
 
-    d = _stream_dir(sf_dir, "documents")
-    schema = spark.read.parquet(d).schema
     is_eval = F.col("doc_id") % 50 == 0
     arriving = (
-        spark.readStream.schema(schema)
-        .parquet(d)
+        table_stream(spark, sf_dir, "documents")
         .filter(is_eval)
         .select("doc_id", "text")
     )

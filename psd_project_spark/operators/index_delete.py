@@ -458,6 +458,7 @@ def stream_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_base_plus_delta,
     )
     from psd_project_spark.streaming.foreach_sink import (
+        epoch_stream,
         run_stream,
         stage_stream_splits,
     )
@@ -479,12 +480,7 @@ def stream_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("((doc_id - 3) % 21) DIV 7"),
             src,
         )
-        arriving = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
+        arriving = epoch_stream(spark, src, "doc_id long, text string")
         run_stream(
             arriving,
             _delete_batch_fn(path),

@@ -77,7 +77,7 @@ def stream_minhash_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero corpus exchanges)."""
     from psd_project_spark.operators.index_compact import list_partitions
     from psd_project_spark.streaming.foreach_sink import run_stream
-    from psd_project_spark.streaming.jobs import _stream_dir
+    from psd_project_spark.streaming.jobs import table_stream
 
     sigs = transient_cache(
         _with_signatures(load_table(spark, sf_dir, "documents"), spark)
@@ -91,11 +91,8 @@ def stream_minhash_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("doc_train"), F.col("_sh").alias("_sht")
     )
 
-    d = _stream_dir(sf_dir, "documents")
-    schema = spark.read.parquet(d).schema
     arriving = (
-        spark.readStream.schema(schema)
-        .parquet(d)
+        table_stream(spark, sf_dir, "documents")
         .filter(is_eval)
         .select("doc_id", "text")
     )

@@ -483,16 +483,14 @@ def stream_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from psd_project_spark.functions.caching import scratch_dir
     from psd_project_spark.operators.index_compact import list_partitions
     from psd_project_spark.streaming.foreach_sink import run_stream
-    from psd_project_spark.streaming.jobs import _stream_dir
+    from psd_project_spark.streaming.jobs import table_stream
 
     feat = transient_cache(_feature_frame(spark, sf_dir))
     w, b, _report = _model(sf_dir, feat)
     store = _ensure_feature_store(spark, sf_dir, feat)
     present = list_partitions(store)
 
-    d = _stream_dir(sf_dir, "documents")
-    schema = spark.read.parquet(d).schema
-    arriving = spark.readStream.schema(schema).parquet(d).select("doc_id")
+    arriving = table_stream(spark, sf_dir, "documents").select("doc_id")
     out = scratch_dir("psd_qcls_out_")
     ckpt = scratch_dir("psd_qcls_ckpt_")
     run_stream(arriving, _score_store_batch_fn(store, present, w, b, out),

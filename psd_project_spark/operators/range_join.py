@@ -159,6 +159,7 @@ def stream_range_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition pruning + epoch reassembly change nothing."""
     from psd_project_spark.functions.caching import scratch_dir
     from psd_project_spark.streaming.foreach_sink import (
+        epoch_stream,
         run_stream,
         stage_stream_splits,
         write_epoch,
@@ -202,12 +203,7 @@ def stream_range_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev, F.floor((F.col("us") - lo_us) / third), src
         )
         _corpus_build.result()
-    arriving = (
-        spark.readStream.schema("event_id long, us long")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
+    arriving = epoch_stream(spark, src, "event_id long, us long")
 
     def answer_epoch(df: DataFrame, batch_id: int) -> None:
         lo, hi = df.agg(F.min("us"), F.max("us")).collect()[0]

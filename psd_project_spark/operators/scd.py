@@ -247,8 +247,8 @@ def run_scd2_maintenance(arriving: DataFrame, out_dir: str, ckpt: str) -> None:
 
 def stream_scd2_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuously-maintained SCD2 interval table: the events stream
-    arrives in 3 epochs (source split on ``event_id % 3``, consumed
-    with ``maxFilesPerTrigger=1`` — REAL multi-epoch maintenance, not
+    arrives in 3 epochs (source split on ``event_id % 3``, read
+    through ``epoch_stream`` — REAL multi-epoch maintenance, not
     a single-batch degenerate, and since the split is id-based each
     epoch carries out-of-ts-order events, exercising the late-data
     path every epoch). The maintained table must equal the batch
@@ -259,6 +259,7 @@ def stream_scd2_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from psd_project_spark.functions.caching import scratch_dir
 
     from psd_project_spark.streaming.foreach_sink import (
+        epoch_stream,
         stage_stream_splits_bucketed,
     )
 
@@ -269,13 +270,8 @@ def stream_scd2_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage_stream_splits_bucketed(
         ev, F.col("event_id") % 3, src, bucket_by=["user_id"]
     )
-    arriving = (
-        spark.readStream.schema(
-            "user_id long, event_id long, ts timestamp, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    arriving = epoch_stream(
+        spark, src, "user_id long, event_id long, ts timestamp, value double"
     )
     run_scd2_maintenance(arriving, out_dir, ckpt)
     from psd_project_spark.streaming.foreach_sink import read_versioned
@@ -376,6 +372,7 @@ def scd2_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from psd_project_spark.functions.caching import scratch_dir
     from psd_project_spark.streaming.foreach_sink import (
         N_STATE_BUCKETS,
+        epoch_stream,
         read_versioned,
         run_foreachbatch_versioned,
         stage_stream_splits_bucketed,
@@ -390,10 +387,7 @@ def scd2_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def maintain(schema: str) -> None:
         run_foreachbatch_versioned(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src),
+            epoch_stream(spark, src, schema),
             out_dir,
             ckpt,
             scd2_evolving_merge,
@@ -500,6 +494,7 @@ def stream_scd2_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from psd_project_spark.functions.caching import scratch_dir
     from psd_project_spark.streaming.foreach_sink import (
         N_STATE_BUCKETS,
+        epoch_stream,
         read_versioned,
         run_foreachbatch_versioned,
         stage_stream_splits_bucketed,
@@ -515,12 +510,7 @@ def stream_scd2_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def arriving() -> DataFrame:
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
+        return epoch_stream(spark, src, schema)
 
     def maintain(result: DataFrame) -> None:
         run_foreachbatch_versioned(
@@ -1814,7 +1804,7 @@ ORDER BY user_id, valid_from, event_id
 def stream_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SERVING stream completing the point-in-time trio (history /
     maintenance / online lookups): probe rows arrive in 3 epochs
-    (source split on ``probe_id % 3``, ``maxFilesPerTrigger=1``) and
+    (source split on ``probe_id % 3``, read by ``epoch_stream``) and
     each micro-batch answers itself with an as-of lookup against the
     standing feature history — the online read path of a feature
     store ("what is this user's feature value right now / at this
@@ -1836,6 +1826,7 @@ def stream_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         transient_cache,
     )
     from psd_project_spark.streaming.foreach_sink import (
+        epoch_stream,
         run_stream,
         stage_stream_splits,
         write_epoch,
@@ -1850,11 +1841,8 @@ def stream_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = scratch_dir("psd_asof_")
     ckpt = scratch_dir("psd_asof_ckpt_")
     stage_stream_splits(probes, F.col("probe_id") % 3, src)
-    arriving = (
-        spark.readStream.schema("user_id long, probe_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    arriving = epoch_stream(
+        spark, src, "user_id long, probe_id long, ts timestamp"
     )
 
     def answer_epoch(df: DataFrame, batch_id: int) -> None:
@@ -1926,6 +1914,7 @@ def run_read_while_maintain(
     so the epoch/version structure is testable)."""
     from psd_project_spark.streaming.foreach_sink import (
         N_STATE_BUCKETS,
+        epoch_stream,
         read_versioned,
         run_stream,
         write_epoch,
@@ -1996,12 +1985,12 @@ def run_read_while_maintain(
             )
             try:
                 run_scd2_maintenance(
-                    spark.readStream.schema(
+                    epoch_stream(
+                        spark,
+                        src_f,
                         "user_id long, event_id long, ts timestamp, "
-                        "value double"
-                    )
-                    .option("recursiveFileLookup", "true")
-                    .parquet(src_f),
+                        "value double",
+                    ),
                     state_dir,
                     ckpt_m,
                 )
@@ -2017,11 +2006,11 @@ def run_read_while_maintain(
                 )
             try:
                 run_stream(
-                    spark.readStream.schema(
-                        "user_id long, probe_id long, ts timestamp"
-                    )
-                    .option("recursiveFileLookup", "true")
-                    .parquet(src_p),
+                    epoch_stream(
+                        spark,
+                        src_p,
+                        "user_id long, probe_id long, ts timestamp",
+                    ),
                     serve_epoch,
                     ckpt_s,
                     state_partitions=None,

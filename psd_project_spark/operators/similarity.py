@@ -1312,15 +1312,12 @@ def stream_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes + epoch-sink reassembly end-to-end."""
     from psd_project_spark.functions.caching import scratch_dir
     from psd_project_spark.streaming.foreach_sink import run_stream
-    from psd_project_spark.streaming.jobs import _stream_dir
+    from psd_project_spark.streaming.jobs import table_stream
 
     e = _embeddings(spark, sf_dir)
     path = _ensure_ann_index(sf_dir, e)
-    d = _stream_dir(sf_dir, "embeddings")
-    schema = spark.read.parquet(d).schema
     arriving = (
-        spark.readStream.schema(schema)
-        .parquet(d)
+        table_stream(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < N_QUERIES)
         .select("vec_id", F.expr(V.to_double_expr()).alias("_v"))
     )
@@ -1653,16 +1650,13 @@ def stream_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the index, never the corpus."""
     from psd_project_spark.functions.caching import scratch_dir
     from psd_project_spark.streaming.foreach_sink import run_stream
-    from psd_project_spark.streaming.jobs import _stream_dir
+    from psd_project_spark.streaming.jobs import table_stream
 
     e = _embeddings(spark, sf_dir)
     path = _ensure_ivf_index(spark, sf_dir, e)
     codebook, cb_ids = _read_ivf_quantizer(spark, path)
-    d = _stream_dir(sf_dir, "embeddings")
-    schema = spark.read.parquet(d).schema
     arriving = (
-        spark.readStream.schema(schema)
-        .parquet(d)
+        table_stream(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < N_QUERIES)
         .select("vec_id", F.expr(V.to_double_expr()).alias("_v"))
     )

@@ -431,6 +431,7 @@ def stream_zonemap_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     one small-manifest read."""
     from psd_project_spark.functions.caching import scratch_dir
     from psd_project_spark.streaming.foreach_sink import (
+        epoch_stream,
         run_stream,
         stage_stream_splits,
     )
@@ -447,12 +448,7 @@ def stream_zonemap_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # base phase: clustered write + full stats (the manifest
         # exists before any epoch extends it)
         _build_zonemap_base(spark, li.filter(~is_delta), path)
-        arriving = (
-            spark.readStream.schema(li.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
+        arriving = epoch_stream(spark, src, li.schema)
         run_stream(
             arriving,
             _zonemap_ingest_batch_fn(path),
@@ -878,6 +874,7 @@ def stream_zorder_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied to the 2-D layout)."""
     from psd_project_spark.functions.caching import scratch_dir
     from psd_project_spark.streaming.foreach_sink import (
+        epoch_stream,
         run_stream,
         stage_stream_splits,
     )
@@ -892,12 +889,7 @@ def stream_zorder_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             o.filter(is_delta), F.col("o_orderkey") % 3, src
         )
         _build_zcell_base(spark, o.filter(~is_delta), path)
-        arriving = (
-            spark.readStream.schema(o.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
+        arriving = epoch_stream(spark, src, o.schema)
         run_stream(
             arriving,
             _zorder_ingest_batch_fn(path),
@@ -1351,6 +1343,7 @@ def stream_zorder_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     resumes against the published manifest)."""
     from psd_project_spark.functions.caching import scratch_dir
     from psd_project_spark.streaming.foreach_sink import (
+        epoch_stream,
         run_stream,
         stage_stream_splits,
     )
@@ -1367,10 +1360,7 @@ def stream_zorder_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def ingest() -> None:
             run_stream(
-                spark.readStream.schema(o.schema)
-                .option("maxFilesPerTrigger", 1)
-                .option("recursiveFileLookup", "true")
-                .parquet(src),
+                epoch_stream(spark, src, o.schema),
                 _zorder_ingest_batch_fn(path),
                 ckpt,
                 state_partitions=None,
@@ -1470,6 +1460,7 @@ def stream_zonemap_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     journal is one small JSON consulted per epoch commit."""
     from psd_project_spark.functions.caching import scratch_dir
     from psd_project_spark.streaming.foreach_sink import (
+        epoch_stream,
         run_stream,
         stage_stream_splits,
     )
@@ -1486,10 +1477,7 @@ def stream_zonemap_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def ingest() -> None:
             run_stream(
-                spark.readStream.schema(li.schema)
-                .option("maxFilesPerTrigger", 1)
-                .option("recursiveFileLookup", "true")
-                .parquet(src),
+                epoch_stream(spark, src, li.schema),
                 _zonemap_ingest_batch_fn(path),
                 ckpt,
                 state_partitions=None,

@@ -83,7 +83,9 @@ def spark_builder(
     ``getOrCreate`` and then :func:`get_spark`, which picks that
     session up.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -110,7 +112,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a local SparkSession with engine defaults.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or 32. In local mode the
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS``, else the CPUs this
+    process may run on (``os.sched_getaffinity``), so a small host never
+    runs more Python workers than it has cores. In local mode the
     driver JVM is the only process, so ``driver_memory`` is the single
     memory knob; it only takes effect if the JVM is not yet started.
     It defaults to ``$SPARK_GRAFT_DRIVER_MEM``, else the smaller of 24g

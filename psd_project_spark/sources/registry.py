@@ -41,7 +41,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_conf(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
-        df = _normalize_events(df)
+        df = normalize_events(df)
     elif name == "embeddings":
         # Engine contract: embedding is array<float>. The driver has
         # re-generated testdata with changed physical types before
@@ -55,7 +55,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _normalize_events(df: DataFrame) -> DataFrame:
+def normalize_events(df: DataFrame) -> DataFrame:
     """Expose ``ts`` (µs TimestampType) + ``ts_ns`` (µs-aligned ns long)
     regardless of how the driver's parquet stores the column:
 

@@ -32,6 +32,11 @@ patterns, reimplemented here storage-free on plain parquet:
   plan shape — broadcast-free keyed dedup of (state ∪ delta) — is
   identical.
 
+Multi-epoch inputs are staged by ``stage_stream_splits`` (one
+single-file ``p{i}`` dir per epoch) and read back ONLY through
+``epoch_stream``, which owns the reader options that turn each staged
+split into one micro-batch.
+
 The reference has no recovery or upsert story at all: a crash
 re-prints every alert (StreamingJob.java:439 print sink).
 """
@@ -40,18 +45,20 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from psd_project_spark import durable
-from psd_project_spark.streaming.jobs import STATE_PARTITIONS
+from psd_project_spark.streaming.jobs import (
+    STATE_PARTITIONS,
+    state_partition_scope,
+)
 
 
 def stage_stream_splits(df: DataFrame, part_col, src: str, n: int = 3) -> str:
-    """Stage ``df`` as ``n`` single-file parquet subdirs of ``src``,
-    one per value of ``part_col`` (must take values 0..n-1), so a
-    file-stream source with ``maxFilesPerTrigger=1`` +
-    ``recursiveFileLookup`` consumes them as n REAL epochs.
+    """Stage ``df`` as ``n`` single-file parquet subdirs ``p{i}`` of
+    ``src``, one per value of ``part_col`` (must take values 0..n-1),
+    so :func:`epoch_stream` consumes them as n REAL epochs.
 
     Explicit filtered writes, NOT ``repartition(n, part_col)``: hash
     partitioning maps small residue domains onto colliding partitions
@@ -67,6 +74,20 @@ def stage_stream_splits(df: DataFrame, part_col, src: str, n: int = 3) -> str:
             .parquet(f"{src}/p{i}")
         )
     return src
+
+
+def epoch_stream(spark: SparkSession, src: str, schema) -> DataFrame:
+    """The one reader of the staged-split layout: a file-stream source
+    over ``src`` that takes one file per trigger and looks through the
+    ``p{i}`` subdirs, so each staged split is one micro-batch (the
+    one-split-per-batch assumption :func:`staged_affected_buckets`
+    reads the offset log under)."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+    )
 
 
 #: Per-split sidecar naming the split's affected-bucket set under the
@@ -200,15 +221,11 @@ def run_stream(
     result: DataFrame, batch_fn, ckpt: str, state_partitions
 ) -> None:
     """Run a foreachBatch callable over ``result`` to completion
-    (``availableNow`` trigger) with the state-partition override
-    scoped to the run — the PUBLIC runner for custom epoch callables
+    (``availableNow`` trigger) inside ``jobs.state_partition_scope``
+    — the PUBLIC runner for custom epoch callables
     (the streaming crawl screen / ANN search / quality scorer), so
     every foreachBatch query shares one start/await/restore path."""
-    spark = result.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with state_partition_scope(result.sparkSession, state_partitions):
         q = (
             result.writeStream.foreachBatch(batch_fn)
             .option("checkpointLocation", ckpt)
@@ -217,8 +234,6 @@ def run_stream(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def write_epoch(
@@ -1282,6 +1297,19 @@ WHERE rn = 1
 """
 
 
+def _upsert_epochs(spark, src: str, out_dir: str, ckpt: str, schema) -> None:
+    """Upsert the staged splits of ``src`` not yet consumed by ``ckpt``
+    into ``out_dir``, keep-latest per user on (ts, event_id) — one
+    phase of the schema-evolution upserts below."""
+    run_foreachbatch_upsert(
+        epoch_stream(spark, src, schema),
+        out_dir,
+        ckpt,
+        key_cols=["user_id"],
+        order_cols=["ts", "event_id"],
+    )
+
+
 def stream_upsert_evolving(spark, sf_dir: str) -> DataFrame:
     """SCHEMA EVOLUTION through the keyed upsert — the MERGE sink's
     evolution story extended to the runner's most common consumer
@@ -1305,18 +1333,6 @@ def stream_upsert_evolving(spark, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     narrow = "user_id long, event_id long, ts timestamp, value double"
 
-    def maintain(schema: str) -> None:
-        run_foreachbatch_upsert(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src),
-            out_dir,
-            ckpt,
-            key_cols=["user_id"],
-            order_cols=["ts", "event_id"],
-        )
-
     stage_stream_splits_bucketed(
         ev.filter(F.col("event_id") % 3 < 2).select(
             "user_id", "event_id", "ts", "value"
@@ -1326,7 +1342,7 @@ def stream_upsert_evolving(spark, sf_dir: str) -> DataFrame:
         bucket_by=["user_id"],
         n=2,
     )
-    maintain(narrow)
+    _upsert_epochs(spark, src, out_dir, ckpt, narrow)
     write_split_with_buckets(
         ev.filter(F.col("event_id") % 3 == 2).select(
             "user_id", "event_id", "ts", "value",
@@ -1336,7 +1352,7 @@ def stream_upsert_evolving(spark, sf_dir: str) -> DataFrame:
         ["user_id"],
         N_STATE_BUCKETS,
     )
-    maintain(narrow + ", etype string")
+    _upsert_epochs(spark, src, out_dir, ckpt, narrow + ", etype string")
     return current_upsert_table(spark, out_dir).select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
@@ -1384,18 +1400,6 @@ def stream_upsert_widening(spark, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     cols = "user_id long, event_id long, ts timestamp, value double"
 
-    def maintain(schema: str) -> None:
-        run_foreachbatch_upsert(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src),
-            out_dir,
-            ckpt,
-            key_cols=["user_id"],
-            order_cols=["ts", "event_id"],
-        )
-
     stage_stream_splits_bucketed(
         ev.filter(F.col("event_id") % 3 < 2).select(
             "user_id", "event_id", "ts", "value",
@@ -1406,7 +1410,7 @@ def stream_upsert_widening(spark, sf_dir: str) -> DataFrame:
         bucket_by=["user_id"],
         n=2,
     )
-    maintain(cols + ", qty int")
+    _upsert_epochs(spark, src, out_dir, ckpt, cols + ", qty int")
     write_split_with_buckets(
         ev.filter(F.col("event_id") % 3 == 2).select(
             "user_id", "event_id", "ts", "value",
@@ -1416,7 +1420,7 @@ def stream_upsert_widening(spark, sf_dir: str) -> DataFrame:
         ["user_id"],
         N_STATE_BUCKETS,
     )
-    maintain(cols + ", qty long")
+    _upsert_epochs(spark, src, out_dir, ckpt, cols + ", qty long")
     return current_upsert_table(spark, out_dir).select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
@@ -1471,18 +1475,6 @@ def stream_upsert_rename(spark, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     base = "user_id long, event_id long, ts timestamp, value double"
 
-    def maintain(schema: str) -> None:
-        run_foreachbatch_upsert(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src),
-            out_dir,
-            ckpt,
-            key_cols=["user_id"],
-            order_cols=["ts", "event_id"],
-        )
-
     stage_stream_splits_bucketed(
         ev.filter(F.col("event_id") % 3 < 2).select(
             "user_id", "event_id", "ts", "value",
@@ -1494,7 +1486,9 @@ def stream_upsert_rename(spark, sf_dir: str) -> DataFrame:
         bucket_by=["user_id"],
         n=2,
     )
-    maintain(base + ", qty int, extra string")
+    _upsert_epochs(
+        spark, src, out_dir, ckpt, base + ", qty int, extra string"
+    )
     # MID-STREAM rename: a dotted metadata version on the standing
     # major — the checkpoint's next batch id stays unconsumed
     rename_versioned_column(out_dir, None, {"qty": "quantity"})
@@ -1512,7 +1506,9 @@ def stream_upsert_rename(spark, sf_dir: str) -> DataFrame:
     )
     # the SAME checkpoint continues: epoch 2 arrives under the NEW
     # name and must NOT be skipped as a replay of the rename's version
-    maintain(base + ", quantity int, extra string")
+    _upsert_epochs(
+        spark, src, out_dir, ckpt, base + ", quantity int, extra string"
+    )
     drop_versioned_column(out_dir, None, "extra")
     served = current_upsert_table(spark, out_dir)
     if "extra" in served.columns or "qty" in served.columns:

@@ -15,10 +15,18 @@ count-window → measures → stats join → alert sink
   time windows over ``events.ts`` (built-in streaming DSL; the
   reference has no event time at all, SURVEY.md §2.3).
 
+Every registry stream over a whole test table gets its source from
+``table_stream`` (the table's ``_stream_dir`` symlink dir, read with its
+parquet footer's schema); ``stream_events`` adds the batch registry's
+``normalize_events``. Streams over staged epoch splits read them through
+``streaming/foreach_sink.epoch_stream``.
+
 Each ``queries()`` callable runs its stream to completion into an
 in-memory sink and returns the result as a batch DataFrame, so the
 correctness driver exercises the real streaming engine (state store,
 micro-batch planner) through the same oracle gate as batch queries.
+``state_partition_scope`` pins the state-partition count around every
+run, for this memory-sink runner and the foreachBatch runner alike.
 
 Scale notes: the file source becomes Kafka in production; the memory
 sink becomes parquet/Delta. State shuffles once per micro-batch on the
@@ -30,16 +38,10 @@ from __future__ import annotations
 
 import itertools
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from psd_project_spark.config import DEFAULT_CONFIG
 from psd_project_spark.functions.caching import cache_dir
@@ -50,24 +52,12 @@ from psd_project_spark.operators.risk import (
     alerts_from_measures,
 )
 from psd_project_spark.session import ensure_conf
+from psd_project_spark.sources.registry import normalize_events
 from psd_project_spark.streaming.count_window import (
     streaming_count_window_measures,
 )
 
 _sink_ids = itertools.count()
-
-#: events.parquet schema for the file-stream source, minus ``ts`` whose
-#: physical type depends on the driver's writer (TIMESTAMP(NANOS) → raw
-#: ns long via spark.sql.legacy.parquet.nanosAsLong; TIMESTAMP(MICROS)
-#: → native timestamp). ``stream_events`` sniffs the actual type from
-#: the parquet footer (one cheap batch-read of metadata) so the declared
-#: stream schema always matches the files.
-_EVENTS_FIELDS_TAIL = [
-    StructField("user_id", LongType()),
-    StructField("event_type", StringType()),
-    StructField("value", DoubleType()),
-    StructField("props", StringType()),
-]
 
 
 def _stream_dir(sf_dir: str, table: str) -> str:
@@ -81,33 +71,21 @@ def _stream_dir(sf_dir: str, table: str) -> str:
     return d
 
 
-def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-stream source over events.parquet (S1 analog).
-
-    ``ts``/``ts_ns`` normalization mirrors
-    ``sources/registry._normalize_events`` for both parquet encodings.
-    """
+def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-stream source over one test table, read with the schema of
+    its own parquet footer (one cheap batch read of metadata), so the
+    declared stream schema always matches the files. The one reader of
+    the ``_stream_dir`` layout."""
     ensure_conf(spark)
-    d = _stream_dir(sf_dir, "events")
-    ts_type = spark.read.parquet(d).schema["ts"].dataType
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", ts_type),
-            *_EVENTS_FIELDS_TAIL,
-        ]
-    )
-    raw = spark.readStream.schema(schema).parquet(d)
-    if ts_type.typeName() == "long":
-        return (
-            raw.withColumnRenamed("ts", "_raw_ns")
-            .withColumn("ts", F.expr("timestamp_micros(_raw_ns DIV 1000)"))
-            .withColumn("ts_ns", F.expr("(_raw_ns DIV 1000) * 1000"))
-            .drop("_raw_ns")
-        )
-    return raw.withColumn("ts", F.col("ts").cast("timestamp")).withColumn(
-        "ts_ns", F.unix_micros(F.col("ts")) * F.lit(1000)
-    )
+    d = _stream_dir(sf_dir, table)
+    return spark.readStream.schema(spark.read.parquet(d).schema).parquet(d)
+
+
+def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-stream source over events.parquet (S1 analog), with the
+    batch registry's ``ts``/``ts_ns`` normalization for both parquet
+    encodings."""
+    return normalize_events(table_stream(spark, sf_dir, "events"))
 
 
 #: State-partition count for stateful streaming queries. A stateful
@@ -130,21 +108,31 @@ STATE_PARTITIONS = 8
 INGEST_DEDUP_HORIZON = "1 hour"
 
 
+@contextmanager
+def state_partition_scope(spark: SparkSession, state_partitions: int | None):
+    """Scope ``spark.sql.shuffle.partitions`` to ``state_partitions``
+    (``None``: leave it alone) for one stream run. The value is frozen
+    into the plan when the query starts, so set it before ``start()``;
+    it is restored however the run ends."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    if state_partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def run_stream_to_memory(
     result: DataFrame,
     mode: str = "append",
     state_partitions: int | None = STATE_PARTITIONS,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion; return the sink table.
-
-    ``spark.sql.shuffle.partitions`` is overridden around ``start()``
-    (the value is captured at stream planning) and restored after."""
+    The run is wrapped in :func:`state_partition_scope`."""
     spark = result.sparkSession
     name = f"psd_sink_{next(_sink_ids)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with state_partition_scope(spark, state_partitions):
         query = (
             result.writeStream.format("memory")
             .queryName(name)
@@ -158,8 +146,6 @@ def run_stream_to_memory(
         # run's full history, lastProgress the final micro-batch
         global LAST_QUERY_PROGRESS
         LAST_QUERY_PROGRESS = [p.json for p in query.recentProgress]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
@@ -475,11 +461,8 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("doc_train"), F.col("_sh").alias("_sht")
     )
     # stream side: the arriving split
-    d = _stream_dir(sf_dir, "documents")
-    schema = spark.read.parquet(d).schema
     arriving = (
-        spark.readStream.schema(schema)
-        .parquet(d)
+        table_stream(spark, sf_dir, "documents")
         .filter(is_eval)
         # ingest-time watermark: bounds the pair-dedup state below.
         # Processing time is the right clock here — docs have no event

@@ -341,20 +341,18 @@ def test_stage_stream_splits_yields_real_epochs(spark, tmp_path):
         .collect()
     )
     assert 0 in part_sizes or len(part_sizes) < 3
-    # consumed with maxFilesPerTrigger=1 → 3 non-empty micro-batches
+    # read back through epoch_stream → 3 non-empty micro-batches
     seen = []
 
     def count_batch(bdf, bid):
         seen.append(bdf.count())
 
-    from psd_project_spark.streaming.foreach_sink import run_stream
-
-    arriving = (
-        spark.readStream.schema("id long")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    from psd_project_spark.streaming.foreach_sink import (
+        epoch_stream,
+        run_stream,
     )
+
+    arriving = epoch_stream(spark, src, "id long")
     run_stream(arriving, count_batch, str(tmp_path / "ckpt"), None)
     assert sorted(seen) == [30, 30, 30]
 

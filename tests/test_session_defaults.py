@@ -1,5 +1,5 @@
-"""get_spark's default driver memory (no Spark needed: the session
-builder is replaced by a recorder)."""
+"""get_spark's default driver memory and CPU count (no Spark needed:
+the session builder is replaced by a recorder)."""
 
 from __future__ import annotations
 
@@ -11,11 +11,12 @@ from psd_project_spark import session
 _UNITS = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
 
 
-def _driver_memory(monkeypatch) -> str:
+def _recorded_conf(monkeypatch, **kwargs) -> dict[str, str]:
     conf: dict[str, str] = {}
 
     class _Builder:
-        def master(self, _):
+        def master(self, url):
+            conf["master"] = url
             return self
 
         def appName(self, _):
@@ -33,8 +34,12 @@ def _driver_memory(monkeypatch) -> str:
         session, "SparkSession", types.SimpleNamespace(builder=_Builder())
     )
     monkeypatch.setattr(session, "ensure_conf", lambda s: s)
-    session.get_spark(cpus=1)
-    return conf["spark.driver.memory"]
+    session.get_spark(**kwargs)
+    return conf
+
+
+def _driver_memory(monkeypatch) -> str:
+    return _recorded_conf(monkeypatch, cpus=1)["spark.driver.memory"]
 
 
 def _bytes(size: str) -> int:
@@ -59,3 +64,13 @@ def test_default_driver_memory_fits_physical_ram(monkeypatch):
     assert _bytes(_driver_memory(monkeypatch)) == 24 * 2**30
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")  # still the override
     assert _driver_memory(monkeypatch) == "1g"
+
+
+def test_default_cpus_follow_the_process_affinity(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda _pid: {0, 1, 2})
+    conf = _recorded_conf(monkeypatch)
+    assert conf["master"] == "local[3]"
+    assert conf["spark.sql.shuffle.partitions"] == "3"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")  # still the override
+    assert _recorded_conf(monkeypatch)["master"] == "local[5]"

@@ -101,6 +101,37 @@ def test_handler_sorts_a_keys_whole_micro_batch():
     assert got["seq"].tolist() == list(range(30, 61))
 
 
+def test_stream_sources_have_one_reader_each():
+    """Source scan, no Spark: a registry stream gets its source only
+    through jobs.table_stream (a whole test table) or
+    foreach_sink.epoch_stream (staged epoch splits), so the layouts
+    and their reader options live in one place each."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "psd_project_spark"
+    readstream, max_files, stream_dir = set(), set(), set()
+    for path in pkg.rglob("*.py"):
+        rel = path.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr == "readStream":
+                readstream.add(rel)
+            elif isinstance(node, ast.Constant):
+                if node.value == "maxFilesPerTrigger":
+                    max_files.add(rel)
+            elif isinstance(node, ast.Call):
+                f = node.func
+                if getattr(f, "attr", getattr(f, "id", None)) == "_stream_dir":
+                    stream_dir.add(rel)
+    assert readstream <= {
+        "streaming/jobs.py",
+        "streaming/foreach_sink.py",
+        "sources/samples_csv.py",
+    }, readstream
+    assert max_files <= {"streaming/foreach_sink.py"}, max_files
+    assert stream_dir <= {"streaming/jobs.py"}, stream_dir
+
+
 def test_csv_source_drops_malformed(spark, tmp_path):
     from psd_project_spark.sources.samples_csv import (
         count_malformed,
