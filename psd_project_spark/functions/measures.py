@@ -26,8 +26,12 @@ rank window + one aggregation computes it in O(n log n) with a single
 shuffle. The same rank window also yields the median / q10 / tail
 order statistics, so :func:`grouped_measures` costs exactly one shuffle
 (hash-partition by group + in-partition sort) regardless of group size
-— no ``collect_list`` materialization, no driver-side state, skew
-handled by AQE. This is the plan that survives 100 TB groups.
+— no ``collect_list`` materialization, no driver-side state. This is
+the plan that survives 100 TB groups. The shuffle's partition count is
+explicit (:func:`kernel_partitions`): AQE never coalesces such a
+repartition, so the CPU-bound rank window runs one task per core,
+where AQE would fold a small input into one or two tasks. A hot group
+still lands in one task: a rank window cannot split a group.
 
 Every sum feeding a measure is an exact decimal sum
 (:mod:`psd_project_spark.functions.exact`), and outputs are rounded to
@@ -44,7 +48,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from psd_project_spark.config import DEFAULT_CONFIG, MEASURES
@@ -52,6 +56,20 @@ from psd_project_spark.functions.exact import DEC, exact_sum, exact_sum_sql, rou
 
 #: Output measure column names, in reference emission order.
 MEASURE_COLS: tuple[str, ...] = tuple(MEASURES)
+
+
+def kernel_partitions(spark: SparkSession) -> int:
+    """Partition count of a CPU-bound kernel's explicit-count shuffle.
+
+    ``spark.sql.shuffle.partitions`` (the cores, in a :func:`get_spark`
+    session), capped at the cores Spark schedules on: a session left
+    at Spark's default of 200 would otherwise run 200 near-empty tasks
+    per kernel, and no coalescing would merge them.
+    """
+    return min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
 
 
 def grouped_measures(
@@ -71,9 +89,12 @@ def grouped_measures(
     wp = Window.partitionBy(*groups)
     wr = wp.orderBy("_v")
 
+    # An explicit-count repartition (see the module docstring); the
+    # window and the aggregate below both reuse its partitioning.
     ranked = (
         df.select(*groups, F.col(value_col).cast("double").alias("_v"))
         .filter(v.isNotNull())
+        .repartition(kernel_partitions(df.sparkSession), *groups)
         .withColumn("_rn", F.row_number().over(wr))
         .withColumn("_n", F.count(F.lit(1)).over(wp))
         .withColumn("_gmean", exact_sum(v, over=wp) / F.col("_n"))

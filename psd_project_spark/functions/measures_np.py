@@ -13,18 +13,26 @@ batch, stream and oracle round alike.
 HOF form) evaluates ~150 interpreted lambda element-ops per window —
 perfect as a semantics oracle and fine at test SF, but at millions of
 windows the interpreted fold dominates. :func:`windowed_measures_np`
-computes the same thing through ``applyInPandas`` and shares a single
-shuffle shape with the HOF path: hash-partition by key, sort by seq.
-The streaming operator (``streaming/count_window.py``) feeds the same
-kernel from its per-key ring.
+computes the same thing through ``applyInPandas`` over one shuffle:
+every key (or ``(key, chunk)``, below) is hashed into one of 64 coarse
+buckets, the rows are hash-partitioned by bucket into
+:func:`~psd_project_spark.functions.measures.kernel_partitions`
+partitions (at most 64), and the kernel loops over the keys of each
+bucket, sorting each by seq. The partition count is explicit because
+the kernel is CPU-bound on a small input: AQE would coalesce an
+implicit shuffle into one or two tasks and leave the other cores idle,
+but it never merges an explicit-count repartition. The streaming
+operator (``streaming/count_window.py``) feeds the same kernel from its
+per-key ring.
 
 For keys whose history is far larger than one task should hold (the
 reference's single global series: 1M rows, SURVEY.md §6), pass
 ``chunk_rows``: each key is split into fixed-size seq ranges and the
 last ``window_size − 1`` rows of every range are duplicated into the
 next one (count windows are translation-invariant, so an overlapped
-chunk computes its windows exactly). That turns one sequential
-per-key task into ``rows/chunk_rows`` independent tasks — the
+chunk computes its windows exactly). The ``(key, chunk)`` pairs then
+take the keys' place in the buckets, which turns one sequential
+per-key task into ``rows/chunk_rows`` independent groups — the
 count-window analog of range-partitioned time windows, and the reason
 this path scales to 100 TB of ordered history per key while the
 reference is pinned to parallelism 1 (StreamingJob.java:431).
@@ -42,6 +50,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from psd_project_spark.config import DEFAULT_CONFIG, MEASURES
+from psd_project_spark.functions.measures import kernel_partitions
+
+#: coarse hash buckets the numpy kernel's inner groups are folded into
+_BUCKETS = 64
 
 
 def compute_measures_sorted(xs: list[float]) -> dict[str, float]:
@@ -155,6 +167,7 @@ def windowed_measures_np(
         seqd = df.withColumn("seq", F.row_number().over(worder)).select(
             *keys, "seq", F.col(value_col).cast("double").alias("_v")
         )
+    inner = keys
     if chunk_rows:
         carry = window_size - 1
         if chunk_rows < carry:
@@ -167,22 +180,23 @@ def windowed_measures_np(
         spill = seqd.filter(
             F.expr(f"(seq - 1) % {chunk_rows}") >= chunk_rows - carry
         ).withColumn("_chunk", F.expr(f"(seq - 1) DIV {chunk_rows} + 1"))
-        grouped = main.unionByName(spill)
-        group_cols = [*keys, "_chunk"]
-    else:
-        # High-cardinality keys: one applyInPandas GROUP per key pays
-        # the per-group Python invocation price |keys| times (~0.4 ms
-        # each — 10k users at sf0.1 made this the slowest registry
-        # query at ~5 s while the numpy math itself is <0.5 s; the
-        # same pitfall class as nearest_view_lag's round-2 fix).
-        # Group by a COARSE hash bucket of the key instead — each key
-        # still lands wholly in one group (bucket is a function of the
-        # key), and the kernel loops per key inside the bucket: ~64
-        # Python invocations total, semantics untouched.
-        grouped = seqd.withColumn(
-            "_chunk", F.pmod(F.xxhash64(*keys), F.lit(64)).cast("int")
-        )
-        group_cols = ["_chunk"]
+        seqd = main.unionByName(spill)
+        inner = [*keys, "_chunk"]
+    # One applyInPandas group per inner group would pay the per-group
+    # Python invocation price |groups| times (~0.4 ms each — 10k users
+    # at sf0.1 made this the slowest registry query at ~5 s while the
+    # numpy math itself is <0.5 s). Group by a COARSE hash bucket of
+    # the inner group instead: each group still lands wholly in one
+    # bucket, and the kernel loops per group inside it — at most
+    # _BUCKETS Python invocations, semantics untouched.
+    #
+    # The explicit-count repartition (see the module docstring) also
+    # satisfies the groupBy, so it is the only shuffle; more partitions
+    # than buckets would only add empty tasks.
+    n_parts = min(kernel_partitions(df.sparkSession), _BUCKETS)
+    grouped = seqd.withColumn(
+        "_bucket", F.pmod(F.xxhash64(*inner), F.lit(_BUCKETS)).cast("int")
+    ).repartition(n_parts, "_bucket")
 
     key_fields = [df.schema[k] for k in keys]
     schema = StructType(
@@ -191,7 +205,7 @@ def windowed_measures_np(
         + [StructField(m, DoubleType()) for m in MEASURES]
     )
 
-    def _one_key(g: "pd.DataFrame"):
+    def _one_group(g: "pd.DataFrame"):
         g = g.sort_values("seq", kind="mergesort")
         v = g["_v"].to_numpy(np.float64)
         if len(v) < window_size:
@@ -209,20 +223,18 @@ def windowed_measures_np(
         return pd.DataFrame(out)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        # chunked mode: the group IS one (key, chunk) → single pass;
-        # bucketed mode: loop per key inside the coarse group
         # dropna=False: Spark's groupBy keeps NULL keys as a group, so
         # the pandas regroup must too — pandas' default dropna=True
         # would silently discard NULL-keyed rows and diverge from the
         # HOF path / oracle.
         parts = [
             p
-            for _, g in pdf.groupby(keys, sort=False, dropna=False)
-            if (p := _one_key(g)) is not None
+            for _, g in pdf.groupby(inner, sort=False, dropna=False)
+            if (p := _one_group(g)) is not None
         ]
         if not parts:
             return pd.DataFrame({f.name: [] for f in schema.fields})
         return pd.concat(parts, ignore_index=True)
 
-    raw = grouped.groupBy(*group_cols).applyInPandas(kernel, schema)
+    raw = grouped.groupBy("_bucket").applyInPandas(kernel, schema)
     return round_measures(raw, digits)

@@ -187,3 +187,37 @@ def test_numpy_window_path_keeps_null_keys(spark):
             key=_key,
         )
         assert got == ref, chunk_rows
+
+
+def test_results_do_not_depend_on_the_shuffle_partition_count(spark):
+    """Both replay kernels repartition to an explicit count taken from
+    ``spark.sql.shuffle.partitions``; the rows they return must not
+    depend on it."""
+    from psd_project_spark.functions.measures_np import windowed_measures_np
+    from psd_project_spark.sources.registry import load_table
+    from tests.conftest import SF_DIR
+
+    events = load_table(spark, SF_DIR, "events")
+    kw = dict(
+        key_cols=["user_id"], order_col="event_id", value_col="value",
+        window_size=30, digits=9,
+    )
+    queries = {
+        "np": lambda: windowed_measures_np(events, **kw),
+        "np_chunked": lambda: windowed_measures_np(events, chunk_rows=40, **kw),
+        "grouped": lambda: grouped_measures(events, ["user_id"], "value", digits=9),
+    }
+    conf = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(conf)
+    got: dict[str, dict[str, list]] = {name: {} for name in queries}
+    try:
+        for parts in ("1", "3", "8"):
+            spark.conf.set(conf, parts)
+            for name, query in queries.items():
+                got[name][parts] = sorted((tuple(r) for r in query().collect()), key=repr)
+    finally:
+        spark.conf.set(conf, saved)
+    for name, by_parts in got.items():
+        assert by_parts["1"], name
+        assert by_parts["3"] == by_parts["1"], name
+        assert by_parts["8"] == by_parts["1"], name

@@ -4,6 +4,8 @@ codegen) for a representative registry query — the properties that make
 the difference between a plan that survives a 1000-executor scale-up
 and one that silently degrades to a full-scan shuffle-fest."""
 
+import re
+
 from pyspark.sql import functions as F
 
 from psd_project_spark.plans import (
@@ -431,3 +433,54 @@ def test_mapped_state_read_is_one_scan_one_projection(spark, tmp_path):
     # dropped column's bytes stay on disk but never enter the plan
     assert "qty" in plan and "extra" not in plan, plan
     assert [f.name for f in served.schema.fields] == ["k", "quantity"]
+
+
+def test_replay_kernels_shuffle_once_to_an_explicit_count(spark):
+    """The replay pass's two CPU-bound stages each sit on exactly one
+    REPARTITION_BY_NUM exchange with ``spark.sql.shuffle.partitions``
+    partitions, capped at the session's cores: AQE coalesces an
+    implicit shuffle of their small input into one or two tasks, and
+    never an explicit-count one — so the cap is what keeps a session
+    left at Spark's default of 200 from running 200 tiny tasks. A
+    second exchange (a kernel grouped on other columns than it is
+    partitioned by, or an aggregate that does not reuse the window's
+    partitioning) fails the count."""
+    from psd_project_spark.functions.measures import grouped_measures
+    from psd_project_spark.functions.measures_np import _BUCKETS, windowed_measures_np
+
+    def only_exchange(df, op: str) -> str:
+        plan = executed_plan(df)
+        assert op in plan, plan
+        exchanges = [
+            line.lstrip(" :+-") for line in plan.splitlines()
+            if line.lstrip(" :+-").startswith("Exchange")
+        ]
+        assert len(exchanges) == 1, plan
+        return re.sub(r"#\d+L?", "", exchanges[0])
+
+    events = load_table(spark, SF_DIR, "events")
+    conf = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(conf)
+    cores = spark.sparkContext.defaultParallelism
+    try:
+        for parts in (int(saved), 200):
+            spark.conf.set(conf, str(parts))
+            n = min(parts, cores)
+            for chunk_rows in (None, 40):
+                df = windowed_measures_np(
+                    events, ["user_id"], "event_id", "value", window_size=30,
+                    chunk_rows=chunk_rows, seq_precomputed=True,
+                )
+                ex = only_exchange(df, "FlatMapGroupsInPandas")
+                assert ex.startswith(
+                    f"Exchange hashpartitioning(_bucket, {min(n, _BUCKETS)}), "
+                    "REPARTITION_BY_NUM,"
+                ), ex
+
+            df = grouped_measures(events, ["event_type", "user_id"], "value", digits=9)
+            ex = only_exchange(df, "Window")
+            assert ex.startswith(
+                f"Exchange hashpartitioning(event_type, user_id, {n}), REPARTITION_BY_NUM,"
+            ), ex
+    finally:
+        spark.conf.set(conf, saved)
